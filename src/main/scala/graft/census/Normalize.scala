@@ -46,14 +46,27 @@ object Normalize {
   /** R5 (`Test_census_tract.py:171-172`): NULL-fill expected-but-absent
     * columns, then R6 (`:174-175`): expected columns first in declared
     * order, extras appended in their original order. */
-  def conformSchema(df: DataFrame, expected: Seq[String]): DataFrame = {
-    val present = df.columns.toSet
-    val filled = expected.filterNot(present.contains).foldLeft(df) {
-      (d, c) => d.withColumn(c, lit(null).cast(StringType))
-    }
-    val extras = df.columns.filterNot(expected.contains)
-    filled.select((expected ++ extras).map(col).toIndexedSeq: _*)
+  def conformSchema(df: DataFrame, expected: Seq[String]): DataFrame =
+    df.select(conformOrder(df.columns.toSeq, expected).map {
+      case (c, Some(_)) => ref(c)
+      case (c, None) => nullString.as(c)
+    }: _*)
+
+  /** The R5/R6 column order as (output name, present input column): the
+    * expected columns in declared order (`None` = absent, NULL-filled),
+    * then the extras in their original order. */
+  private def conformOrder(present: Seq[String],
+      expected: Seq[String]): Seq[(String, Option[String])] = {
+    val have = present.toSet
+    expected.map(c => c -> Some(c).filter(have)) ++
+      present.filterNot(expected.contains).map(c => c -> Some(c))
   }
+
+  private val nullString: Column = lit(null).cast(StringType)
+
+  /** A column by its exact name: census labels hold spaces, `$`, `<`
+    * and `,`, and a name is never parsed as a nested-field path. */
+  private def ref(name: String): Column = col(s"`${name.replace("`", "``")}`")
 
   /** R10 (`Test_census_tract.py:398`): vertical concat aligning by column
     * name, NULL-filling mismatches (pandas concat semantics). */
@@ -70,11 +83,14 @@ object Normalize {
     when(c <= -600000000L, lit(null)).otherwise(c)
 
   /** Full cleaning pipeline for one estimate column: blank→NULL, cast to
-    * DECIMAL(18,0) (counts) or DECIMAL(5,1) (percent codes), sentinel→NULL. */
-  def cleanCast(c: Column, percent: Boolean = false): Column = {
-    val target = if (percent) DecimalType(5, 1) else DecimalType(18, 0)
-    sentinelToNull(blanksAsNull(c).cast(target))
-  }
+    * DECIMAL(18,0) (counts) or DECIMAL(5,1) (percent codes), sentinel→NULL.
+    * A percent cell is cast to DECIMAL(18,1) first and narrowed only after
+    * its sentinel is nulled: DECIMAL(5,1) cannot hold -666666666, and under
+    * ANSI the narrowing cast throws instead of yielding NULL. */
+  def cleanCast(c: Column, percent: Boolean = false): Column =
+    if (percent) sentinelToNull(blanksAsNull(c).cast(DecimalType(18, 1)))
+      .cast(DecimalType(5, 1))
+    else sentinelToNull(blanksAsNull(c).cast(DecimalType(18, 0)))
 
   /** R21 (`Test_census_tract.py:236-237`): the Redshift
     * `SORTKEY (state_fips, county, tract)` expressed as a Spark layout —
@@ -91,6 +107,8 @@ object Normalize {
     * decimal cast), then everything is concatenated by column name and
     * laid out in warehouse sort order. `estimates` maps the *renamed*
     * column label to its percent-code flag (DECIMAL(5,1) vs (18,0)).
+    * Each frame's steps compose into ONE `select`: a chain of per-column
+    * `withColumn`s re-analyses a plan one `Project` deeper per code.
     * Pinned by the golden test in `graft.CensusGoldenSpec`. */
   def censusPipeline(
       perState: Seq[DataFrame],
@@ -100,15 +118,15 @@ object Normalize {
       sortKeys: Seq[String]): DataFrame = {
     val prepared = perState.map { df =>
       // normalize FIRST: a raw header like "dp02-0060e " must unify with
-      // its expected name before conformance, or conformSchema would add
+      // its expected name before conformance, or conformance would add
       // a NULL duplicate of a column that only matches post-normalization
-      // (round-4 review finding)
-      val conformed = renameByMapping(
-        conformSchema(normalizeHeaders(df), expected.map(normalizeHeader)),
-        mapping)
-      estimates.foldLeft(conformed) { case (d, (c, pct)) =>
-        if (d.columns.contains(c)) d.withColumn(c, cleanCast(col(c), pct)) else d
-      }
+      val rawOf = df.columns.map(c => normalizeHeader(c) -> c).toMap
+      df.select(conformOrder(df.columns.toSeq.map(normalizeHeader),
+          expected.map(normalizeHeader)).map { case (name, present) =>
+        val label = mapping.getOrElse(name, name)
+        val raw = present.fold(nullString)(n => ref(rawOf(n)))
+        estimates.get(label).fold(raw)(cleanCast(raw, _)).as(label)
+      }: _*)
     }
     sortLikeWarehouse(unionByNameAll(prepared), sortKeys)
   }

@@ -35,12 +35,14 @@ import org.apache.spark.unsafe.types.UTF8String
   *  - partitions are the reference's (dataset × state-chunk) splits:
   *    one `InputPartition` per 3-state chunk of the census state domain
   *    (`chunk_list(states, 3)`, `Test_census_tract.py:329-331`) — 51
-  *    FIPS codes → 17 partitions, each independently fetchable/retryable
-  *    exactly like the reference's per-chunk GET (Spark task retry
-  *    subsumes its tenacity loop, SURVEY §4.1).
+  *    FIPS codes → 17 partitions, each independently retryable like the
+  *    reference's per-chunk GET (Spark task retry subsumes its tenacity
+  *    loop, SURVEY §4.1).
   *
-  * The bytes behind a partition arrive through the [[CensusFetcher]]
-  * transport seam (option `fetcherClass`): the default reads a local
+  * The bytes behind a scan arrive through the [[CensusFetcher]]
+  * transport seam (option `fetcherClass`), fetched once per scan in each
+  * JVM and shared by the scan's partitions ([[ScanFetches]]) — the one
+  * target returns every chunk's rows. The default reads a local
   * JSON array-of-arrays fixture (option `path`) in the reference's
   * wire format; a deployment plugs its HTTP client into the same seam
   * and the planning, pushdown, partitioning, and retry/throttle
@@ -69,8 +71,8 @@ class CensusSource extends TableProvider {
 }
 
 /** Reference R14/R15 fetch-operational options (see [[Retry]]): retry
-  * attempts/backoff around each partition read and a per-partition
-  * pre-fetch throttle — `maxAttempts` (default 5 =
+  * attempts/backoff around each real fetch and a pre-fetch throttle on
+  * each real data fetch — `maxAttempts` (default 5 =
   * tenacity `stop_after_attempt(5)`), `retryBaseWaitMs`,
   * `retryMaxWaitMs` (default 60 s = the reference's backoff cap),
   * `throttleMs` (the reference sleeps 10 s per chunk; default 0 for
@@ -86,24 +88,68 @@ case class FetchPolicy(maxAttempts: Int, baseWaitMs: Long,
     maxChunksPerTrigger: Int = 0) {
   def fetcher: CensusFetcher = CensusFetcher.forName(fetcherClass)
 
-  /** One policy-governed fetch+parse of a chunk target: throttle, then
-    * retry the (fetch → parse) unit with capped exponential backoff —
-    * each attempt re-opens the transport, exactly the reference's
-    * per-GET tenacity loop. */
-  def fetchArrays(target: String): Vector[Vector[String]] =
-    fetchArrays(target, throttle = true)
-
-  /** `throttle = false` is the driver-side metadata path (schema
-    * inference, partition planning): the R15 throttle paces per-chunk
-    * DATA fetches against the upstream API; sleeping during planning
-    * just stalls the driver (round-6 advice — a reference-style
-    * throttleMs=10000 slept the driver before any task ran). Retry
-    * still applies. */
+  /** One policy-governed fetch+parse of a target: throttle, then retry
+    * the (fetch → parse) unit with capped exponential backoff — each
+    * attempt re-opens the transport, exactly the reference's per-GET
+    * tenacity loop. `throttle = false` is the driver-side metadata path
+    * (schema inference, partition planning): the R15 throttle paces DATA
+    * fetches against the upstream API, and sleeping during planning
+    * just stalls the driver (a reference-style throttleMs=10000 would
+    * sleep the driver before any task ran). Retry still applies. */
   def fetchArrays(target: String, throttle: Boolean): Vector[Vector[String]] = {
     if (throttle && throttleMs > 0) Thread.sleep(throttleMs)
     val f = fetcher
     Retry.withBackoff(maxAttempts, baseWaitMs, maxWaitMs)(
       CensusSource.readArrays(f.fetch(target)))
+  }
+
+  /** The parsed response of `target` for the scan minted `token`: the
+    * first read of the pair in this JVM fetches and parses it under
+    * [[fetchArrays]] (throttle and retry apply to that real fetch), and
+    * every other read of the same scan waits for that parse and shares
+    * it. See [[ScanFetches]]. */
+  def fetchShared(token: String, target: String,
+      throttle: Boolean): Vector[Vector[String]] =
+    ScanFetches(token, target)(fetchArrays(target, throttle))
+}
+
+/** One fetch per scan per JVM. A scan's driver reads (header, row count)
+  * and its partition reads — the chunk partitions, the catch-all and a
+  * range sort's sampling pass over the same scan — all need the same
+  * response, which the source's one target returns whole. Entries are
+  * keyed by (scan token, target), so nothing is shared across scans and
+  * every new scan fetches its source again: the memo holds one scan's
+  * input, never a result. A failed fetch stores nothing, so the next
+  * read fetches again. At most [[MaxEntries]] scans are held
+  * (least-recently-used out), each through a soft reference the GC may
+  * clear; a cleared entry is fetched again. */
+private[sources] object ScanFetches {
+  private val MaxEntries = 16
+
+  private final class Slot {
+    var parsed: java.lang.ref.SoftReference[Vector[Vector[String]]] = _
+  }
+
+  private val slots =
+    new java.util.LinkedHashMap[(String, String), Slot](16, 0.75f, true) {
+      override def removeEldestEntry(
+          e: java.util.Map.Entry[(String, String), Slot]): Boolean =
+        size() > MaxEntries
+    }
+
+  def apply(token: String, target: String)(
+      fetch: => Vector[Vector[String]]): Vector[Vector[String]] = {
+    val slot = slots.synchronized(
+      slots.computeIfAbsent((token, target), _ => new Slot))
+    // the slot lock makes a concurrent read of the same scan wait for
+    // the first one's parse instead of fetching again
+    slot.synchronized {
+      Option(slot.parsed).flatMap(r => Option(r.get())).getOrElse {
+        val all = fetch
+        slot.parsed = new java.lang.ref.SoftReference(all)
+        all
+      }
+    }
   }
 }
 
@@ -141,12 +187,11 @@ object CensusSource {
     }.toVector
   }
 
-  /** Driver-side metadata read: unthrottled (see
-    * [[FetchPolicy.fetchArrays]]), header row only. */
-  private[sources] def header(policy: FetchPolicy, target: String): Vector[String] =
-    policy.fetchArrays(target, throttle = false).headOption
-      .getOrElse(throw new IllegalArgumentException(
-        s"census source $target has no header row"))
+  /** Row 0 of a parsed response: the column names. */
+  private[sources] def headerRow(all: Vector[Vector[String]],
+      target: String): Vector[String] =
+    all.headOption.getOrElse(throw new IllegalArgumentException(
+      s"census source $target has no header row"))
 
   /** Expected-first, extras-appended, first-occurrence-deduped column
     * order (R5/R6/R18). */
@@ -159,7 +204,10 @@ object CensusSource {
       throw new IllegalArgumentException("census source requires a 'path' option"))
     val expect = Option(options.get("expect")).toSeq
       .flatMap(_.split(",").map(_.trim).filter(_.nonEmpty))
-    StructType(columnOrder(expect, header(FetchPolicy.fromProperties(options), path))
+    // driver-side metadata read: unthrottled (see [[FetchPolicy.fetchArrays]])
+    val header = headerRow(
+      FetchPolicy.fromProperties(options).fetchArrays(path, throttle = false), path)
+    StructType(columnOrder(expect, header)
       .map(StructField(_, StringType, nullable = true)))
   }
 }
@@ -307,10 +355,18 @@ class CensusScan(required: StructType, pushed: Array[Filter], path: String,
     * bytes = rows × the read schema's string widths. Pinned in
     * `CensusSourceSpec`: an unhinted census⋈fact join broadcasts the
     * census side. */
-  /** Fetched AT MOST once per scan (the fileHeader discipline): the
-    * planner may ask for statistics repeatedly. */
   private lazy val fileRowCount: Long =
-    math.max(0L, policy.fetchArrays(path, throttle = false).length - 1L)
+    math.max(0L, driverResponse.length - 1L)
+
+  /** Names this scan's one shared fetch ([[ScanFetches]]): every read of
+    * the scan — driver planning and statistics, each partition read —
+    * goes through it, and no other scan does. */
+  protected val token: String = java.util.UUID.randomUUID().toString
+
+  /** The scan's shared response, read on the driver: unthrottled, like
+    * every metadata read (see [[FetchPolicy.fetchArrays]]). */
+  private def driverResponse: Vector[Vector[String]] =
+    policy.fetchShared(token, path, throttle = false)
 
   override def estimateStatistics(): Statistics = new Statistics {
     private val total: Long = fileRowCount
@@ -384,11 +440,9 @@ class CensusScan(required: StructType, pushed: Array[Filter], path: String,
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
 
-  /** The parsed file header, fetched AT MOST ONCE per scan (round-6
-    * advice: routing every planning call through a fresh fetch
-    * re-downloaded and re-parsed the target on the driver). */
+  /** The file header, from the scan's shared fetch. */
   private lazy val fileHeader: Vector[String] =
-    CensusSource.header(policy, path)
+    CensusSource.headerRow(driverResponse, path)
 
   /** Partition pruning: a chunk whose states are all excluded by the
     * pushed predicate is never planned — the reference simply does not
@@ -471,7 +525,7 @@ class CensusScan(required: StructType, pushed: Array[Filter], path: String,
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new CensusReaderFactory(path, required.fieldNames.toSeq,
+    new CensusReaderFactory(path, token, required.fieldNames.toSeq,
       effectiveStates, stateNotNull, policy, pushedLimit, pushedTopN)
 
   override def description(): String =
@@ -507,7 +561,7 @@ case class CensusChunkOffset(n: Int)
 
 class CensusMicroBatchStream(scan: CensusScan, maxChunksPerTrigger: Int)
     extends org.apache.spark.sql.connector.read.streaming.MicroBatchStream
-    with org.apache.spark.sql.connector.read.streaming.SupportsAdmissionControl {
+    with org.apache.spark.sql.connector.read.streaming.SupportsTriggerAvailableNow {
   import org.apache.spark.sql.connector.read.streaming.{Offset, ReadLimit}
 
   /** The batch scan's planning, reused verbatim (chunk pruning under
@@ -524,6 +578,12 @@ class CensusMicroBatchStream(scan: CensusScan, maxChunksPerTrigger: Int)
       "latestOffset(Offset, ReadLimit) should be called instead of this")
 
   override def getDefaultReadLimit: ReadLimit = ReadLimit.allAvailable()
+
+  /** `Trigger.AvailableNow` pins its end to the chunks planned when the
+    * trigger is prepared: the partition list is fixed for the stream's
+    * lifetime, so planning it here pins the end. Batches keep their
+    * `maxChunksPerTrigger` pacing up to it, and the query stops there. */
+  override def prepareForTriggerAvailableNow(): Unit = { parts; () }
 
   override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
     val s = at(start)
@@ -566,7 +626,7 @@ class CensusAggScan(pushed: Array[Filter], path: String,
     }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new CensusAggReaderFactory(path, effectiveStates, stateNotNull,
+    new CensusAggReaderFactory(path, token, effectiveStates, stateNotNull,
       policy, nAggs)
 
   override def description(): String =
@@ -574,16 +634,16 @@ class CensusAggScan(pushed: Array[Filter], path: String,
       s"PushedAggregation: [COUNT(*) GROUP BY state x$nAggs]"
 }
 
-class CensusAggReaderFactory(path: String,
+class CensusAggReaderFactory(path: String, token: String,
     wantedStates: Option[Set[String]], stateNotNull: Boolean,
     policy: FetchPolicy, nAggs: Int) extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
     partition match {
       case p: CensusStatePartition =>
-        new CensusAggPartitionReader(path, Set(p.state), catchAll = false,
+        new CensusAggPartitionReader(path, token, Set(p.state), catchAll = false,
           wantedStates, stateNotNull, policy, nAggs)
       case p: CensusPartition =>
-        new CensusAggPartitionReader(path, p.states.toSet, p.catchAll,
+        new CensusAggPartitionReader(path, token, p.states.toSet, p.catchAll,
           wantedStates, stateNotNull, policy, nAggs)
     }
 }
@@ -593,13 +653,13 @@ class CensusAggReaderFactory(path: String,
   * [[CensusPartitionReader]] so the aggregate path can never disagree
   * with the row path about which rows exist. Group order is sorted by
   * state (NULL group first) for a deterministic partition output. */
-class CensusAggPartitionReader(path: String, chunkStates: Set[String],
+class CensusAggPartitionReader(path: String, token: String, chunkStates: Set[String],
     catchAll: Boolean, wantedStates: Option[Set[String]],
     stateNotNull: Boolean, policy: FetchPolicy, nAggs: Int)
     extends PartitionReader[InternalRow] {
 
   private val rows: Iterator[InternalRow] = {
-    val inner = new CensusPartitionReader(path, Seq("state"), chunkStates,
+    val inner = new CensusPartitionReader(path, token, Seq("state"), chunkStates,
       catchAll, wantedStates, stateNotNull, policy)
     val counts = scala.collection.mutable.Map.empty[String, Long]
     while (inner.next()) {
@@ -624,7 +684,7 @@ class CensusAggPartitionReader(path: String, chunkStates: Set[String],
   override def close(): Unit = ()
 }
 
-class CensusReaderFactory(path: String, requiredCols: Seq[String],
+class CensusReaderFactory(path: String, token: String, requiredCols: Seq[String],
     wantedStates: Option[Set[String]], stateNotNull: Boolean,
     policy: FetchPolicy,
     pushedLimit: Option[Int] = None,
@@ -633,11 +693,11 @@ class CensusReaderFactory(path: String, requiredCols: Seq[String],
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
     partition match {
       case p: CensusStatePartition =>
-        new CensusPartitionReader(path, requiredCols, Set(p.state),
+        new CensusPartitionReader(path, token, requiredCols, Set(p.state),
           catchAll = false, wantedStates, stateNotNull, policy,
           pushedLimit, pushedTopN)
       case p: CensusPartition =>
-        new CensusPartitionReader(path, requiredCols, p.states.toSet,
+        new CensusPartitionReader(path, token, requiredCols, p.states.toSet,
           p.catchAll, wantedStates, stateNotNull, policy,
           pushedLimit, pushedTopN)
     }
@@ -646,12 +706,15 @@ class CensusReaderFactory(path: String, requiredCols: Seq[String],
 /** Reads the source's data rows for one state chunk (or the catch-all
   * remainder), applying the pushed geo predicate, NULL-filling
   * expected-but-absent columns (R5) and projecting to the pruned
-  * schema. The fetch goes through the policy's [[CensusFetcher]] seam
-  * under the R14/R15 envelope: throttle before the fetch, retry the
-  * fetch+parse with capped exponential backoff — a production
-  * deployment plugs an HTTP GET into the same seam, same policy, same
-  * partition contract. */
-class CensusPartitionReader(path: String, requiredCols: Seq[String],
+  * schema. The rows come from the scan's shared response
+  * ([[FetchPolicy.fetchShared]] under the scan's `token`): the first
+  * read of the scan in this JVM fetches through the policy's
+  * [[CensusFetcher]] seam under the R14/R15 envelope — throttle before
+  * the fetch, retry the fetch+parse with capped exponential backoff —
+  * and the scan's other reads share that parse. A production deployment
+  * plugs an HTTP GET into the same seam, same policy, same partition
+  * contract. */
+class CensusPartitionReader(path: String, token: String, requiredCols: Seq[String],
     chunkStates: Set[String], catchAll: Boolean,
     wantedStates: Option[Set[String]],
     stateNotNull: Boolean, policy: FetchPolicy,
@@ -660,8 +723,8 @@ class CensusPartitionReader(path: String, requiredCols: Seq[String],
     extends PartitionReader[InternalRow] {
 
   private val rows: Iterator[InternalRow] = {
-    val all = policy.fetchArrays(path)
-    val fileHeader = all.head
+    val all = policy.fetchShared(token, path, throttle = true)
+    val fileHeader = CensusSource.headerRow(all, path)
     val colIdx = fileHeader.zipWithIndex.toMap // first occurrence wins (R18)
     val stateIdx = colIdx.get("state")
     val reqIdx: Seq[Option[Int]] = requiredCols.map(colIdx.get)

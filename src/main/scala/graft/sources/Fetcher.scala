@@ -7,16 +7,20 @@ import java.io.InputStream
   * The reference's chunk fetch is an HTTP GET
   * (`/root/reference/Test_census_tract.py:143-176`); the offline
   * fixture read and a production HTTP client are two implementations of
-  * this one interface. `fetch` opens the bytes behind one chunk target
-  * — it is called once per RETRY ATTEMPT inside
-  * [[Retry.withBackoff]], so transient transport failures (the
-  * reference's HTTPError) surface as exceptions here and are retried
-  * under the R14/R15 policy without the reader knowing the transport.
+  * this one interface. `fetch` opens the bytes behind one target — it
+  * is called once per RETRY ATTEMPT inside [[Retry.withBackoff]], so
+  * transient transport failures (the reference's HTTPError) surface as
+  * exceptions here and are retried under the R14/R15 policy without the
+  * reader knowing the transport.
+  *
+  * A target is fetched once for schema inference, then once per scan in
+  * each JVM that reads the scan: the scan's first read (driver planning,
+  * or an executor's first partition) fetches and parses, and the scan's
+  * other reads in that JVM share the parse ([[ScanFetches]]).
   *
   * Selected per scan via the `fetcherClass` option (a class name with a
-  * no-arg constructor, instantiated on the driver for schema/planning
-  * reads and on executors for partition reads — the standard DSv2
-  * string-option plug point).
+  * no-arg constructor, instantiated wherever a real fetch runs — the
+  * standard DSv2 string-option plug point).
   */
 trait CensusFetcher extends Serializable {
   def fetch(target: String): InputStream

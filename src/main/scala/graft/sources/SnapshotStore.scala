@@ -36,8 +36,8 @@ import org.apache.spark.sql.functions.{col, lit}
   *    MATERIALIZES outstanding deletes and drops the DV entries.
   *
   * Data entries may carry a FILE-LEVEL ZONE MAP — min/max of one
-  * declared long-typed column, computed at commit time from the just-
-  * written directory (`statsCol`). [[readPruned]] skips directories
+  * declared long-typed column, computed at commit time on the write of
+  * the directory itself (`statsCol`). [[readPruned]] skips directories
   * whose [min,max] cannot overlap a range predicate BEFORE any data
   * file is opened — the Delta/Iceberg data-skipping core, and after
   * partition pruning the first IO lever at 100 TB. Entries without
@@ -135,25 +135,30 @@ object SnapshotStore {
     finally in.close()
   }
 
-  /** Zone-map computation for a just-written data dir: one narrow
-    * min/max scan of ALL declared columns over the files the commit
-    * itself produced — one aggregate pass regardless of column count
-    * (at scale this folds per-file from parquet footers; the committed
-    * batch is the only data touched either way). A column that is
-    * all-NULL in the batch records no stats — a stat-less column is
-    * never pruned on. */
-  private def zoneMapsOf(spark: SparkSession, dataDir: String,
-      statsCols: Seq[String]): Seq[(String, Long, Long)] = {
-    if (statsCols.isEmpty) return Nil
-    import org.apache.spark.sql.functions.{max, min}
-    val aggs = statsCols.flatMap(c =>
-      Seq(min(col(c).cast("long")), max(col(c).cast("long"))))
-    val r = spark.read.parquet(dataDir).agg(aggs.head, aggs.tail: _*).head()
-    statsCols.zipWithIndex.flatMap { case (c, i) =>
-      if (r.isNullAt(2 * i)) None
-      else Some((c, r.getLong(2 * i), r.getLong(2 * i + 1)))
+  /** Write `df` as the parquet data dir `dataDir` and return the zone
+    * maps of `statsCols`: an `Observation` folds every declared column's
+    * min/max as the rows stream into the files, so the commit never
+    * re-reads the files it just wrote. A column that is all-NULL in the
+    * batch records no stats — a stat-less column is never pruned on. */
+  private def writeWithZoneMaps(df: DataFrame, dataDir: String,
+      statsCols: Seq[String]): Seq[(String, Long, Long)] =
+    if (statsCols.isEmpty) { df.write.mode("error").parquet(dataDir); Nil }
+    else {
+      import org.apache.spark.sql.Observation
+      import org.apache.spark.sql.functions.{max, min}
+      val obs = Observation()
+      val aggs = statsCols.zipWithIndex.flatMap { case (c, i) =>
+        Seq(min(col(c).cast("long")).as(s"mn$i"), max(col(c).cast("long")).as(s"mx$i"))
+      }
+      df.observe(obs, aggs.head, aggs.tail: _*).write.mode("error").parquet(dataDir)
+      val r = obs.get
+      statsCols.zipWithIndex.flatMap { case (c, i) =>
+        (r.get(s"mn$i"), r.get(s"mx$i")) match {
+          case (Some(lo: Long), Some(hi: Long)) => Some((c, lo, hi))
+          case _ => None
+        }
+      }
     }
-  }
 
   /** Write `lines` as manifest version `v` via the atomic temp-write +
     * rename commit point. */
@@ -184,10 +189,10 @@ object SnapshotStore {
     val v = existing.lastOption.getOrElse(0) + 1
     val dataDir =
       s"$root/data/v$v-${java.util.UUID.randomUUID().toString.take(8)}"
-    df.write.mode("error").parquet(dataDir)
+    val stats = writeWithZoneMaps(df, dataDir, statsCols)
     val carried =
       carryFrom.map(readManifestLines(spark, root, _)).getOrElse(Nil)
-    val entry = DataDir(dataDir, zoneMapsOf(spark, dataDir, statsCols))
+    val entry = DataDir(dataDir, stats)
     publishManifest(spark, root, v, carried :+ render(entry))
     v
   }
@@ -591,6 +596,36 @@ object SnapshotStore {
     (drop.length, orphans.length)
   }
 
+  /** Read parquet data dirs under their schema merged the way the
+    * `mergeSchema` option merges, taken from ONE footer per dir read on
+    * the driver: every file of a dir comes from the one write that made
+    * it, so its first data file states the dir's schema. Handing the
+    * schema to the reader keeps parquet schema inference — a Spark job
+    * per read — out of DataFrame construction. */
+  private def readDirs(spark: SparkSession, dirs: Seq[String]): DataFrame = {
+    import org.apache.parquet.HadoopReadOptions
+    import org.apache.parquet.format.converter.ParquetMetadataConverter
+    import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
+    val conf = spark.sessionState.newHadoopConf()
+    val sqlConf = spark.sessionState.conf
+    val converter = new ParquetToSparkSchemaConverter(sqlConf)
+    val schema = dirs.map { d =>
+      val dir = new Path(d)
+      val file = dir.getFileSystem(conf).listStatus(dir).find { st =>
+        val n = st.getPath.getName
+        st.isFile && !n.startsWith("_") && !n.startsWith(".")
+      }.getOrElse(throw new IllegalStateException(s"no data file under $d"))
+      val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(file, conf),
+        HadoopReadOptions.builder(conf)
+          .withMetadataFilter(ParquetMetadataConverter.SKIP_ROW_GROUPS).build())
+      val footer = try reader.getFooter finally reader.close()
+      ParquetFileFormat.readSchemaFromFooter(new Footer(file.getPath, footer), converter)
+    }.reduce(org.apache.spark.sql.graft.Bridge.mergeSchemas(_, _, sqlConf.caseSensitiveAnalysis))
+    spark.read.schema(schema).parquet(dirs: _*)
+  }
+
   /** Assemble the DataFrame a manifest describes: data dirs unioned in
     * manifest order, with each deletion vector anti-joined onto every
     * data dir that PRECEDES it (the data the delete saw when it
@@ -612,17 +647,14 @@ object SnapshotStore {
       .toSeq
       // deterministic assembly order: by first member's manifest position
       .sortBy { case (_, members) => members.map(_._2).min }
-    // mergeSchema + by-name union with missing-column NULL fill: a
-    // later commit may ADD columns (A43 schema evolution) — earlier
+    // by-name union with missing-column NULL fill over merged schemas:
+    // a later commit may ADD columns (A43 schema evolution) — earlier
     // dirs read them as NULL, the Delta/Iceberg additive-evolution
-    // contract. (Production stores the current schema in the table
-    // log and reads ONE footer; mergeSchema's footer sweep is the
-    // log-less stand-in, bounded by dir count per segment.)
+    // contract
     segments.map { case (dvs, members) =>
-      val base = spark.read.option("mergeSchema", "true")
-        .parquet(members.map(_._1.dir): _*)
+      val base = readDirs(spark, members.map(_._1.dir))
       dvs.groupBy(_.keyCol).foldLeft(base) { case (acc, (keyCol, vs)) =>
-        val keys = spark.read.parquet(vs.map(_.dir): _*)
+        val keys = readDirs(spark, vs.map(_.dir))
           .select(col(keyCol)).distinct()
         acc.join(keys, Seq(keyCol), "left_anti")
       }
@@ -677,7 +709,7 @@ object SnapshotStore {
       if (opened > 0) assemble(spark, kept)
       else { // every dir pruned: an empty frame with the right schema
         val first = entries.collectFirst { case d: DataDir => d.dir }.get
-        spark.read.parquet(first).filter(lit(false))
+        readDirs(spark, Seq(first)).filter(lit(false))
       }
     PrunedRead(df, opened, total)
   }

@@ -2,10 +2,11 @@ package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.{DataFrame, Row, SparkSession, Dataset}
 
 /** The ONE deliberate bridge into Spark's `private[sql]` surface, kept
-  * to two one-line calls. Building a [[org.apache.spark.sql.Dataset]]
+  * to one-line calls. Building a [[org.apache.spark.sql.Dataset]]
   * from a custom [[LogicalPlan]] node (the documented extension path
   * for whole-operator semantics: LogicalPlan + Strategy + SparkPlan,
   * SURVEY.md §7.3 / graft.plans.AsOfJoin) has no public constructor —
@@ -22,4 +23,9 @@ object Bridge {
     * what a custom operator composes over). */
   def analyzedPlan(df: Dataset[Row]): LogicalPlan =
     df.asInstanceOf[classic.Dataset[Row]].queryExecution.analyzed
+
+  /** `StructType.merge` (`private[sql]`): how the parquet `mergeSchema`
+    * read option combines the schemas of the files it reads. */
+  def mergeSchemas(a: StructType, b: StructType, caseSensitive: Boolean): StructType =
+    a.merge(b, caseSensitive)
 }

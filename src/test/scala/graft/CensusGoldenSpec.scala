@@ -105,6 +105,37 @@ class CensusGoldenSpec extends SparkTestBase {
       Seq(Some("12.3"), None))
   }
 
+  test("percent codes under ANSI: a sentinel and a blank clean to NULL") {
+    import org.apache.spark.sql.functions._
+    val prev = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    try {
+      val d = df(Seq("v"), Seq(Seq("-666666666"), Seq(""), Seq("  "), Seq("7.25")))
+        .select(Normalize.cleanCast(col("v"), percent = true).as("c"))
+      assert(d.schema("c").dataType.typeName == "decimal(5,1)")
+      assert(d.collect().map(r => Option(r.get(0)).map(_.toString)).toSeq ==
+        Seq(None, None, None, Some("7.3")))
+    } finally spark.conf.set("spark.sql.ansi.enabled", prev)
+  }
+
+  test("cleaning builds one Project per input frame, whatever the code count") {
+    import org.apache.spark.sql.catalyst.plans.logical.Project
+    val geo = Seq("state", "county", "tract")
+    for (codes <- Seq(Mapping.codeToLabel.keys.toSeq.sorted.take(1),
+        Mapping.codeToLabel.keys.toSeq.sorted)) {
+      val frame = df(("NAME" +: codes) ++ geo,
+        Seq(("Tract 1" +: codes.map(c => if (c.endsWith("PE")) "1.5" else "3")) ++
+          Seq("01", "001", "000100")))
+      val estimates = codes.map(c => Mapping.codeToLabel(c) -> c.endsWith("PE")).toMap
+      val out = Normalize.censusPipeline(Seq(frame), "NAME" +: codes,
+        Mapping.codeToLabel, estimates, Seq("STATE", "COUNTY", "TRACT"))
+      val projects = out.queryExecution.logical.collect { case p: Project => p }
+      assert(projects.size == 1, s"${codes.size} codes: ${projects.size} Projects")
+      assert(out.columns.toSeq ==
+        ("NAME" +: codes.map(Mapping.codeToLabel)) ++ geo.map(_.toUpperCase))
+    }
+  }
+
   test("census states domain: 51 zero-padded FIPS, unassigned removed") {
     val fips = ops.SortsCensus.censusStates(spark, sfDir)
       .collect().map(_.getString(0)).toSeq

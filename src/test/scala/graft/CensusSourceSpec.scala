@@ -274,11 +274,60 @@ class CensusSourceSpec extends SparkTestBase {
     assert(afterSchema == 1, s"schema inference must fetch once, saw $afterSchema")
     val filtered = df.filter(col("state") === "06")
     assert(filtered.count() == 2)
-    // one metadata fetch at planning (cached lazy header) + one
-    // single-partition data read — nothing else
+    // one fetch for the scan: planning's header read pays it and the
+    // single-partition data read shares it
     val total = CountingFetcher.attempts.get()
-    assert(total == afterSchema + 2,
-      s"expected planning+read to add exactly 2 fetches, saw ${total - afterSchema}")
+    assert(total == afterSchema + 1,
+      s"expected planning+read to add exactly 1 fetch, saw ${total - afterSchema}")
+  }
+
+  test("one fetch per scan: an unfiltered 18-partition scan fetches once; " +
+      "two scans of the same path fetch twice") {
+    CountingFetcher.attempts.set(0)
+    def load() = spark.read.format("graft.sources.CensusSource")
+      .option("path", CensusFixture.path)
+      .option("expect", CensusFixture.Expect.mkString(","))
+      .option("fetcherClass", classOf[CountingFetcher].getName)
+      .load()
+    val df = load()
+    assert(CountingFetcher.attempts.get() == 1, "schema inference fetches once")
+    assert(df.collect().length == 2 * CensusSource.stateFips.size)
+    assert(CountingFetcher.attempts.get() == 2,
+      s"the scan's planning and 18 partition reads must share one fetch, " +
+        s"saw ${CountingFetcher.attempts.get() - 1}")
+    assert(scanOf(df).inputRDD.getNumPartitions == CensusSource.stateChunks.size + 1)
+    // a range sort samples the scan, then reads it again: one scan, one fetch
+    CountingFetcher.attempts.set(0)
+    val sorted = load().repartitionByRange(col("state")).collect()
+    assert(sorted.length == 2 * CensusSource.stateFips.size)
+    assert(CountingFetcher.attempts.get() == 2,
+      s"sampling and reading one scan must share its fetch, saw ${CountingFetcher.attempts.get()}")
+    // nothing is shared across scans: each builds its own and fetches
+    CountingFetcher.attempts.set(0)
+    val (a, b) = (load(), load())
+    assert(a.count() == b.count())
+    assert(CountingFetcher.attempts.get() == 4,
+      s"two scans = 2 schema + 2 scan fetches, saw ${CountingFetcher.attempts.get()}")
+  }
+
+  test("a failed shared fetch is retried, never replayed from the memo") {
+    import graft.sources.FetchPolicy
+    FlakyFetcher.attempts.set(0)
+    val policy = FetchPolicy.Default.copy(maxAttempts = 1,
+      fetcherClass = classOf[FlakyFetcher].getName)
+    val token = java.util.UUID.randomUUID().toString
+    // FlakyFetcher fails its first two fetches
+    for (_ <- 1 to 2)
+      intercept[RuntimeException](policy.fetchShared(token, CensusFixture.path, throttle = false))
+    val first = policy.fetchShared(token, CensusFixture.path, throttle = false)
+    assert(FlakyFetcher.attempts.get() == 3, "each failed read must fetch again")
+    assert(first.length == 1 + 2 * CensusSource.stateFips.size)
+    assert(policy.fetchShared(token, CensusFixture.path, throttle = false) eq first)
+    assert(FlakyFetcher.attempts.get() == 3, "a kept parse is shared without a fetch")
+    // another scan's token never sees it
+    policy.fetchShared(java.util.UUID.randomUUID().toString, CensusFixture.path,
+      throttle = false)
+    assert(FlakyFetcher.attempts.get() == 4)
   }
 
   test("CensusUrl builds the reference's exact request URLs (R1)") {
@@ -469,6 +518,29 @@ class CensusSourceSpec extends SparkTestBase {
       assert(q2.recentProgress.forall(_.numInputRows == 0),
         "a restarted stream over consumed chunks must admit nothing")
     } finally q2.stop()
+  }
+
+  test("Trigger.AvailableNow drains the paced stream: every row, 4 data batches") {
+    import org.apache.spark.sql.streaming.Trigger
+    val ckpt = java.nio.file.Files
+      .createTempDirectory("graft_census_avnow_").toString
+    val q = spark.readStream
+      .format("graft.sources.CensusSource")
+      .option("path", CensusFixture.path)
+      .option("expect", CensusFixture.Expect.mkString(","))
+      .option("maxChunksPerTrigger", "5")
+      .load()
+      .writeStream.format("memory").queryName("census_avnow")
+      .trigger(Trigger.AvailableNow())
+      .option("checkpointLocation", ckpt)
+      .start()
+    try {
+      assert(q.awaitTermination(120000L), "AvailableNow must stop by itself")
+      assert(spark.table("census_avnow").count() == 2L * CensusSource.stateFips.size)
+      // 17 chunks + 1 catch-all at 5/trigger = 4 data batches
+      val dataBatches = q.recentProgress.count(_.numInputRows > 0)
+      assert(dataBatches == 4, s"expected 4 paced micro-batches, saw $dataBatches")
+    } finally q.stop()
   }
 
   test("reported statistics make the census side broadcastable in joins") {

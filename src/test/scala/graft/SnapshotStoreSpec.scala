@@ -640,6 +640,75 @@ class SnapshotStoreSpec extends SparkTestBase {
     assert(v1.count() == 50)
   }
 
+  test("read and readPruned build their DataFrames without a Spark job; " +
+      "the schema is what mergeSchema infers") {
+    import spark.implicits._
+    val root = freshRoot()
+    SnapshotStore.commitOverwrite(spark, root,
+      (1L to 50L).map(k => (k, s"r$k")).toDF("k", "p"), statsCols = Seq("k"))
+    SnapshotStore.commitAppend(spark, root,
+      (51L to 80L).map(k => (k, s"r$k", k * 10)).toDF("k", "p", "extra"),
+      statsCols = Seq("k"))
+    SnapshotStore.commitDelete(spark, root, "k", col("k") === 3L)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val marker = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(j.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id"))) match {
+          case Some("snapshot_construct") => jobs.incrementAndGet(); ()
+          case Some("snapshot_marker") => marker.set(true)
+          case _ => ()
+        }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val sc = spark.sparkContext
+    try {
+      sc.setJobGroup("snapshot_construct", "construction only")
+      val built = Seq(
+        SnapshotStore.read(spark, root),
+        SnapshotStore.read(spark, root, asOf = Some(1)),
+        SnapshotStore.readPruned(spark, root, "k", 60L, 70L).df,
+        SnapshotStore.readPruned(spark, root, "k", 500L, 600L).df)
+      sc.setJobGroup("snapshot_marker", "flushes the listener bus")
+      spark.range(1).count()
+      sc.clearJobGroup()
+      // listener events arrive in order: once the marker job is seen,
+      // every job construction started has been counted
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!marker.get() && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(marker.get(), "marker job never reached the listener")
+      assert(jobs.get() == 0, s"construction fired ${jobs.get()} jobs")
+      assert(built.map(_.count()) == Seq(79L, 50L, 30L, 0L))
+      // schemas as the parquet mergeSchema option infers them, per read
+      def merged(dirs: String*) =
+        spark.read.option("mergeSchema", "true").parquet(dirs: _*).schema
+      val dataDirs = new java.io.File(s"$root/data").listFiles()
+        .map(_.getPath).filter(!_.contains("dv-")).sorted
+      assert(built.head.schema == merged(dataDirs: _*))
+      assert(built(1).schema == merged(dataDirs.head))
+    } finally {
+      sc.clearJobGroup()
+      spark.sparkContext.removeSparkListener(listener)
+    }
+  }
+
+  test("zone maps observed on the write equal the files' min/max; an " +
+      "all-NULL stats column records no stats") {
+    import spark.implicits._
+    val root = freshRoot()
+    val df = (0L until 300L).map(i => (i * 7 % 1000 - 40, (i % 9).toInt, Option.empty[Long]))
+      .toDF("k", "g", "n").repartition(3)
+    SnapshotStore.commitOverwrite(spark, root, df, statsCols = Seq("k", "g", "n"))
+    val line = scala.io.Source.fromFile(s"$root/_manifests/v1.list").mkString.trim
+    val fields = line.split('\t')
+    val recorded = fields.tail.grouped(3)
+      .map { case Array(c, lo, hi) => (c, lo.toLong, hi.toLong) }.toSeq
+    val r = spark.read.parquet(fields.head)
+      .agg(min("k"), max("k"), min("g"), max("g")).head()
+    assert(recorded == Seq(("k", r.getLong(0), r.getLong(1)),
+      ("g", r.getInt(2).toLong, r.getInt(3).toLong)), line)
+  }
+
   // ---- A45 restore ----
 
   test("A45: restore re-commits the target snapshot; history stays readable") {
