@@ -1,26 +1,56 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import com.fasterxml.jackson.databind.JsonNode
+import scala.collection.immutable.ListMap
+import scala.jdk.CollectionConverters._
+import scala.util.Try
 
-/** Benchmark main: runs every registered query against
-  * SPARK_GRAFT_SF_DIR and prints one JSON line.
+/** Benchmark main: times every registered query against
+  * `SPARK_GRAFT_SF_DIR` in a [[Harness.session]] and prints two JSON
+  * lines, mirrored to `SPARK_GRAFT_BENCH_OUT` (default
+  * `BENCH_LOCAL.json`).
   *
-  * Each query executes its FULL plan through the noop data source (every
-  * row is produced and discarded) — `count()` would let Catalyst prune
-  * projections and drop final sorts, timing a different plan than the
-  * one the oracle checks (round-3 verdict). Failures are reported
-  * explicitly in a "failed" array, never silently timed.
+  * Each query runs its FULL plan through [[Harness.runNoop]], so the
+  * timed plan is the one the oracle checks. Per query: one warm-up rep,
+  * timed separately and discarded (it pays codegen JIT, FixtureCache
+  * builds and broadcast warm-up, which only ever inflate a median), then
+  * `SPARK_GRAFT_BENCH_REPS` (default 3) reps reported as their MEDIAN —
+  * single runs on a shared local session swing 3-5x from scheduler/JIT
+  * noise. Any failed rep fails the query: it is listed in "failed" and
+  * never reported as the median of its surviving reps. "value" is the
+  * sum of medians, "value_min" the sum of per-query minima (noise only
+  * ever inflates a rep, so the min is the contention-immune number),
+  * "wall_sec" the whole loop.
   *
-  * Each query is timed `Reps` times back-to-back and reported as the
-  * per-query MEDIAN (round-5 verdict: single-run numbers on a shared
-  * local session swing 3-5x from scheduler/JIT noise — r4→r5 showed
-  * 4.8x "regressions" on unchanged, plan-pinned queries — so a real 2x
-  * regression on a sub-second query was undetectable). "value" is the
-  * sum of medians (comparable across rounds); "wall_sec" is the
-  * whole-loop wall clock including repeats.
+  * Knobs, beside the session knobs of [[Harness.confs]]:
+  *  - `SPARK_GRAFT_BENCH_ONLY=q1,q2`: time just those queries.
+  *  - `SPARK_GRAFT_BENCH_REWARM=1`: re-read the fixture bytes before
+  *    each query. At sf>=1 the suite's own shuffle scratch evicts
+  *    fixture pages, so later queries would read cold while earlier
+  *    ones read warm; re-reading restores the state an isolated run's
+  *    warm-up produces, so in-suite ≈ isolated by construction.
+  *  - `SPARK_GRAFT_BENCH_FORK=1`: one JVM per query (see [[forkMain]]).
+  *
+  * Artifact layout — a truncating log capture keeps only the TAIL of stdout:
+  *  - The big line leads with the `rep_outliers` diagnostic (raw reps of
+  *    any query whose reps spread more than 2x), then the per-query map
+  *    ordered by median ascending (failed queries, -1, first; the
+  *    slowest last), then the headline scalars, so a head-truncated
+  *    capture keeps the total and the slow families.
+  *  - The compact line (<200 chars) is printed LAST, after
+  *    `spark.stop()`, so nothing Spark logs on shutdown can follow it.
+  *    `contention_ratio` is wall clock over what a quiet host spends
+  *    (Σ medians × reps + the measured warm-up total); `warmup_sec`
+  *    tells a cold-cache run from a contended one.
+  *  - Keys are additions-only: none is renamed or reordered.
   */
 object Bench {
   val DefaultReps = 3
+
+  /** One query's outcome: median and min seconds when every rep passed,
+    * the warm-up seconds, and the raw rep times. */
+  private case class Result(name: String, sec: Option[Double],
+    min: Option[Double], warmSec: Double, reps: Seq[Double])
 
   private def median(xs: Seq[Double]): Double = {
     val s = xs.sorted
@@ -28,67 +58,45 @@ object Bench {
     else (s(s.length / 2 - 1) + s(s.length / 2)) / 2.0
   }
 
-  /** FORK mode (round-19): `SPARK_GRAFT_BENCH_FORK=1` runs every query
-    * in its OWN JVM — one subprocess per query, same classpath and
-    * --add-opens/-Xmx flags as this process, all other SPARK_GRAFT_*
-    * env inherited. This is the process-per-query isolation the
-    * decade-rung adjudications kept reaching for: a 48-query suite in
-    * one JVM accumulates heap aging (FixtureCache builds, allocator
-    * fragmentation) that swings single-rep numbers both ways, and no
-    * in-process protocol fully removes it. Cost: one session start-up
-    * (~20 s) per query, so this is the sf>=1 rung tool, not the sf0.1
-    * suite default. The merged artifact matches the normal shape with
-    * an extra `"fork":1` field. */
-  /** Parse one fork-mode child artifact (r21: factored out of
-    * [[forkMain]] so `BenchForkSpec` can feed it synthetic child
-    * outputs — the r19-advice parser bugs were exactly here and the
-    * fix was untested string scraping until this seam existed).
-    * Returns (median sec, per-rep min sec, warm-up sec):
-    *
+  /** Parse one fork-mode child artifact (both JSON lines, in order) into
+    * (median sec, min sec, warm-up sec). Each key is read from the first
+    * line that carries it. Pinned by `BenchForkSpec`:
     *  - A child that catches a per-rep exception still exits 0 but
-    *    reports `"<name>":-1.0` and lists the query in its own
-    *    "failed" array — exit code alone is NOT a pass signal (r19
-    *    advice, high: the old `.filter(_ => exit == 0)` let a
-    *    child-reported failure land in `ok` and subtract 1.0 s from
-    *    `value`).
-    *  - The number regex accepts scientific notation: Scala renders
-    *    doubles < 1e-3 as e.g. 4.9E-4, and a mantissa-only capture
-    *    would have reported 4.9 s for a sub-millisecond query.
-    *  - The child's value_min = min over its reps (single query), so
-    *    the parent's sum matches normal mode's Σ per-query minima —
-    *    the old value_min=value made cross-mode value_min comparisons
-    *    apples-to-oranges (r19 advice). A missing/negative value_min
-    *    falls back to the median, never to a failure. */
-  private[graft] def parseChildArtifact(name: String, line: String,
+    *    reports `-1.0` and lists the query in its own "failed" array, so
+    *    exit code alone is not a pass signal.
+    *  - The per-query number is read INSIDE the "queries" object: a
+    *    query named like a headline key (value, reps, ...) must not bind
+    *    the headline.
+    *  - value_min is the child's min over its reps, so the parent's sum
+    *    matches normal mode's Σ per-query minima. A missing or negative
+    *    value_min falls back to the median, never to a failure.
+    *  - An empty or malformed artifact is a failure with warm-up 0. */
+  private[graft] def parseChildArtifact(name: String, artifact: String,
       exit: Int): (Option[Double], Option[Double], Double) = {
-    val num = """(-?[0-9]+(?:\.[0-9]+)?(?:[Ee][-+]?[0-9]+)?)"""
-    val childFailed = (""""failed":\[([^\]]*)\]""".r)
-      .findFirstMatchIn(line).exists(_.group(1).trim.nonEmpty)
-    // r21 advice: anchor the per-query lookup INSIDE the child's
-    // "queries":{...} object — a query registered under a reserved
-    // artifact key name (value / reps / warmup_sec / sf) would
-    // otherwise bind whichever field appears first in the line.
-    // Fall back to the whole line only when no queries object exists
-    // (malformed/partial child output keeps its r21 parse behavior).
-    val qBlock = (""""queries":\{([^}]*)\}""".r)
-      .findFirstMatchIn(line).map(_.group(1)).getOrElse(line)
-    val sec = (s""""${java.util.regex.Pattern.quote(name)}":$num""".r)
-      .findFirstMatchIn(qBlock).map(_.group(1).toDouble)
+    val lines = Try(Harness.json.readerFor(classOf[JsonNode])
+      .readValues[JsonNode](artifact).readAll().asScala.toSeq).getOrElse(Nil)
+    def field(k: String): Option[JsonNode] =
+      lines.iterator.flatMap(l => Option(l.get(k))).nextOption()
+    def num(n: JsonNode): Option[Double] =
+      Option(n).filter(_.isNumber).map(_.asDouble)
+    val childFailed = field("failed").exists(_.size > 0)
+    val sec = field("queries").flatMap(q => num(q.get(name)))
       .filter(v => exit == 0 && v >= 0 && !childFailed)
-    val secMin = (s""""value_min":$num""".r).findFirstMatchIn(line)
-      .map(_.group(1).toDouble).filter(v => sec.isDefined && v >= 0)
-      .orElse(sec)
-    val warm = (s""""warmup_sec":$num""".r).findFirstMatchIn(line)
-      .map(_.group(1).toDouble).getOrElse(0.0)
-    (sec, secMin, warm)
+    val secMin = field("value_min").flatMap(num)
+      .filter(v => sec.isDefined && v >= 0).orElse(sec)
+    (sec, secMin, field("warmup_sec").flatMap(num).getOrElse(0.0))
   }
 
-  private def forkMain(): Unit = {
-    import scala.jdk.CollectionConverters._
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
-    val names = SparkEntry.queries.keys.toSeq.sorted
-      .filter(n => only.forall(_.contains(n)))
+  /** FORK mode: every query in its OWN JVM — one subprocess per query,
+    * same classpath and --add-opens/-Xmx/-D flags as this process, all
+    * other env inherited. A long suite in one JVM accumulates heap aging
+    * (FixtureCache builds, allocator fragmentation) that swings
+    * single-rep numbers both ways, and no in-process protocol removes
+    * it. Cost: one session start-up (~20 s) per query, so this is the
+    * sf>=1 rung tool, not the sf0.1 default. The merged artifact has the
+    * normal shape plus `"fork":1`, less the in-process-only
+    * `warmup`/`contention_ratio`. */
+  private def forkMain(sfDir: String, names: Seq[String], reps: Int): Unit = {
     val javaBin = System.getProperty("java.home") + "/bin/java"
     val jvmArgs = java.lang.management.ManagementFactory.getRuntimeMXBean
       .getInputArguments.asScala.toSeq
@@ -99,252 +107,110 @@ object Bench {
     val results = names.map { name =>
       val out = java.nio.file.Files.createTempFile("graft_fork_", ".json")
       val log = java.nio.file.Files.createTempFile("graft_fork_", ".log")
-      val cmd = (Seq(javaBin) ++ jvmArgs ++ Seq("-cp", cp, "graft.Bench")).asJava
-      val pb = new ProcessBuilder(cmd)
+      val pb = new ProcessBuilder(
+        (Seq(javaBin) ++ jvmArgs ++ Seq("-cp", cp, "graft.Bench")).asJava)
       pb.environment().put("SPARK_GRAFT_BENCH_ONLY", name)
       pb.environment().put("SPARK_GRAFT_BENCH_OUT", out.toString)
       pb.environment().remove("SPARK_GRAFT_BENCH_FORK")
       pb.redirectErrorStream(true)
       pb.redirectOutput(log.toFile)
       val exit = pb.start().waitFor()
-      // child artifact: line 1 carries queries{}, line 2 warmup_sec
-      val line = scala.util.Try(
-        java.nio.file.Files.readAllLines(out).asScala.mkString(" "))
-        .getOrElse("")
-      val (sec, secMin, warm) = parseChildArtifact(name, line, exit)
+      val artifact = Try(java.nio.file.Files.readString(out)).getOrElse("")
+      val (sec, secMin, warm) = parseChildArtifact(name, artifact, exit)
       java.nio.file.Files.deleteIfExists(out)
       if (sec.isEmpty)
-        System.err.println(s"[bench] fork $name FAILED (exit $exit, " +
-          s"log $log)")
+        System.err.println(s"[bench] fork $name FAILED (exit $exit, log $log)")
       else java.nio.file.Files.deleteIfExists(log)
-      (name, sec, warm, secMin)
+      Result(name, sec, secMin, warm, Nil)
     }
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val ok = results.collect { case (n, Some(s), _, _) => (n, s) }
-    val failed = results.collect { case (n, None, _, _) => "\"" + n + "\"" }
-      .mkString("[", ",", "]")
-    val total = ok.map(_._2).sum
-    val totalMin = results.collect { case (_, Some(_), _, Some(m)) => m }.sum
-    val wallSec = (System.nanoTime() - wall0) / 1e9
-    val warmupSec = results.map(_._3).sum
-    val qs = (ok.sortBy(_._2) ++ results.collect {
-        case (n, None, _, _) => (n, -1.0) }.sortBy(_._1))
-      .sortBy(_._2)
-      .map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
-    val reps = sys.env.get("SPARK_GRAFT_BENCH_REPS").map(_.toInt)
-      .getOrElse(DefaultReps).max(1)
-    val bigLine = s"""{"metric":"total","unit":"sec","sf":"$sfDir","fork":1,"rep_outliers":{},"queries":$qs,"failed":$failed,"value":$total,"value_min":$totalMin,"reps":$reps,"wall_sec":$wallSec}"""
-    val compactLine = s"""{"metric":"total_compact","unit":"sec","fork":1,"value":$total,"value_min":$totalMin,"n_queries":${results.size},"n_failed":${results.count(_._2.isEmpty)},"n_outliers":0,"reps":$reps,"warmup_sec":${"%.1f".formatLocal(java.util.Locale.ROOT, warmupSec)},"wall_sec":$wallSec}"""
-    val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
-      "BENCH_LOCAL.json")
-    try {
-      val w = new java.io.PrintWriter(new java.io.File(outPath), "UTF-8")
-      try { w.println(bigLine); w.println(compactLine) } finally w.close()
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] mirror write failed: ${e.getMessage}") }
-    println(bigLine)
-    println(compactLine)
+    emit(sfDir, results, reps, (System.nanoTime() - wall0) / 1e9, fork = true)(())
   }
 
   def main(args: Array[String]): Unit = {
-    if (sys.env.get("SPARK_GRAFT_BENCH_FORK").exists(_ != "0"))
-      return forkMain()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // SPARK_GRAFT_BENCH_REPS=1 restores single-run timing if a harness
-    // needs the old wall-clock envelope
-    val Reps = sys.env.get("SPARK_GRAFT_BENCH_REPS").map(_.toInt)
+    val reps = sys.env.get("SPARK_GRAFT_BENCH_REPS").map(_.toInt)
       .getOrElse(DefaultReps).max(1)
-    // Initial shuffle width: `spark.sql.shuffle.partitions` is a
-    // CEILING under AQE (coalescing only merges; nothing re-splits an
-    // oversized partition except skew-join handling), so the sf100
-    // decade rung needs a wider initial width or single tasks carry
-    // multi-GB sort/hash working sets and exhaust execution memory —
-    // graph_clustering_coeff/graph_kcore OOMed at width 32 at sf100
-    // and pass at 256. Default stays = cores (the sf<=10 sweet spot);
-    // the sf100 rung sets SPARK_GRAFT_SHUFFLE_PARTITIONS=256 (the
-    // 100-TB discipline: size the INITIAL width for the data, let AQE
-    // coalesce the tail).
-    val shufflePartitions =
-      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-    // SPARK_GRAFT_IO_CODEC (r22, additions-only): shuffle/spill codec
-    // override for the decade rungs — guide §2.3 "compression": zstd
-    // trades CPU for a markedly better shuffle ratio, which is what
-    // un-excludes the sf100 wedge family (graph_triangles et al. died
-    // on shuffle-scratch disk, not plan shape). Default stays lz4 so
-    // the sf0.1 suite and the driver's bench are untouched; the sf100
-    // runs set SPARK_GRAFT_IO_CODEC=zstd (the 100-TB posture per §9).
-    sys.env.get("SPARK_GRAFT_IO_CODEC").filter(_.nonEmpty)
-      .foreach(c => builder.config("spark.io.compression.codec", c))
-    // SPARK_GRAFT_CHECKPOINT_DIR routes every iterative op's lineage
-    // cut through RELIABLE Dataset.checkpoint (Util.IterCheckpoint)
-    // instead of localCheckpoint: local checkpoint blocks live in the
-    // block manager and PIN the protected storage half of the unified
-    // pool — at sf100 the graph family's checkpointed edge/degree
-    // frames squeezed execution memory until aggregation could not
-    // acquire its minimum page (AGGREGATE_OUT_OF_MEMORY). On-disk
-    // checkpoints are also the only cluster-correct posture (executor
-    // loss survivable); the sf<=10 rungs keep the faster local form.
-    sys.env.get("SPARK_GRAFT_CHECKPOINT_DIR").filter(_.nonEmpty)
-      .foreach(d => builder.config(ops.Util.CheckpointDirConf, d))
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Warm-up: touch every table once (file listing, footer reads, codegen
-    // JIT of the scan path) so the alphabetically-first query doesn't
-    // absorb session start-up and skew its number.
-    for (tbl <- Seq("region", "nation", "customer", "supplier", "part",
-        "orders", "lineitem", "events", "documents", "embeddings"))
-      try graft.ops.Util.t(spark, sfDir, tbl).write.format("noop")
-        .mode("overwrite").save()
-      catch { case _: Throwable => () }
-    // SPARK_GRAFT_BENCH_ONLY=q1,q2 times just those queries — for
-    // iterating on one operator without paying the full-suite loop
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
-    // per-query WARM-UP rep, discarded from both median and min
-    // (round-16 verdict #8): the first execution pays codegen JIT,
-    // FixtureCache builds, and broadcast warm-up — folding it into the
-    // median inflated every cold query; folding it into min never
-    // helped (min is only ever reached warm). SPARK_GRAFT_BENCH_WARMUP=0
-    // restores the old envelope.
-    val warmup = sys.env.get("SPARK_GRAFT_BENCH_WARMUP")
-      .forall(_ != "0")
-    // SPARK_GRAFT_BENCH_REWARM=1 (r18 verdict #4): at decade scales
-    // (sf>=1) the suite's own shuffle scratch EVICTS fixture pages, so
-    // queries after a heavy family read cold while earlier ones read
-    // warm — in-suite numbers diverged from isolated re-measures and
-    // BASELINE.md had to hand-annotate them. Re-reading the fixture
-    // bytes before each query's rep block restores the page cache to
-    // the same warm state an isolated run's table-touch warm-up
-    // produces, so in-suite ≈ isolated by construction. Costs one
-    // sequential fixture read per query (outside the timed reps) —
-    // off by default; intended for the sf1/sf10 rungs.
+    val names = SparkEntry.queries.keys.toSeq.sorted
+      .filter(n => only.forall(_.contains(n)))
+    if (sys.env.get("SPARK_GRAFT_BENCH_FORK").exists(_ != "0"))
+      return forkMain(sfDir, names, reps)
+    val spark = Harness.session()
+    Harness.warmTables(spark, sfDir)
     val rewarm = sys.env.get("SPARK_GRAFT_BENCH_REWARM").exists(_ != "0")
     val rewarmBuf = new Array[Byte](1 << 20)
-    def rewarmFixture(): Unit = if (rewarm) {
-      def touch(f: java.io.File): Unit =
-        if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty)
-          .foreach(touch)
-        else {
-          val in = new java.io.FileInputStream(f)
-          try { while (in.read(rewarmBuf) >= 0) () } finally in.close()
-        }
-      try touch(new java.io.File(sfDir))
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] rewarm failed: ${e.getMessage}") }
-    }
+    def touch(f: java.io.File): Unit =
+      if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).foreach(touch)
+      else {
+        val in = new java.io.FileInputStream(f)
+        try { while (in.read(rewarmBuf) >= 0) () } finally in.close()
+      }
     val wall0 = System.nanoTime()
-    val results = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .map { case (name, fn) =>
-      def rep(): Option[Double] = {
-        val t0 = System.nanoTime()
-        try {
-          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-          Some((System.nanoTime() - t0) / 1e9)
-        } catch { case e: Throwable =>
+    val results = names.map { name =>
+      val fn = SparkEntry.queries(name)
+      def rep(): Option[Double] =
+        try Some(Harness.runNoop(fn(spark, sfDir)))
+        catch { case e: Throwable =>
           System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
           None
         }
-      }
-      // warm-up is timed SEPARATELY: it absorbs one-time FixtureCache/
-      // index builds by design, so folding it into the contention
-      // denominator as "one median rep" made a cold quiet host read as
-      // contended (round-17 advice)
-      rewarmFixture()
-      val warmSec = if (warmup) rep().getOrElse(0.0) else 0.0
-      val times = (1 to Reps).flatMap(_ => rep())
-      // any failed rep marks the query failed — a flaky query must not
-      // report the median of its surviving runs as if healthy
-      (name, if (times.length == Reps) median(times) else -1.0,
-        times.length == Reps, times, warmSec)
+      if (rewarm)
+        try touch(new java.io.File(sfDir))
+        catch { case e: Throwable =>
+          System.err.println(s"[bench] rewarm failed: ${e.getMessage}") }
+      val warmSec = rep().getOrElse(0.0)
+      val times = (1 to reps).flatMap(_ => rep())
+      val ok = times.length == reps
+      Result(name, Option.when(ok)(median(times)), Option.when(ok)(times.min),
+        warmSec, times)
     }
-    // min-of-reps companion: for a deterministic batch suite the per-query
-    // MIN is contention-immune (noise only ever inflates a rep, never
-    // deflates it), so total_min is the number to read on a noisy host
-    // (r11 verdict #1: median-of-3 read 191 s under contention while the
-    // quiet-window truth was 86 s).
-    val totalMin = results.filter(_._3)
-      .map { case (_, _, _, ts, _) => ts.min }.sum
-    val wallSec = (System.nanoTime() - wall0) / 1e9
-    // per-query map ordered by median ASCENDING: the driver records only
-    // the TAIL of stdout, so whatever ends the map is what survives the
-    // ~2000-char capture — the slowest queries (the ones a regression
-    // hunt needs) go LAST, right before the headline scalars.
-    // Alphabetical order lost the entire agg_*/dedup_* slow families to
-    // the truncated head every round (r8 verdict #3); failed queries
-    // (-1) sort first because the tail-safe "failed" array re-lists them.
-    val qs = results.sortBy(_._2)
-      .map { case (k, v, ok, _, _) => "\"" + k + "\":" + (if (ok) v else -1.0) }
-      .mkString("{", ",", "}")
-    val failed = results.filterNot(_._3).map("\"" + _._1 + "\"").mkString("[", ",", "]")
-    val total = results.filter(_._3).map(_._2).sum
-    // contended-rep diagnostic (r9 verdict #3: a host-contention window
-    // swallowed whole rep triplets and the artifact couldn't show it):
-    // any query whose reps spread more than 2x gets its RAW rep times
-    // emitted. Quiet host → near-empty; contention → the exact reps are
-    // in the artifact. Leads the JSON so a truncated capture drops this
-    // diagnostic first, never the headline scalars.
-    val spread = results
-      .filter { case (_, _, ok, ts, _) =>
-        ok && ts.nonEmpty && ts.max / math.max(ts.min, 1e-9) > 2.0 }
-      .map { case (k, _, _, ts, _) =>
-        // Locale.ROOT: a comma-decimal default locale would print
-        // 1,357 and corrupt the JSON artifact
-        "\"" + k + "\":" + ts.map(t =>
-          "%.3f".formatLocal(java.util.Locale.ROOT, t)).mkString("[", ",", "]") }
-      .mkString("{", ",", "}")
-    // field order matters: the driver records only the TAIL of stdout,
-    // so the headline scalars (value/reps/wall_sec) come AFTER the
-    // ~3k-char per-query map — a head-truncated capture still carries
-    // the binding total (round-6/7 verdict #4: the old head-first order
-    // made every round's total unrecoverable).
-    val bigLine = s"""{"metric":"total","unit":"sec","sf":"$sfDir","rep_outliers":$spread,"queries":$qs,"failed":$failed,"value":$total,"value_min":$totalMin,"reps":$Reps,"wall_sec":$wallSec}"""
-    val nOutliers = results.count { case (_, _, ok, ts, _) =>
-      ok && ts.nonEmpty && ts.max / math.max(ts.min, 1e-9) > 2.0 }
-    // second, TINY line: the driver's tail capture truncates the big
-    // line's head, leaving it unparseable (r9/r10 artifacts both show
-    // "parsed": null) — this one is <200 chars, sits at the very end of
-    // stdout, and always machine-parses. n_outliers preserves the
-    // contention signal even when the rep_outliers map was truncated
-    // away with the head. value_min is the contention-immune headline.
-    // contention_ratio: whole-loop wall clock over the sum of medians
-    // — a quiet host sits near (warm-up + reps); r15/r16 driver
-    // captures ran at 3.4-4.1x, the contention fingerprint the verdict
-    // had to reconstruct by hand. Reported in BOTH lines so the gate
-    // can discount a noisy capture without re-deriving it.
-    // denominator = what a quiet host would actually spend: Σmedians ×
-    // Reps + the MEASURED warm-up total (the warm-up absorbs one-time
-    // FixtureCache/index builds — charging it as one median rep made a
-    // cold quiet host read spuriously contended; round-17 advice).
-    // warmupSec is also reported as its own field so a cold-cache round
-    // is distinguishable from a contended one in the artifact.
-    val warmupSec = results.map(_._5).sum
-    val contentionRatio =
-      if (total > 0) wallSec / (total * Reps + warmupSec)
-      else -1.0
-    val compactLine = s"""{"metric":"total_compact","unit":"sec","value":$total,"value_min":$totalMin,"n_queries":${results.size},"n_failed":${results.count(!_._3)},"n_outliers":$nOutliers,"reps":$Reps,"warmup":${if (warmup) 1 else 0},"warmup_sec":${"%.1f".formatLocal(java.util.Locale.ROOT, warmupSec)},"contention_ratio":${"%.3f".formatLocal(java.util.Locale.ROOT, contentionRatio)},"wall_sec":$wallSec}"""
-    // mirror the FULL artifact to a file the driver can stage — stdout
-    // tail-capture has truncated the big line every round since r9, so
-    // the file is the only loss-proof channel for the per-query map.
-    val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
-      "BENCH_LOCAL.json")
-    try {
-      val w = new java.io.PrintWriter(new java.io.File(outPath), "UTF-8")
-      try { w.println(bigLine); w.println(compactLine) } finally w.close()
-    } catch { case e: Throwable =>
+    emit(sfDir, results, reps, (System.nanoTime() - wall0) / 1e9,
+      fork = false)(spark.stop())
+  }
+
+  /** Write both artifact lines to the mirror file (the only loss-proof
+    * channel: stdout tail capture truncates the big line), print the big
+    * line, run `beforeCompact`, then print the compact line. */
+  private def emit(sfDir: String, rs: Seq[Result], reps: Int,
+      wallSec: Double, fork: Boolean)(beforeCompact: => Unit): Unit = {
+    // Locale.ROOT: a comma-decimal default locale would print 1,357
+    def fixed(fmt: String, x: Double) =
+      new java.math.BigDecimal(fmt.formatLocal(java.util.Locale.ROOT, x))
+    val ok = rs.filter(_.sec.isDefined)
+    val total = ok.flatMap(_.sec).sum
+    val totalMin = ok.flatMap(_.min).sum
+    val outliers = ok.filter(r =>
+      r.reps.nonEmpty && r.reps.max / math.max(r.reps.min, 1e-9) > 2.0)
+    val warmupSec = rs.map(_.warmSec).sum
+    val forkKey = if (fork) Seq("fork" -> 1) else Nil
+    val big = Seq("metric" -> "total", "unit" -> "sec", "sf" -> sfDir) ++
+      forkKey ++ Seq(
+      "rep_outliers" -> ListMap(outliers.map(r =>
+        r.name -> r.reps.map(fixed("%.3f", _))): _*),
+      "queries" -> ListMap(rs.map(r => r.name -> r.sec.getOrElse(-1.0))
+        .sortBy(_._2): _*),
+      "failed" -> rs.filter(_.sec.isEmpty).map(_.name),
+      "value" -> total, "value_min" -> totalMin, "reps" -> reps,
+      "wall_sec" -> wallSec)
+    val compact = Seq("metric" -> "total_compact", "unit" -> "sec") ++
+      forkKey ++ Seq("value" -> total, "value_min" -> totalMin,
+      "n_queries" -> rs.size, "n_failed" -> (rs.size - ok.size),
+      "n_outliers" -> outliers.size, "reps" -> reps) ++
+      Option.when(!fork)("warmup" -> 1) ++
+      Seq("warmup_sec" -> fixed("%.1f", warmupSec)) ++
+      Option.when(!fork)("contention_ratio" -> fixed("%.3f",
+        if (total > 0) wallSec / (total * reps + warmupSec) else -1.0)) ++
+      Seq("wall_sec" -> wallSec)
+    def line(kv: Seq[(String, Any)]) = Harness.json.writeValueAsString(ListMap(kv: _*))
+    val (bigLine, compactLine) = (line(big), line(compact))
+    val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_LOCAL.json")
+    try java.nio.file.Files.writeString(java.nio.file.Paths.get(outPath),
+      s"$bigLine\n$compactLine\n")
+    catch { case e: Throwable =>
       System.err.println(s"[bench] mirror write to $outPath failed: ${e.getMessage}") }
     println(bigLine)
-    spark.stop()
-    // compact line printed LAST, after spark.stop(), so nothing Spark
-    // writes on shutdown can land between it and sbt's [success] — the
-    // driver's tail capture must end with a parseable line.
+    beforeCompact
     println(compactLine)
   }
 }

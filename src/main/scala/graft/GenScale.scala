@@ -1,16 +1,15 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Dev tooling: synthesize a larger-scale fixture by key-shifted
-  * replication of the (read-only) driver fixture — the sf1 rung the
-  * round-14 verdict asked for, used to measure PER-QUERY SCALING
-  * EXPONENTS (a query scaling worse than ~linear between sf0.1 and
-  * sf1 is a hidden scale bug the sub-second fixture timings can't
-  * show). NOT part of the correctness gate: the driver's oracle runs
-  * only against `/root/testdata` (which must never be modified — this
-  * writes under the repo).
+  * replication of a source fixture, in a [[Harness.session]] — the
+  * decade rungs (sf1, sf10, ...) used to measure PER-QUERY SCALING
+  * EXPONENTS (a query scaling worse than ~linear between rungs is a
+  * hidden scale bug the sub-second fixture timings can't show). NOT
+  * part of the correctness gate: the oracle runs only against the
+  * source fixtures, which this never modifies.
   *
   * Replication recipe (factor F copies of the source scale):
   *  - `region`/`nation`: fixed dimensions, copied once (TPC-H keeps
@@ -28,16 +27,16 @@ import org.apache.spark.sql.functions._
   *  - `embeddings`: copy i perturbs the last coordinate by i·2⁻¹⁰ so
   *    vectors are distinct but the space's geometry is unchanged.
   *
-  * ADVERSARIAL-SHAPE MODE (round-18 verdict #7): a trailing `zipf`
-  * arg plants ONE MEGA-KEY owning ~1% of rows in each fact relation
-  * (lineitem's supplier+part keys, events' user, orders' customer) —
-  * the skew the salted-join/bucket-cap/degree-orientation plans are
-  * designed for but which the TPC-H-uniform fixture never exercises.
-  * Row selection is a deterministic hash of the row's own keys, so
-  * the skewed fixture is reproducible; key 0 is the mega-key (it
-  * exists at every scale). The uniform fixtures are untouched — the
-  * oracle gate runs only against them. Salted-vs-naive superiority on
-  * this shape is pinned in `SkewSpec`.
+  * ADVERSARIAL-SHAPE MODE: a trailing `zipf` arg plants ONE MEGA-KEY
+  * owning ~1% of rows in each fact relation (lineitem's supplier+part
+  * keys, events' user, orders' customer) — the skew the
+  * salted-join/bucket-cap/degree-orientation plans are designed for
+  * but which the TPC-H-uniform fixture never exercises. Row selection
+  * is a deterministic hash of the row's own keys, so the skewed fixture
+  * is reproducible; key 0 is the mega-key (it exists at every scale).
+  * The uniform fixtures are untouched — the oracle gate runs only
+  * against them. Salted-vs-naive superiority on this shape is pinned in
+  * `SkewSpec`.
   *
   * Usage: `sbt "runMain graft.GenScale <srcDir> <outDir> <factor> [zipf]"`.
   */
@@ -47,13 +46,7 @@ object GenScale {
     val zipf = args.length > 3 && args(3).equalsIgnoreCase("zipf")
     val factor = factorS.toInt
     require(factor >= 1, s"factor must be >= 1, got $factor")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
 
     def table(name: String): DataFrame = ops.Util.t(spark, src, name)
 

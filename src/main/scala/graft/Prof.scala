@@ -1,24 +1,28 @@
 package graft
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.ExplainMode
 import scala.collection.mutable
 
-/** Dev profiling main (r21 optimization round): run named registered
-  * queries exactly as [[Bench]] does (same session shape, same noop
-  * sink) with a SparkListener attached, and print a per-execution
-  * breakdown — jobs, stages, task counts, per-stage wall time and
-  * shuffle bytes — so optimization work targets the measured cost, not
-  * a guess (optimization guide §1).
+/** Dev profiling main: runs named registered queries exactly as [[Bench]]
+  * does ([[Harness.session]], [[Harness.warmTables]], one uncounted
+  * warm-up rep, then timed [[Harness.runNoop]] reps) with a
+  * SparkListener attached, so optimization work targets the measured
+  * cost, not a guess. After the last rep of each query it prints:
+  *  - the stage report: jobs, stages, task counts, per-stage wall time,
+  *    input and shuffle bytes;
+  *  - one row per job (ms, job description) — operators that label
+  *    their rounds via `setJobDescription` get per-round cost here;
+  *  - the query's `explain("formatted")` plan;
+  *  - every rep's seconds and their min.
   *
   * Usage: `runMain graft.Prof <sfDir> <reps> q1 [q2 ...]`
   */
 object Prof {
   private class L extends SparkListener {
     case class St(name: String, tasks: Int, ms: Long, shufR: Long,
-      shufW: Long, input: Long, out: Long)
+      shufW: Long, input: Long)
     val stages = mutable.ArrayBuffer[St]()
-    val jobMs = mutable.ArrayBuffer[Long]()
     val jobRows = mutable.ArrayBuffer[(Long, String)]()
     private val jobStart = mutable.Map[Int, (Long, String)]()
     override def onJobStart(j: SparkListenerJobStart): Unit =
@@ -27,7 +31,6 @@ object Prof {
         .getOrElse(""))
     override def onJobEnd(j: SparkListenerJobEnd): Unit =
       jobStart.remove(j.jobId).foreach { case (t0, desc) =>
-        jobMs += (j.time - t0)
         jobRows += ((j.time - t0, desc))
       }
     override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
@@ -36,82 +39,38 @@ object Prof {
       stages += St(i.name.takeWhile(_ != '\n'), i.numTasks,
         i.completionTime.getOrElse(0L) - i.submissionTime.getOrElse(0L),
         m.shuffleReadMetrics.totalBytesRead, m.shuffleWriteMetrics.bytesWritten,
-        m.inputMetrics.bytesRead, m.outputMetrics.bytesWritten)
+        m.inputMetrics.bytesRead)
     }
-    def reset(): Unit = {
-      stages.clear(); jobMs.clear(); jobRows.clear(); jobStart.clear()
-    }
-    /** Per-job (ms, description) rows — the r22 peel-round view:
-      * operators that label rounds via setJobDescription (guide §1.5)
-      * get their per-round cost attributed here. */
-    def jobReport(): String = jobRows.zipWithIndex.map {
-      case ((ms, desc), i) => f"    job$i%-3d ${ms}%6dms  ${desc}%.60s"
-    }.mkString("\n")
+    def reset(): Unit = { stages.clear(); jobRows.clear(); jobStart.clear() }
     def report(): String = {
-      val head = f"jobs=${jobMs.size} stages=${stages.size} " +
-        f"tasks=${stages.map(_.tasks).sum} stageMs=${stages.map(_.ms).sum} " +
-        f"jobMs=${jobMs.sum}"
+      val head = s"jobs=${jobRows.size} stages=${stages.size} " +
+        s"tasks=${stages.map(_.tasks).sum} stageMs=${stages.map(_.ms).sum} " +
+        s"jobMs=${jobRows.map(_._1).sum}"
       val rows = stages.map(s =>
         f"    ${s.ms}%6dms t=${s.tasks}%3d in=${s.input / 1024}%8dK " +
         f"sr=${s.shufR / 1024}%7dK sw=${s.shufW / 1024}%7dK  ${s.name}%.70s")
-      (head +: rows).mkString("\n")
+      val jobs = jobRows.zipWithIndex.map { case ((ms, desc), i) =>
+        f"    job$i%-3d ${ms}%6dms  ${desc}%.60s" }
+      (head +: (rows ++ jobs)).mkString("\n")
     }
   }
 
   def main(args: Array[String]): Unit = {
-    val sfDir = args(0)
-    val reps = args(1).toInt
-    val names = args.drop(2).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-    sys.env.get("SPARK_GRAFT_CHECKPOINT_DIR").filter(_.nonEmpty)
-      .foreach(d => builder.config(ops.Util.CheckpointDirConf, d))
-    // mirror Bench's r22 codec knob so A/B runs see the same session
-    sys.env.get("SPARK_GRAFT_IO_CODEC").filter(_.nonEmpty)
-      .foreach(c => builder.config("spark.io.compression.codec", c))
-    // experiment hook: SPARK_GRAFT_EXTRA_CONFS="k=v;k=v" for A/B-ing
-    // session confs before promoting one into Bench
-    sys.env.get("SPARK_GRAFT_EXTRA_CONFS").toSeq
-      .flatMap(_.split(';')).map(_.trim).filter(_.contains("="))
-      .foreach { kv =>
-        val Array(k, v) = kv.split("=", 2)
-        builder.config(k, v)
-      }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val (sfDir, reps, names) = (args(0), args(1).toInt, args.drop(2).toSeq)
+    val spark = Harness.session()
     val l = new L
     spark.sparkContext.addSparkListener(l)
-    for (tbl <- Seq("region", "nation", "customer", "supplier", "part",
-        "orders", "lineitem", "events", "documents", "embeddings"))
-      try graft.ops.Util.t(spark, sfDir, tbl).write.format("noop")
-        .mode("overwrite").save()
-      catch { case scala.util.control.NonFatal(e) =>
-        // r21 advice: never swallow fatal errors (OOM/linkage) here —
-        // only the expected missing-table case, named for the log
-        System.err.println(s"[prof] warm-up skip $tbl: ${e.getMessage}")
-      }
+    Harness.warmTables(spark, sfDir)
     for (n <- names) {
       val fn = SparkEntry.queries(n)
-      // warm-up rep (uncounted): FixtureCache builds, codegen JIT
-      fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      val times = (1 to reps).map { r =>
+      Harness.runNoop(fn(spark, sfDir)) // warm-up: FixtureCache builds, JIT
+      val times = (1 to reps).map { _ =>
         Thread.sleep(50); l.reset()
-        val t0 = System.nanoTime()
-        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        val sec = (System.nanoTime() - t0) / 1e9
-        if (r == reps) {
-          println(s"[prof] $n rep$r ${f"$sec%.3f"}s\n" + l.report())
-          if (sys.env.get("SPARK_GRAFT_PROF_JOBS").exists(_ != "0"))
-            println(l.jobReport())
-        }
-        sec
+        Harness.runNoop(fn(spark, sfDir))
       }
+      println(f"[prof] $n rep$reps ${times.last}%.3fs\n" + l.report())
+      println(fn(spark, sfDir).queryExecution
+        .explainString(ExplainMode.fromString("formatted")))
       println(f"[prof] $n reps=${times.map(t => f"$t%.3f").mkString(",")} " +
         f"min=${times.min}%.3f")
     }

@@ -1,19 +1,33 @@
 package graft
-import org.apache.spark.sql.SparkSession
+
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+import scala.collection.immutable.ListMap
+
+/** Correctness dump, run in a [[Harness.session]]: each
+  * `SparkEntry.queries` result → `<outDir>/<name>/` parquet, plus the
+  * JSON records `tools/check.py` gates on:
+  *  - `oracle_sql.json`: query name → DuckDB oracle SQL;
+  *  - `pinned.json`: the rows-only queries' binding contracts (recall
+  *    floors, sketch error bounds, ground-truth parity) re-derived
+  *    against this fixture ([[ops.Pinned]]);
+  *  - `streaming.json`: the streaming/source components run to
+  *    completion and compared row for row with their batch twins
+  *    ([[ops.StreamingPinned]]).
+  *
+  * Usage: `runMain graft.Verify <sfDir> <outDir> [q1,q2,...]`. The
+  * optional filter dumps just those queries (`tools/check.py` takes the
+  * same subset as trailing args); `__streaming__` in it runs the
+  * streaming battery alone. `SPARK_GRAFT_SKIP_PINNED=1` and
+  * `SPARK_GRAFT_SKIP_STREAMING=1` skip those records. A record that is
+  * not written this run is deleted, so `check.py` never gates on a
+  * stale one from an earlier fixture or build.
+  */
 object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
-    // optional 3rd arg: comma-separated query-name filter (dev loop —
-    // dump just the queries under iteration; tools/check.py takes the
-    // same subset as trailing args)
     val rawOnly = args.drop(2).headOption
       .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
       .filter(_.nonEmpty) // blank filter arg = no filter, never "none"
-    // "__streaming__" in the filter = dev loop for the streaming
-    // battery alone: no query dumps, no pins, just streaming.json
     val streamingOnly = rawOnly.exists(_.contains("__streaming__"))
     val only = rawOnly.map(_ - "__streaming__").filter(_.nonEmpty)
     only.foreach { names =>
@@ -21,16 +35,15 @@ object Verify {
       require(unknown.isEmpty,
         s"unknown query name(s) in filter: ${unknown.toSeq.sorted.mkString(",")}")
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     new java.io.File(outDir).mkdirs()
+    def record(name: String, value: Option[Any]): Unit = {
+      val path = Paths.get(s"$outDir/$name.json")
+      value match {
+        case Some(v) => Harness.json.writeValue(path.toFile, v)
+        case None => Files.deleteIfExists(path)
+      }
+    }
     SparkEntry.queries
       .filter { case _ if streamingOnly && only.isEmpty => false
         case (name, _) => only.forall(_.contains(name)) }
@@ -41,85 +54,37 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    // streaming-only dev loop: no dumps were written, so no oracle
-    // manifest either (check.py would otherwise fail every query as
-    // missing); a stale manifest from an earlier full run is removed
-    if (streamingOnly && only.isEmpty)
-      Files.deleteIfExists(Paths.get(s"$outDir/oracle_sql.json"))
-    else {
-      val json = SparkEntry.oracleSql
-        .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-      Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    }
-    // PINNED metrics for the rows-only queries (round-18 verdict #8):
-    // the no-oracle entries' binding contracts — recall floors, sketch
-    // error bounds, ground-truth parity — re-derived against this
-    // fixture and emitted machine-checkably next to the dumps, so the
-    // correctness artifact carries the pinned check, not just a row
-    // count. SPARK_GRAFT_SKIP_PINNED=1 skips (subset dev loops).
+    // a streaming-only run dumps nothing, so it writes no oracle
+    // manifest either (check.py would fail every query as missing)
+    record("oracle_sql", Option.when(!(streamingOnly && only.isEmpty))(
+      SparkEntry.oracleSql))
     val skipPinned = streamingOnly ||
       sys.env.get("SPARK_GRAFT_SKIP_PINNED").exists(_ != "0")
     val rowsOnly = SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet
     val wanted = only.fold(rowsOnly)(rowsOnly.intersect)
-    // stale-artifact guard (r19 advice): when pins DON'T run, any
-    // pinned.json left in outDir is from an earlier fixture/build — a
-    // subset re-run must not let check.py gate on it.
-    if (skipPinned || wanted.isEmpty)
-      Files.deleteIfExists(Paths.get(s"$outDir/pinned.json"))
-    if (!skipPinned && wanted.nonEmpty) {
-      // wanted is passed INTO Pinned.all so only the requested
-      // queries' pin thunks execute (the subset fast path).
+    record("pinned", Option.when(!skipPinned && wanted.nonEmpty) {
+      // wanted goes INTO Pinned.all so only those queries' pins execute
       val pins = ops.Pinned.all(spark, sfDir, Some(wanted))
         .filter(p => wanted.contains(p.query))
-      val pj = pins.groupBy(_.query).toSeq.sortBy(_._1).map {
-        case (name, ps) =>
-          s"${q(name)}: [" + ps.map(p =>
-            s"""{"metric":${q(p.metric)},"value":${p.value},""" +
-              s""""bound":${p.bound},"op":${q(p.op)},"pass":${p.pass}}""")
-            .mkString(",") + "]"
-      }.mkString("{", ",", "}")
-      Files.writeString(Paths.get(s"$outDir/pinned.json"), pj)
-      val nFail = pins.count(!_.pass)
       System.err.println(
-        s"[verify] pinned: ${pins.size} checks, $nFail fail")
-    }
-    // STREAMING batch-equivalence records (round-19 verdict #4): the
-    // 22 streaming/source-capability components of SURVEY §2.2 whose
-    // proofs lived only inside `sbt test` — re-run Verify-side via
-    // graft.ops.StreamingPinned and emitted as streaming.json so the
-    // driver artifact lists them machine-checkably. Full runs only
-    // (a subset dev loop shouldn't pay the ~2-min battery); the
-    // stale-artifact guard mirrors pinned.json's.
+        s"[verify] pinned: ${pins.size} checks, ${pins.count(!_.pass)} fail")
+      ListMap(pins.groupBy(_.query).toSeq.sortBy(_._1).map { case (name, ps) =>
+        name -> ps.map(p => ListMap("metric" -> p.metric, "value" -> p.value,
+          "bound" -> p.bound, "op" -> p.op, "pass" -> p.pass))
+      }: _*)
+    })
+    // full runs only: a subset dev loop shouldn't pay the ~2-min battery
     val skipStreaming =
-      sys.env.get("SPARK_GRAFT_SKIP_STREAMING").exists(_ != "0")
-    if (skipStreaming || (only.nonEmpty && !streamingOnly))
-      Files.deleteIfExists(Paths.get(s"$outDir/streaming.json"))
-    else {
+      sys.env.get("SPARK_GRAFT_SKIP_STREAMING").exists(_ != "0") ||
+        (only.nonEmpty && !streamingOnly)
+    record("streaming", Option.when(!skipStreaming) {
       val scs = ops.StreamingPinned.all(spark, sfDir)
-      val sj = scs.map { c =>
-        val id = c.component.split(' ').head
-        s"${q(id)}: {" +
-          s""""component":${q(c.component)},"impl":${q(c.impl)},""" +
-          s""""twin":${q(c.twin)},"rows_compared":${c.rows},""" +
-          s""""match":${c.matches},"note":${q(c.note)}}"""
-      }.mkString("{", ",", "}")
-      Files.writeString(Paths.get(s"$outDir/streaming.json"), sj)
-      val nFail = scs.count(!_.matches)
       System.err.println(
-        s"[verify] streaming: ${scs.size} checks, $nFail fail")
-    }
+        s"[verify] streaming: ${scs.size} checks, ${scs.count(!_.matches)} fail")
+      ListMap(scs.map(c => c.component.split(' ').head -> ListMap(
+        "component" -> c.component, "impl" -> c.impl, "twin" -> c.twin,
+        "rows_compared" -> c.rows, "match" -> c.matches, "note" -> c.note)): _*)
+    })
     spark.stop()
   }
 }

@@ -384,17 +384,10 @@ object AnnHnsw {
     *
     * `queries` carries (`qid`, `qvec`); returns (qid, rk, neighbor,
     * score) — top-k per query, self-matches excluded, 6-dp rounded,
-    * fully tie-broken.
-    *
-    * NOTE (r21 advice, documented contract): since the r21 corpus-join
-    * removal, batch scoring reads candidate vectors EXCLUSIVELY from
-    * the committed index layout (`dstvec` on every edge, `entryvec` on
-    * the entry row) — the `nodes`/`idCol`/`vecCol` parameters no
-    * longer influence scoring and are retained only for signature
-    * stability with the corpus-probing callers/specs; passing a
-    * different corpus frame here does NOT change results. */
+    * fully tie-broken. Candidate vectors come EXCLUSIVELY from the
+    * committed index layout (`dstvec` on every edge, `entryvec` on the
+    * entry row), never from the corpus. */
   def searchTopKBatch(spark: SparkSession, indexDir: String,
-      nodes: DataFrame, idCol: String, vecCol: String,
       queries: DataFrame, k: Int): DataFrame = {
     // committed dirs are immutable (content-keyed FixtureCache), so the
     // resolved file index is reusable — a fresh spark.read.parquet on

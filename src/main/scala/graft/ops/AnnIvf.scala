@@ -1,6 +1,5 @@
 package graft.ops
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.ml.clustering.{KMeans, KMeansModel}
 import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -145,55 +144,30 @@ object AnnIvf {
     * ([[ivfTopK]]). Round-trip identity is pinned in `AnnIvfSpec`. */
   def loadCodebook(path: String): KMeansModel = KMeansModel.load(path)
 
-  /** Deterministic per-fixture cache dir for [[ensureIndex]] — keyed
+  private val IndexName = "ivf_index_v1"
+
+  /** Deterministic per-fixture cache dir of [[ensureIndex]] — keyed
     * by the source path AND the source parquet's content identity
     * ([[FixtureCache.contentKey]]), so a fixture regenerated in place
     * gets a fresh index instead of stale cell assignments. */
   def indexCacheDir(spark: SparkSession, sourceDir: String): String =
     FixtureCache.cacheDir(spark.sessionState.newHadoopConf(),
-      "ivf_index_v1", sourceDir, Seq(s"$sourceDir.parquet"))
+      IndexName, sourceDir, Seq(s"$sourceDir.parquet"))
 
-  /** Build-once index bootstrap: if `cacheDir` holds a completed index,
-    * load its codebook; otherwise fit the sampled codebook, persist it,
-    * write the cell-partitioned assignment table — all into a unique
-    * `.tmp_` staging sibling with the marker written LAST, then one
-    * atomic whole-dir rename into place (the [[FixtureCache]] commit
-    * discipline: a crashed build is rebuilt, a cross-process racing
-    * build is discarded in favor of the winner's committed copy, and
-    * half-written interleaved indexes are structurally impossible).
-    * Returns the model; the assignment table is `assignedPath(cacheDir)`.
-    * All FS access goes through the Hadoop `FileSystem` of the session,
-    * so the cache root may be any executor-visible FS, not just the
-    * driver's local disk. */
+  /** Build-once index bootstrap through [[FixtureCache.ensure]] (crashed
+    * builds rebuilt, racing builds resolved to one committed copy): on a
+    * miss, fit the sampled codebook, persist it and write the
+    * cell-partitioned assignment table. Returns the committed dir
+    * ([[indexCacheDir]]); the model is `loadCodebook(codebookPath(dir))`,
+    * the assignment table `assignedPath(dir)`. */
   def ensureIndex(spark: SparkSession, df: DataFrame, idCol: String,
-      vecCol: String, cacheDir: String,
-      sampleFraction: Double = FitSampleFraction): KMeansModel =
-    AnnIvf.synchronized {
-      val dst = new Path(cacheDir)
-      val fs = dst.getFileSystem(spark.sessionState.newHadoopConf())
-      val marker = new Path(dst, "_GRAFT_INDEX_READY")
-      if (fs.exists(marker)) loadCodebook(codebookPath(cacheDir))
-      else {
-        // dst without a marker is debris from a crashed pre-commit build
-        if (fs.exists(dst)) { fs.delete(dst, true); () }
-        val tmp = new Path(
-          cacheDir + ".tmp_" + java.util.UUID.randomUUID().toString.take(8))
-        val model = codebook(df, vecCol, sampleFraction)
-        saveCodebook(model, codebookPath(tmp.toString))
-        buildIndex(df, idCol, vecCol, model, assignedPath(tmp.toString))
-        fs.create(new Path(tmp, "_GRAFT_INDEX_READY"), true).close()
-        val renamed = if (!fs.exists(dst)) fs.rename(tmp, dst) else false
-        if (!renamed) { fs.delete(tmp, true); () }
-        // a concurrent committer may have landed between our exists
-        // check and our rename, nesting ours under theirs — undo
-        val nested = new Path(dst, tmp.getName)
-        if (fs.exists(nested)) { fs.delete(nested, true); () }
-        if (!fs.exists(marker))
-          throw new IllegalStateException(
-            s"IVF index commit failed for $cacheDir (no committed copy)")
-        // serve the COMMITTED copy (ours, or the race winner's)
-        loadCodebook(codebookPath(cacheDir))
-      }
+      vecCol: String, sourceDir: String,
+      sampleFraction: Double = FitSampleFraction): String =
+    FixtureCache.ensure(spark, IndexName, sourceDir,
+      Seq(s"$sourceDir.parquet")) { staging =>
+      val model = codebook(df, vecCol, sampleFraction)
+      saveCodebook(model, codebookPath(staging))
+      buildIndex(df, idCol, vecCol, model, assignedPath(staging))
     }
 
   def codebookPath(cacheDir: String): String = s"$cacheDir/codebook"

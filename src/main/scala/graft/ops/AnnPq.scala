@@ -223,8 +223,8 @@ object AnnPq {
   def ensureIvfPqIndex(spark: SparkSession, df: DataFrame, idCol: String,
       vecCol: String, sourceDir: String, dim: Int)
       : (String, Codebooks, org.apache.spark.ml.clustering.KMeansModel) = {
-    val ivfDir = AnnIvf.indexCacheDir(spark, sourceDir)
-    val model = AnnIvf.ensureIndex(spark, df, idCol, vecCol, ivfDir)
+    val ivfDir = AnnIvf.ensureIndex(spark, df, idCol, vecCol, sourceDir)
+    val model = AnnIvf.loadCodebook(AnnIvf.codebookPath(ivfDir))
     val pqDir = ensureIndex(spark, df, idCol, vecCol, sourceDir, dim)
     val books = loadCodebooks(spark, s"$pqDir/codebook")
     // the name versions BOTH upstream geometries: a changed coarse

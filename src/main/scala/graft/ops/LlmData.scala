@@ -1467,8 +1467,9 @@ object LlmData {
     * `AnnIvfSpec`; partition pruning pinned in `PlanAuditSpec`. */
   def simIvfTopk(spark: SparkSession, sfDir: String): DataFrame = {
     val df = t(spark, sfDir, "embeddings")
-    val cacheDir = AnnIvf.indexCacheDir(spark, s"$sfDir/embeddings")
-    val model = AnnIvf.ensureIndex(spark, df, "vec_id", "embedding", cacheDir)
+    val cacheDir = AnnIvf.ensureIndex(spark, df, "vec_id", "embedding",
+      s"$sfDir/embeddings")
+    val model = AnnIvf.loadCodebook(AnnIvf.codebookPath(cacheDir))
     // single-row bounded lookup of the query vector (documented pattern)
     val qVec = df.filter(col("vec_id") === 0L)
       .select(col("embedding")).head().getSeq[Float](0)
@@ -1538,8 +1539,8 @@ object LlmData {
     * recall caveat pinned in `LlmDataSpec`. */
   def contaminationEmbedding(spark: SparkSession, sfDir: String): DataFrame = {
     val df = t(spark, sfDir, "embeddings")
-    val cacheDir = AnnIvf.indexCacheDir(spark, s"$sfDir/embeddings")
-    AnnIvf.ensureIndex(spark, df, "vec_id", "embedding", cacheDir)
+    val cacheDir = AnnIvf.ensureIndex(spark, df, "vec_id", "embedding",
+      s"$sfDir/embeddings")
     val assigned = spark.read.parquet(AnnIvf.assignedPath(cacheDir))
       .select(col("vec_id"), col("embedding"), col("cell"))
     embeddingContaminationScreen(
@@ -1680,8 +1681,7 @@ object LlmData {
       s"$sfDir/embeddings")
     val queries = df.filter(col("vec_id") % 97 === 0)
       .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-    AnnHnsw.searchTopKBatch(spark, dir, df, "vec_id", "embedding",
-      queries, 5)
+    AnnHnsw.searchTopKBatch(spark, dir, queries, 5)
   }
 
   /** K89: INCREMENTAL HNSW maintenance (round-17 verdict #8) — the
@@ -1702,8 +1702,7 @@ object LlmData {
       df.filter(isNew), "vec_id", "embedding", s"$sfDir/embeddings")
     val queries = df.filter(col("vec_id") % 97 === 0)
       .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-    AnnHnsw.searchTopKBatch(spark, dir, df, "vec_id", "embedding",
-      queries, 5)
+    AnnHnsw.searchTopKBatch(spark, dir, queries, 5)
   }
 
   /** Embedding-space near-duplicate detection via sign-LSH buckets +
@@ -1730,8 +1729,8 @@ object LlmData {
     * in `SemDedupSpec`. See [[SemDedup]] for the scale story. */
   def dedupSemantic(spark: SparkSession, sfDir: String): DataFrame = {
     val df = t(spark, sfDir, "embeddings")
-    val cacheDir = AnnIvf.indexCacheDir(spark, s"$sfDir/embeddings")
-    AnnIvf.ensureIndex(spark, df, "vec_id", "embedding", cacheDir)
+    val cacheDir = AnnIvf.ensureIndex(spark, df, "vec_id", "embedding",
+      s"$sfDir/embeddings")
     SemDedup.dedup(
       spark.read.parquet(AnnIvf.assignedPath(cacheDir)),
       "vec_id", "embedding")

@@ -76,12 +76,20 @@ class AnnIvfSpec extends SparkTestBase {
     val copy = q.map(_ * 1.0003f)
     val df = vecsDf(Seq(0L -> q.toSeq, 1L -> copy.toSeq) ++
       vs.tail.zipWithIndex.map { case (v, i) => (10L + i) -> v })
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivf_ens_").toString + "/cache"
-    val m1 = AnnIvf.ensureIndex(spark, df, "vec_id", "embedding", dir, 1.0)
-    // second call must load, not refit: marker file exists and the
-    // loaded model answers identically through the materialized table
-    val m2 = AnnIvf.ensureIndex(spark, df, "vec_id", "embedding", dir, 1.0)
-    assert(new java.io.File(dir, "_GRAFT_INDEX_READY").exists())
+    // the cache is anchored at a source dir whose parquet is its content
+    val src = java.nio.file.Files.createTempDirectory("graft_ivf_ens_").toString + "/emb"
+    df.write.parquet(s"$src.parquet")
+    val dir = AnnIvf.ensureIndex(spark, df, "vec_id", "embedding", src, 1.0)
+    assert(dir == AnnIvf.indexCacheDir(spark, src))
+    assert(new java.io.File(dir, graft.ops.FixtureCache.Marker).exists())
+    val m1 = AnnIvf.loadCodebook(AnnIvf.codebookPath(dir))
+    // second call must be served from the marker, never refit: any
+    // execution of this frame raises
+    val poisoned = df.filter(
+      org.apache.spark.sql.functions.raise_error(
+        org.apache.spark.sql.functions.lit("index rebuilt")).isNull)
+    assert(AnnIvf.ensureIndex(spark, poisoned, "vec_id", "embedding", src, 1.0) == dir)
+    val m2 = AnnIvf.loadCodebook(AnnIvf.codebookPath(dir))
     val top = AnnIvf.probeIndex(spark, AnnIvf.assignedPath(dir),
       "vec_id", "embedding", q, 5, m2, excludeId = Some(0L)).collect()
     assert(top.head.getLong(0) == 1L, "planted near-copy must rank first")

@@ -117,8 +117,7 @@ class AnnNswSpec extends SparkTestBase {
     val qids = Seq(0L, 97L, 194L, 291L)
     val queries = df.filter(col("vec_id").isin(qids: _*))
       .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-    val batch = AnnHnsw.searchTopKBatch(spark, dir, df, "vec_id",
-        "embedding", queries, 5)
+    val batch = AnnHnsw.searchTopKBatch(spark, dir, queries, 5)
       .collect()
       .groupBy(_.getLong(0))
       .map { case (q, rows) =>

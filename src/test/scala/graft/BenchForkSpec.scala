@@ -74,4 +74,14 @@ class BenchForkSpec extends AnyFunSuite {
     assert(sec === Some(2.5))
     assert(secMin === Some(2.5))
   }
+
+  test("a query named like a headline key reads its own per-query value") {
+    val line = """{"metric":"total","unit":"sec","sf":"x","rep_outliers":{},""" +
+      """"queries":{"value":2.5},"failed":[],"value":9.0,"reps":3,""" +
+      """"wall_sec":9.9} {"metric":"total_compact","unit":"sec",""" +
+      """"value":9.0,"warmup_sec":12.5,"wall_sec":9.9}"""
+    val (sec, secMin, _) = Bench.parseChildArtifact("value", line, exit = 0)
+    assert(sec === Some(2.5))
+    assert(secMin === Some(2.5))
+  }
 }

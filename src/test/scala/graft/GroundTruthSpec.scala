@@ -343,8 +343,9 @@ class GroundTruthSpec extends SparkTestBase {
     // a lucky floor. Record the default, then pin the curve:
     import graft.ops.AnnIvf
     val df = graft.ops.Util.t(spark, dir, "embeddings")
-    val cache = AnnIvf.indexCacheDir(spark, s"$dir/embeddings")
-    val model = AnnIvf.ensureIndex(spark, df, "vec_id", "embedding", cache)
+    val cache = AnnIvf.ensureIndex(spark, df, "vec_id", "embedding",
+      s"$dir/embeddings")
+    val model = AnnIvf.loadCodebook(AnnIvf.codebookPath(cache))
     val qVec = df.filter(org.apache.spark.sql.functions.col("vec_id") === 0L)
       .select("embedding").head().getSeq[Float](0)
     def recallAt(probes: Int): Double = {

@@ -1,9 +1,9 @@
 #!/bin/bash
 # Run a graft main class with the compiled classes + Spark jars.
 CP="/root/repo/target/scala-2.13/classes:/opt/spark/jars/*"
-# GRAFT_XMX overrides the child heap (the sf100 remediation dial —
-# one fork child at a time owns the 125 GB host).
-exec java -Xmx${GRAFT_XMX:-48g} \
+# SPARK_DRIVER_MEM sets the heap, as it does for sbt runs (build.sbt);
+# fork-mode children inherit it.
+exec java -Xmx${SPARK_DRIVER_MEM:-8g} \
   --add-opens=java.base/java.lang=ALL-UNNAMED \
   --add-opens=java.base/java.lang.invoke=ALL-UNNAMED \
   --add-opens=java.base/java.lang.reflect=ALL-UNNAMED \
