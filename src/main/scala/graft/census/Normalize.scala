@@ -2,16 +2,16 @@ package graft.census
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, StringType}
+import org.apache.spark.sql.types.StringType
+import graft.functions.CleanDecimal
 
 /** The reference's data-processing semantics (SURVEY.md §2.1 R5-R11,
   * R20-R23), re-expressed as pure DataFrame→DataFrame transforms.
   *
   * Each function cites the behavior it reproduces from
   * `/root/reference/Test_census_tract.py` / `test_final_zcta.py`.
-  * All transforms are narrow (no shuffle) except [[sortLikeWarehouse]],
-  * which mirrors the Redshift SORTKEY with a range repartition — the
-  * correct cluster-scale layout for a sorted bulk load.
+  * All transforms are narrow: none shuffles. [[sortLikeWarehouse]]
+  * mirrors the Redshift SORTKEY as one partition sorted in place.
   */
 object Normalize {
 
@@ -38,10 +38,6 @@ object Normalize {
     * nor geo/identity — the reference logs a warning for these. */
   def unmappedColumns(df: DataFrame, mapping: Map[String, String]): Set[String] =
     df.columns.map(normalizeHeader).toSet -- mapping.keySet -- Mapping.geoColumns
-
-  /** R4 (`Test_census_tract.py:169`): append a constant state_fips column. */
-  def withStateFips(df: DataFrame, fips: String): DataFrame =
-    df.withColumn("state_fips", lit(fips))
 
   /** R5 (`Test_census_tract.py:171-172`): NULL-fill expected-but-absent
     * columns, then R6 (`:174-175`): expected columns first in declared
@@ -73,40 +69,44 @@ object Normalize {
   def unionByNameAll(dfs: Seq[DataFrame]): DataFrame =
     dfs.reduce(_.unionByName(_, allowMissingColumns = true))
 
-  /** R22 + §1.2: `EMPTYASNULL BLANKSASNULL` — blank/empty strings → NULL. */
-  def blanksAsNull(c: Column): Column =
-    when(trim(c) === "", lit(null).cast(StringType)).otherwise(c)
+  /** Census suppressed-value sentinels are ≤ -6e8 (§1.2), e.g.
+    * -666666666. */
+  final val SentinelCeiling = -600000000L
 
-  /** §1.2 sentinel semantics: Census suppressed-value sentinels
-    * (≤ -600000000, e.g. -666666666) → NULL after numeric cast. */
+  /** §1.2 sentinel semantics: a sentinel → NULL on a numeric column. */
   def sentinelToNull(c: Column): Column =
-    when(c <= -600000000L, lit(null)).otherwise(c)
+    when(c <= SentinelCeiling, lit(null)).otherwise(c)
 
-  /** Full cleaning pipeline for one estimate column: blank→NULL, cast to
-    * DECIMAL(18,0) (counts) or DECIMAL(5,1) (percent codes), sentinel→NULL.
-    * A percent cell is cast to DECIMAL(18,1) first and narrowed only after
-    * its sentinel is nulled: DECIMAL(5,1) cannot hold -666666666, and under
-    * ANSI the narrowing cast throws instead of yielding NULL. */
+  /** Full cleaning of one raw STRING estimate cell (R22 + §1.2): blank →
+    * NULL, cast to DECIMAL(18,0) (counts) or DECIMAL(5,1) (percent
+    * codes), sentinel → NULL — the one native expression
+    * [[graft.functions.CleanDecimal]], which reads each cell once. A
+    * percent cell is rounded to one decimal and sentinel-checked before
+    * it narrows to (5,1): DECIMAL(5,1) cannot hold -666666666, and under
+    * ANSI the narrowing would throw instead of yielding NULL. */
   def cleanCast(c: Column, percent: Boolean = false): Column =
-    if (percent) sentinelToNull(blanksAsNull(c).cast(DecimalType(18, 1)))
-      .cast(DecimalType(5, 1))
-    else sentinelToNull(blanksAsNull(c).cast(DecimalType(18, 0)))
+    CleanDecimal(c, percent)
 
   /** R21 (`Test_census_tract.py:236-237`): the Redshift
     * `SORTKEY (state_fips, county, tract)` expressed as a Spark layout —
-    * range-partition then sort within partitions, i.e. a cluster-ready
-    * totally-ordered write layout. */
+    * one partition, sorted within it: a totally-ordered write layout
+    * without a shuffle. A range repartition would give the same order
+    * at the cost of a `RangePartitioner` sampling job, which runs the
+    * whole input once more, and a shuffle; the reference's largest
+    * load, every US tract (about 85k rows a vintage), sorts no faster
+    * that way, and AQE coalesces its shuffle to one partition anyway. */
   def sortLikeWarehouse(df: DataFrame, keys: Seq[String]): DataFrame =
-    df.repartitionByRange(keys.map(col).toIndexedSeq: _*)
+    df.coalesce(1)
       .sortWithinPartitions(keys.map(col).toIndexedSeq: _*)
 
   /** End-to-end reference orchestration (`Test_census_tract.py:316-408`
     * plus the COPY-time cleaning of R22/§1.2): each per-state frame is
     * schema-conformed, header-normalized, renamed by the code→label
-    * mapping, its estimate columns cleaned (blank→NULL, sentinel→NULL,
-    * decimal cast), then everything is concatenated by column name and
-    * laid out in warehouse sort order. `estimates` maps the *renamed*
-    * column label to its percent-code flag (DECIMAL(5,1) vs (18,0)).
+    * mapping, its estimate columns cleaned by [[cleanCast]] (blank→NULL,
+    * sentinel→NULL, decimal cast: one small expression per cell), then
+    * everything is concatenated by column name and laid out in warehouse
+    * sort order. `estimates` maps the *renamed* column label to its
+    * percent-code flag (DECIMAL(5,1) vs (18,0)).
     * Each frame's steps compose into ONE `select`: a chain of per-column
     * `withColumn`s re-analyses a plan one `Project` deeper per code.
     * Pinned by the golden test in `graft.CensusGoldenSpec`. */

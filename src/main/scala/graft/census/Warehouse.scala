@@ -9,9 +9,8 @@ import org.apache.spark.sql.{DataFrame, SaveMode}
   *
   * `saveAsTable` / the JDBC writer both carry the same create-if-absent
   * + Append/Overwrite distinction; the SORTKEY clause (R21) becomes the
-  * range-partitioned sorted layout of [[Normalize.sortLikeWarehouse]]
-  * applied before the write, which is the cluster-scale equivalent of a
-  * sorted bulk load.
+  * one-partition sorted layout of [[Normalize.sortLikeWarehouse]]
+  * applied before the write, the equivalent of a sorted bulk load.
   *
   * `format`: `"parquet"` (default) lands in the session catalog;
   * `"jdbc"` writes to a real warehouse over the wire — the caller

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 import Util._
 
 /** Category J — event-time windowing (SURVEY.md §2.2 J1-J3 oracle-checked
@@ -137,15 +138,22 @@ object StreamingOps {
     * instead of appending a second copy, upgrading the at-least-once
     * delivery to exactly-once sink contents. At cluster scale each
     * micro-batch writes one new partition of a shared-FS table; no
-    * global state, no cross-batch coordination. */
-  def idempotentBatchAppend(out: String)(batch: DataFrame, batchId: Long): Unit =
-    batch
+    * global state, no cross-batch coordination. A batch whose plan
+    * statistics fit one `spark.sql.adaptive.advisoryPartitionSizeInBytes`
+    * lands as ONE file instead of one per source partition; a batch
+    * without statistics (estimated at `spark.sql.defaultSizeInBytes`)
+    * keeps its source's layout. */
+  def idempotentBatchAppend(out: String)(batch: DataFrame, batchId: Long): Unit = {
+    val small = batch.queryExecution.optimizedPlan.stats.sizeInBytes <=
+      BigInt(SQLConf.get.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES))
+    (if (small) batch.coalesce(1) else batch)
       .withColumn("batch_id", lit(batchId))
       .write
       .mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("batch_id")
       .parquet(out)
+  }
 
   /** J26: bounded BACKFILL — `Trigger.AvailableNow`: process every
     * input file available at start (in rate-limited micro-batches,

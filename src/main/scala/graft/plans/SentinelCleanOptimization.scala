@@ -4,6 +4,7 @@ import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.types.{BooleanType, DateType, Decimal, NumericType, TimestampNTZType, TimestampType}
+import graft.census.Normalize.SentinelCeiling
 
 /** Census sentinel-cleaning pushdown (SURVEY §4.2, §1.2 semantics —
   * `/root/reference/README.md` suppressed-value sentinels, e.g.
@@ -29,9 +30,6 @@ import org.apache.spark.sql.types.{BooleanType, DateType, Decimal, NumericType, 
   * registration.
   */
 object SentinelCleanOptimization extends Rule[LogicalPlan] {
-
-  /** Census suppressed-value sentinels are ≤ -6e8 (§1.2). */
-  private val SentinelCeiling = -600000000L
 
   @scala.annotation.tailrec
   private def stripCast(e: Expression): Expression = e match {

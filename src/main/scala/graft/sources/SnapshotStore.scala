@@ -34,6 +34,11 @@ import org.apache.spark.sql.functions.{col, lit}
   *    lakehouse deletion vectors. An overwrite (or A25's OPTIMIZE,
   *    which is an overwrite of the read-back content) naturally
   *    MATERIALIZES outstanding deletes and drops the DV entries.
+  *  - [[commitUpsert]]: a delete of the batch's keys plus an append of
+  *    the batch in one commit. Its DV names the upsert's OWN data dir
+  *    (the batch is written once; readers take the key column from
+  *    it), and the dir follows the DV as a data entry, so the batch's
+  *    rows are not masked by their own keys.
   *
   * Data entries may carry a FILE-LEVEL ZONE MAP — min/max of one
   * declared long-typed column, computed at commit time on the write of
@@ -64,7 +69,11 @@ object SnapshotStore {
     *    rewrite records both keys' [min,max] per dir, so a predicate
     *    on EITHER key can skip files; one-triple lines are the legacy
     *    single-column form and parse unchanged)
-    *  - `dv\t<keyCol>\t<dir>`                    deletion-vector sidecar
+    *  - `dv\t<keyCol>\t<dir>`                    deletion vector: the
+    *    `keyCol` values of `<dir>`'s rows are deleted. `<dir>` is a
+    *    key-only parquet ([[commitDelete]]) or the upsert's own data dir
+    *    ([[commitUpsert]]: the same path follows as a data entry);
+    *    readers take the key column with column pruning
     */
   private sealed trait Entry { def dir: String }
   private case class DataDir(dir: String,
@@ -182,9 +191,12 @@ object SnapshotStore {
 
   /** Stage `df` as a new data directory, then publish manifest
     * version `prev.max + 1` whose content is `carry ++ the new dir`.
-    * Returns the published version. */
+    * With `upsertKey`, a DV naming the new dir precedes it: the batch's
+    * keys mask the carried rows but not the batch itself. Returns the
+    * published version. */
   private def commit(spark: SparkSession, root: String, df: DataFrame,
-      carryFrom: Option[Int], statsCols: Seq[String]): Int = {
+      carryFrom: Option[Int], statsCols: Seq[String],
+      upsertKey: Option[String] = None): Int = {
     val existing = versions(spark, root)
     val v = existing.lastOption.getOrElse(0) + 1
     val dataDir =
@@ -192,8 +204,8 @@ object SnapshotStore {
     val stats = writeWithZoneMaps(df, dataDir, statsCols)
     val carried =
       carryFrom.map(readManifestLines(spark, root, _)).getOrElse(Nil)
-    val entry = DataDir(dataDir, stats)
-    publishManifest(spark, root, v, carried :+ render(entry))
+    val dv = upsertKey.map(k => render(DeleteVector(k, dataDir)))
+    publishManifest(spark, root, v, carried ++ dv :+ render(DataDir(dataDir, stats)))
     v
   }
 
@@ -323,7 +335,8 @@ object SnapshotStore {
     * the current content whose `keyCol` satisfies `predicate` is
     * deleted — WITHOUT rewriting a single data file. The matching keys
     * are written once as a deletion-vector parquet (O(deleted keys),
-    * not O(touched files) — the copy-on-write bill F12 prices), and
+    * not O(touched files) — the copy-on-write bill F12 prices; a key
+    * may repeat, as the anti-join needs only its existence), and
     * the new manifest is the previous one plus a `dv` entry. Readers
     * apply the DV as an anti-join; data committed AFTER this delete is
     * not affected by it (a re-inserted key is visible again). Deleting
@@ -334,8 +347,7 @@ object SnapshotStore {
     val existing = versions(spark, root)
     require(existing.nonEmpty, s"no published snapshots under $root")
     val v = existing.last + 1
-    val keys = read(spark, root).filter(predicate)
-      .select(col(keyCol)).distinct()
+    val keys = read(spark, root).filter(predicate).select(col(keyCol))
     val dvDir =
       s"$root/data/dv-v$v-${java.util.UUID.randomUUID().toString.take(8)}"
     keys.write.mode("error").parquet(dvDir)
@@ -347,35 +359,30 @@ object SnapshotStore {
 
   /** MERGE-ON-READ UPSERT — the Iceberg-v2 equality-delete WRITE path,
     * composing the DV machinery with an append in ONE atomic commit:
-    * the new manifest carries every previous entry forward, then an
-    * equality-delete DV of the batch's keys, then the batch's data
-    * dir. Because a DV masks only the data dirs that PRECEDE it,
-    * matched rows in pre-existing dirs are superseded while the
-    * batch's own rows (after the DV line) are visible — SCD1 upsert
+    * the batch is written ONCE, as a data dir, and the new manifest
+    * carries every previous entry forward, then an equality-delete DV
+    * naming that dir (its `keyCol` values are the deleted keys), then
+    * the dir itself as data. Because a DV masks only the data dirs that
+    * PRECEDE it, matched rows in pre-existing dirs are superseded while
+    * the batch's own rows (after the DV line) are visible — SCD1 upsert
     * semantics with NO existing file read or rewritten; the write
-    * costs O(batch), the read pays the same anti-join as
-    * [[commitDelete]]. Replay-safe: re-applying the same batch masks
-    * the previous batch dir and lands an identical one — content is
-    * unchanged (the CDC at-least-once posture, pinned in
-    * `SnapshotStoreSpec`). A fresh root degenerates to a plain first
-    * commit. Returns the published version. */
+    * costs one pass over the batch, so a nondeterministic batch cannot
+    * give DV keys and data rows that disagree, and the read pays the
+    * same anti-join as [[commitDelete]]. An integral `keyCol` records a
+    * zone map on the dir, so [[readPruned]] can skip it. Replay-safe:
+    * re-applying the same batch masks the previous batch dir and lands
+    * an identical one — content is unchanged (the CDC at-least-once
+    * posture, pinned in `SnapshotStoreSpec`). A fresh root degenerates
+    * to a plain first commit. Returns the published version. */
   def commitUpsert(spark: SparkSession, root: String, keyCol: String,
       batch: DataFrame): Int = {
-    val existing = versions(spark, root)
-    if (existing.isEmpty) commitOverwrite(spark, root, batch)
-    else {
-      val v = existing.last + 1
-      val tag = java.util.UUID.randomUUID().toString.take(8)
-      val dvDir = s"$root/data/dv-v$v-$tag"
-      batch.select(col(keyCol)).distinct().write.mode("error").parquet(dvDir)
-      val dataDir = s"$root/data/v$v-$tag"
-      batch.write.mode("error").parquet(dataDir)
-      val carried = readManifestLines(spark, root, existing.last)
-      publishManifest(spark, root, v, carried ++
-        Seq(render(DeleteVector(keyCol, dvDir)),
-          render(DataDir(dataDir, Nil))))
-      v
+    import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
+    val keyStats = batch.schema(keyCol).dataType match {
+      case ByteType | ShortType | IntegerType | LongType => Seq(keyCol)
+      case _ => Nil
     }
+    val last = versions(spark, root).lastOption
+    commit(spark, root, batch, carryFrom = last, keyStats, upsertKey = last.map(_ => keyCol))
   }
 
   // ---- WAP (write-audit-publish) staging ----
@@ -633,8 +640,11 @@ object SnapshotStore {
     * visible again). Consecutive data dirs sharing the same pending-DV
     * set read as ONE multi-path parquet scan, so the plan stays
     * "scan ∪ (scan ▷ dv)" segments, not a per-directory union chain;
-    * each DV side is a single-column parquet joined once per segment
-    * (broadcast-sized in the GDPR-erasure shape). */
+    * each DV side is the key column of its dirs — a key-only parquet
+    * or an upsert's data dir, column-pruned to the key — joined once
+    * per segment with no `distinct()`: the anti-join needs only key
+    * existence, so a small DV broadcasts with no aggregate or shuffle,
+    * and duplicate or NULL keys delete exactly what distinct ones do. */
   private def assemble(spark: SparkSession, entries: Seq[Entry]): DataFrame = {
     val dataIdx = entries.zipWithIndex.collect {
       case (d: DataDir, i) => (d, i) }
@@ -654,8 +664,7 @@ object SnapshotStore {
     segments.map { case (dvs, members) =>
       val base = readDirs(spark, members.map(_._1.dir))
       dvs.groupBy(_.keyCol).foldLeft(base) { case (acc, (keyCol, vs)) =>
-        val keys = readDirs(spark, vs.map(_.dir))
-          .select(col(keyCol)).distinct()
+        val keys = readDirs(spark, vs.map(_.dir)).select(col(keyCol))
         acc.join(keys, Seq(keyCol), "left_anti")
       }
     }.reduce(_.unionByName(_, allowMissingColumns = true))

@@ -1,8 +1,10 @@
 package org.apache.spark.sql.graft
 
+import org.apache.spark.QueryContext
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.errors.QueryExecutionErrors
+import org.apache.spark.sql.types.{Decimal, StructType}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession, Dataset}
 
 /** The ONE deliberate bridge into Spark's `private[sql]` surface, kept
@@ -23,6 +25,13 @@ object Bridge {
     * what a custom operator composes over). */
   def analyzedPlan(df: Dataset[Row]): LogicalPlan =
     df.asInstanceOf[classic.Dataset[Row]].queryExecution.analyzed
+
+  /** `QueryExecutionErrors.cannotChangeDecimalPrecisionError`
+    * (`private[sql]`): the `NUMERIC_VALUE_OUT_OF_RANGE` error an ANSI
+    * `Cast` raises when a decimal does not fit its target type. */
+  def decimalOverflow(d: Decimal, precision: Int, scale: Int,
+      context: QueryContext): ArithmeticException =
+    QueryExecutionErrors.cannotChangeDecimalPrecisionError(d, precision, scale, context)
 
   /** `StructType.merge` (`private[sql]`): how the parquet `mergeSchema`
     * read option combines the schemas of the files it reads. */

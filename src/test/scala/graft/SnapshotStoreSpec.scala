@@ -792,4 +792,50 @@ class SnapshotStoreSpec extends SparkTestBase {
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
   }
 
+
+  test("commitUpsert evaluates its batch once; the upsert dir is its own DV and carries a key zone map") {
+    import spark.implicits._
+    val root = freshRoot()
+    SnapshotStore.commitOverwrite(spark, root,
+      (1L to 6L).map(i => (i, s"v$i")).toDF("id", "v"))
+    val evaluated = spark.sparkContext.longAccumulator("upsert_rows")
+    val touch = udf { (id: Long) => evaluated.add(1L); true }
+    val batch = Seq((2L, "v2b"), (4L, "v4b"), (9L, "v9")).toDF("id", "v")
+      .filter(touch(col("id")))
+    assert(SnapshotStore.commitUpsert(spark, root, "id", batch) == 2)
+    assert(evaluated.value == 3L, s"the batch's 3 rows were evaluated ${evaluated.value} times")
+    val lines = scala.io.Source.fromFile(s"$root/_manifests/v2.list").getLines().toSeq
+    val dataDir = lines.last.split('\t').head
+    assert(lines.takeRight(2) == Seq(s"dv\tid\t$dataDir", s"$dataDir\tid\t2\t9"), lines)
+    assert(new java.io.File(s"$root/data").list().count(_.startsWith("dv-")) == 0)
+    assert(SnapshotStore.read(spark, root).collect()
+      .map(r => r.getLong(0) -> r.getString(1)).toMap ==
+      Map(1L -> "v1", 2L -> "v2b", 3L -> "v3", 4L -> "v4b", 5L -> "v5", 6L -> "v6", 9L -> "v9"))
+    // the key zone map prunes the upsert dir; its DV still masks v1's rows
+    val pr = SnapshotStore.readPruned(spark, root, "id", 10L, 12L)
+    assert(pr.dirsOpened == 1 && pr.dirsTotal == 2)
+    assert(pr.df.collect().map(_.getLong(0)).sorted.toSeq == Seq(1L, 3L, 5L, 6L))
+  }
+
+  test("deletion vectors holding duplicate and NULL keys read like distinct ones, with no aggregate") {
+    import spark.implicits._
+    val root = freshRoot()
+    val rows = Seq[(Option[Long], String)]((Some(1L), "a"), (Some(1L), "b"), (Some(2L), "c"),
+      (Some(3L), "d"), (Some(3L), "e"), (None, "f"))
+    SnapshotStore.commitOverwrite(spark, root, rows.toDF("k", "v"))
+    // the delete's key set holds 1 twice and a NULL
+    SnapshotStore.commitDelete(spark, root, "k", col("k") === 1L || col("k").isNull)
+    // the upsert batch's keys hold 3 twice and a NULL
+    SnapshotStore.commitUpsert(spark, root, "k",
+      Seq[(Option[Long], String)]((Some(3L), "x"), (Some(3L), "y"), (None, "z")).toDF("k", "v"))
+    def content(asOf: Int) = SnapshotStore.read(spark, root, Some(asOf)).collect()
+      .map(r => (Option(r.get(0)).map(_.asInstanceOf[Long]), r.getString(1))).toSeq.sortBy(_._2)
+    // an anti-join matches no NULL key: the NULL-keyed rows survive both DVs
+    assert(content(2) == Seq((Some(2L), "c"), (Some(3L), "d"), (Some(3L), "e"), (None, "f")))
+    assert(content(3) == Seq((Some(2L), "c"), (None, "f"), (Some(3L), "x"), (Some(3L), "y"),
+      (None, "z")))
+    val plan = SnapshotStore.read(spark, root).queryExecution.optimizedPlan
+    assert(plan.collect { case a: org.apache.spark.sql.catalyst.plans.logical.Aggregate => a }
+      .isEmpty, plan)
+  }
 }
