@@ -24,11 +24,28 @@ import graft.functions.{CharNGrams, CosineSim, HyperplaneCodes, KllQuantile, Kll
   *  - the [[graft.plans.SentinelCleanOptimization]] optimizer rule —
   *    rewrites filters over census sentinel-cleaned columns into plain
   *    raw-column predicates the stock pushdown carries into scans.
-  * Verified in `graft.GraftExtensionsSpec` (the shared test session is
-  * built with this extensions class, exactly like a configured cluster).
+  *
+  * It also installs the fork-free local filesystem
+  * ([[graft.sources.ForkFreeLocalFs]]) for `file:` on the running
+  * context's Hadoop configuration, for both the `FileSystem` and the
+  * `FileContext` API. Without the native Hadoop library the stock
+  * classes start a `chmod` process for every file and directory they
+  * create and a `readlink` process for every `FileContext` rename, so
+  * every snapshot commit, streaming checkpoint and cache write would pay
+  * a few ms per file in process starts. Files, `.crc` sidecars,
+  * permission bits and commit protocol stay the same. A key the user
+  * set is left alone, and no context is created to do this. Hadoop
+  * caches one `file:` FileSystem per JVM, so the classes apply when the
+  * session is built before anything else touches a local path.
+  *
+  * Verified in `graft.GraftExtensionsSpec` and `graft.LocalFsSpec` (the
+  * shared test session is built with this extensions class, exactly
+  * like a configured cluster).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
+    org.apache.spark.sql.graft.Bridge.activeContext
+      .foreach(sc => graft.sources.ForkFreeLocalFs.install(sc.hadoopConfiguration))
     // the whole-operator extensions: plan graft.plans.AsOfJoin nodes
     // to the co-partitioned single-pass merge AsOfJoinExec (or its
     // broadcast form), and graft.plans.RangeJoin nodes to the

@@ -62,10 +62,6 @@ object SemDedup {
   /** Every within-cell candidate pair (id_a < id_b) with its exact
     * cosine, via the capped bucket expansion — bounded per cell, never
     * corpus-quadratic. */
-  def withinCellPairs(assigned: DataFrame, idCol: String,
-      vecCol: String, cap: Int = Buckets.MaxBucket): DataFrame =
-    pairsFromMembers(cellMembers(assigned, idCol, vecCol, cap))
-
   private def pairsFromMembers(members: DataFrame): DataFrame =
     // r22 adjudication (guide §4): a position-index pair generator
     // (sortedPairs over sequence(1, n), vectors read via element_at in

@@ -4,6 +4,7 @@ import java.util.{Map => JMap}
 
 import scala.jdk.CollectionConverters._
 
+import com.fasterxml.jackson.core.{JsonFactory, JsonToken}
 import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
@@ -42,12 +43,13 @@ import org.apache.spark.unsafe.types.UTF8String
   * The bytes behind a scan arrive through the [[CensusFetcher]]
   * transport seam (option `fetcherClass`), fetched once per scan in each
   * JVM and shared by the scan's partitions ([[ScanFetches]]) — the one
-  * target returns every chunk's rows. The default reads a local
-  * JSON array-of-arrays fixture (option `path`) in the reference's
-  * wire format; a deployment plugs its HTTP client into the same seam
-  * and the planning, pushdown, partitioning, and retry/throttle
-  * contract is identical (a file target must be executor-visible, like
-  * the sink roots).
+  * target returns every chunk's rows. Schema inference reads only the
+  * header row of its own fetch ([[FetchPolicy.fetchHeader]]). The
+  * default reads a local JSON array-of-arrays fixture (option `path`) in
+  * the reference's wire format; a deployment plugs its HTTP client into
+  * the same seam and the planning, pushdown, partitioning, and
+  * retry/throttle contract is identical (a file target must be
+  * executor-visible, like the sink roots).
   *
   * Reference schema semantics carried over:
   *  - all cells `StringType`, nullable (§1.2 — the API returns quoted
@@ -71,7 +73,8 @@ class CensusSource extends TableProvider {
 }
 
 /** Reference R14/R15 fetch-operational options (see [[Retry]]): retry
-  * attempts/backoff around each real fetch and a pre-fetch throttle on
+  * attempts/backoff around each real fetch (the header-only schema read
+  * and the whole-response scan reads alike) and a pre-fetch throttle on
   * each real data fetch — `maxAttempts` (default 5 =
   * tenacity `stop_after_attempt(5)`), `retryBaseWaitMs`,
   * `retryMaxWaitMs` (default 60 s = the reference's backoff cap),
@@ -92,15 +95,27 @@ case class FetchPolicy(maxAttempts: Int, baseWaitMs: Long,
     * the (fetch → parse) unit with capped exponential backoff — each
     * attempt re-opens the transport, exactly the reference's per-GET
     * tenacity loop. `throttle = false` is the driver-side metadata path
-    * (schema inference, partition planning): the R15 throttle paces DATA
-    * fetches against the upstream API, and sleeping during planning
-    * just stalls the driver (a reference-style throttleMs=10000 would
-    * sleep the driver before any task ran). Retry still applies. */
+    * (partition planning; schema inference too, through [[fetchHeader]]):
+    * the R15 throttle paces DATA fetches against the upstream API, and
+    * sleeping during planning just stalls the driver (a
+    * reference-style throttleMs=10000 would sleep the driver before any
+    * task ran). Retry still applies. */
   def fetchArrays(target: String, throttle: Boolean): Vector[Vector[String]] = {
     if (throttle && throttleMs > 0) Thread.sleep(throttleMs)
     val f = fetcher
     Retry.withBackoff(maxAttempts, baseWaitMs, maxWaitMs)(
       CensusSource.readArrays(f.fetch(target)))
+  }
+
+  /** Row 0 of `target` — the column names — for schema inference: one
+    * unthrottled driver-side fetch under the same retry policy as
+    * [[fetchArrays]], read only up to the end of the header row, then
+    * closed ([[CensusSource.readHeader]]). `None` when the body has no
+    * header row; that is not retried. */
+  def fetchHeader(target: String): Option[Vector[String]] = {
+    val f = fetcher
+    Retry.withBackoff(maxAttempts, baseWaitMs, maxWaitMs)(
+      CensusSource.readHeader(f.fetch(target)))
   }
 
   /** The parsed response of `target` for the scan minted `token`: the
@@ -187,11 +202,43 @@ object CensusSource {
     }.toVector
   }
 
+  private val jsonFactory = new JsonFactory()
+
+  /** Row 0 of a response read with a streaming parser that stops at the
+    * end of the header row, so the rest of the body is never read or
+    * parsed. Cells read as [[readArrays]] reads them. `None` when the
+    * body is not an array whose first element is an array. */
+  private[sources] def readHeader(in: java.io.InputStream): Option[Vector[String]] =
+    try {
+      val p = jsonFactory.createParser(in)
+      try {
+        if (p.nextToken() != JsonToken.START_ARRAY ||
+            p.nextToken() != JsonToken.START_ARRAY) None
+        else {
+          val header = Vector.newBuilder[String]
+          var t = p.nextToken()
+          while (t != JsonToken.END_ARRAY) {
+            // a body that ends inside the header raises here (JsonEOFException)
+            header += (t match {
+              case JsonToken.VALUE_NULL => null
+              case JsonToken.START_ARRAY | JsonToken.START_OBJECT =>
+                p.skipChildren(); "" // a container's asText()
+              case _ => p.getValueAsString
+            })
+            t = p.nextToken()
+          }
+          Some(header.result())
+        }
+      } finally p.close()
+    } finally in.close()
+
+  private def noHeaderRow(target: String) =
+    new IllegalArgumentException(s"census source $target has no header row")
+
   /** Row 0 of a parsed response: the column names. */
   private[sources] def headerRow(all: Vector[Vector[String]],
       target: String): Vector[String] =
-    all.headOption.getOrElse(throw new IllegalArgumentException(
-      s"census source $target has no header row"))
+    all.headOption.getOrElse(throw noHeaderRow(target))
 
   /** Expected-first, extras-appended, first-occurrence-deduped column
     * order (R5/R6/R18). */
@@ -204,9 +251,8 @@ object CensusSource {
       throw new IllegalArgumentException("census source requires a 'path' option"))
     val expect = Option(options.get("expect")).toSeq
       .flatMap(_.split(",").map(_.trim).filter(_.nonEmpty))
-    // driver-side metadata read: unthrottled (see [[FetchPolicy.fetchArrays]])
-    val header = headerRow(
-      FetchPolicy.fromProperties(options).fetchArrays(path, throttle = false), path)
+    val header = FetchPolicy.fromProperties(options).fetchHeader(path)
+      .getOrElse(throw noHeaderRow(path))
     StructType(columnOrder(expect, header)
       .map(StructField(_, StringType, nullable = true)))
   }

@@ -13,10 +13,13 @@ import java.io.InputStream
   * exceptions here and are retried under the R14/R15 policy without the
   * reader knowing the transport.
   *
-  * A target is fetched once for schema inference, then once per scan in
-  * each JVM that reads the scan: the scan's first read (driver planning,
-  * or an executor's first partition) fetches and parses, and the scan's
-  * other reads in that JVM share the parse ([[ScanFetches]]).
+  * Schema inference fetches a target once and reads only its header
+  * row before closing the stream ([[FetchPolicy.fetchHeader]]). Each
+  * scan then fetches it whole once in each JVM that reads the scan: the
+  * scan's first read (driver planning, or an executor's first
+  * partition) fetches and parses, and the scan's other reads in that JVM
+  * share the parse ([[ScanFetches]]). A fetcher must therefore tolerate
+  * a stream closed before its end.
   *
   * Selected per scan via the `fetcherClass` option (a class name with a
   * no-arg constructor, instantiated wherever a real fetch runs — the

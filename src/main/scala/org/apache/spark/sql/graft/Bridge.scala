@@ -1,14 +1,14 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.QueryContext
+import org.apache.spark.{QueryContext, SparkContext}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic
 import org.apache.spark.sql.errors.QueryExecutionErrors
 import org.apache.spark.sql.types.{Decimal, StructType}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession, Dataset}
 
-/** The ONE deliberate bridge into Spark's `private[sql]` surface, kept
-  * to one-line calls. Building a [[org.apache.spark.sql.Dataset]]
+/** The ONE deliberate bridge into Spark's `private[sql]` and
+  * `private[spark]` surface, kept to one-line calls. Building a [[org.apache.spark.sql.Dataset]]
   * from a custom [[LogicalPlan]] node (the documented extension path
   * for whole-operator semantics: LogicalPlan + Strategy + SparkPlan,
   * SURVEY.md §7.3 / graft.plans.AsOfJoin) has no public constructor —
@@ -37,4 +37,8 @@ object Bridge {
     * read option combines the schemas of the files it reads. */
   def mergeSchemas(a: StructType, b: StructType, caseSensitive: Boolean): StructType =
     a.merge(b, caseSensitive)
+
+  /** `SparkContext.getActive` (`private[spark]`): the running context,
+    * if any. Never creates one. */
+  def activeContext: Option[SparkContext] = SparkContext.getActive
 }
