@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.execution.ExplainMode
+import org.apache.spark.sql.graft.Bridge
 import scala.collection.mutable
 
 /** Dev profiling main: runs named registered queries exactly as [[Bench]]
@@ -10,7 +11,10 @@ import scala.collection.mutable
   * SparkListener attached, so optimization work targets the measured
   * cost, not a guess. After the last rep of each query it prints:
   *  - the stage report: jobs, stages, task counts, per-stage wall time,
-  *    input and shuffle bytes;
+  *    input and shuffle bytes; each stage row names the job row it ran
+  *    under and the operator scopes of its RDDs (`WholeStageCodegen (2)`,
+  *    `Exchange`, …) — under AQE a stage's own name is the thread-pool
+  *    call site, which says nothing about the operator;
   *  - one row per job (ms, job description) — operators that label
   *    their rounds via `setJobDescription` get per-round cost here;
   *  - the query's `explain("formatted")` plan;
@@ -20,35 +24,51 @@ import scala.collection.mutable
   */
 object Prof {
   private class L extends SparkListener {
-    case class St(name: String, tasks: Int, ms: Long, shufR: Long,
-      shufW: Long, input: Long)
+    case class St(name: String, job: Int, tasks: Int, ms: Long,
+      shufR: Long, shufW: Long, input: Long)
     val stages = mutable.ArrayBuffer[St]()
     val jobRows = mutable.ArrayBuffer[(Long, String)]()
     private val jobStart = mutable.Map[Int, (Long, String)]()
-    override def onJobStart(j: SparkListenerJobStart): Unit =
+    private val stageJob = mutable.Map[Int, Int]()
+    private val jobRow = mutable.Map[Int, Int]()
+    override def onJobStart(j: SparkListenerJobStart): Unit = {
       jobStart(j.jobId) = (j.time, Option(j.properties)
         .flatMap(p => Option(p.getProperty("spark.job.description")))
         .getOrElse(""))
+      j.stageIds.foreach(s => stageJob.getOrElseUpdate(s, j.jobId))
+    }
     override def onJobEnd(j: SparkListenerJobEnd): Unit =
       jobStart.remove(j.jobId).foreach { case (t0, desc) =>
+        jobRow(j.jobId) = jobRows.size
         jobRows += ((j.time - t0, desc))
       }
     override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
       val i = s.stageInfo
       val m = i.taskMetrics
-      stages += St(i.name.takeWhile(_ != '\n'), i.numTasks,
+      val scopes = i.rddInfos.sortBy(_.id)
+        .flatMap(Bridge.rddScopeName).map(_.trim).distinct
+      stages += St(
+        if (scopes.isEmpty) i.name.takeWhile(_ != '\n')
+        else scopes.mkString(", "),
+        stageJob.getOrElse(i.stageId, -1), i.numTasks,
         i.completionTime.getOrElse(0L) - i.submissionTime.getOrElse(0L),
         m.shuffleReadMetrics.totalBytesRead, m.shuffleWriteMetrics.bytesWritten,
         m.inputMetrics.bytesRead)
     }
-    def reset(): Unit = { stages.clear(); jobRows.clear(); jobStart.clear() }
+    def reset(): Unit = {
+      stages.clear(); jobRows.clear(); jobStart.clear()
+      stageJob.clear(); jobRow.clear()
+    }
     def report(): String = {
       val head = s"jobs=${jobRows.size} stages=${stages.size} " +
         s"tasks=${stages.map(_.tasks).sum} stageMs=${stages.map(_.ms).sum} " +
         s"jobMs=${jobRows.map(_._1).sum}"
-      val rows = stages.map(s =>
+      val rows = stages.map { s =>
+        val job = jobRow.get(s.job).fold("job?")(r => s"job$r")
         f"    ${s.ms}%6dms t=${s.tasks}%3d in=${s.input / 1024}%8dK " +
-        f"sr=${s.shufR / 1024}%7dK sw=${s.shufW / 1024}%7dK  ${s.name}%.70s")
+        f"sr=${s.shufR / 1024}%7dK sw=${s.shufW / 1024}%7dK  " +
+        f"$job%-6s ${s.name}%.70s"
+      }
       val jobs = jobRows.zipWithIndex.map { case ((ms, desc), i) =>
         f"    job$i%-3d ${ms}%6dms  ${desc}%.60s" }
       (head +: (rows ++ jobs)).mkString("\n")

@@ -18,21 +18,24 @@ import org.apache.spark.sql.functions._
   * 1/16 decay) so the index, the search walk, and the pins are exactly
   * reproducible. Same trade as the seeded IVF codebook.
   *
-  * Offline ([[ensureIndex]], FixtureCache commit discipline): layer 0
-  * is the cell-bounded [[AnnNsw.buildGraph]] kernel (never all-pairs
-  * on the corpus); the TOP layer seeds from bounded bucketing rounds
-  * ([[buildTopLayer]]); every middle layer is built by the paper's
-  * INSERT-BY-DESCENT recursion run set-orientedly
-  * ([[buildLayerByDescent]]) — members search the layers above for
-  * their M neighbors, so no build join exceeds members × M × probes.
-  * All layers land in ONE parquet keyed by a `layer` column so each
-  * search hop is a pushed-down (layer, src IN …) point lookup; plus
-  * the single global entry (min id of the top layer).
+  * Offline ([[ensureIndex]], FixtureCache commit discipline): the cell
+  * assignment is the committed [[AnnIvf.ensureIndex]] table — no
+  * k-means fit of its own. Layer 0 is the cell-bounded
+  * [[AnnNsw.buildGraph]] kernel (never all-pairs on the corpus); the
+  * TOP layer seeds from bounded bucketing rounds ([[buildTopLayer]]);
+  * every middle layer is built by the paper's INSERT-BY-DESCENT
+  * recursion run set-orientedly ([[buildLayerByDescent]]) — members
+  * search the layers above for their M neighbors, so no build join
+  * exceeds members × M × probes. All layers land in ONE parquet keyed
+  * by a `layer` column so each search hop is a pushed-down
+  * (layer, src IN …) point lookup; plus the single global `entry` (min
+  * id of the top layer) and the per-cell `entries` that start the NSW
+  * search ([[AnnNsw.searchTopK]]) on layer 0 of this same index.
   *
   * Online ([[searchTopK]]): greedy descent with a narrow beam
   * ([[UpperBeam]], [[UpperHops]] hops per layer) from the top layer
-  * down to layer 1, then the wide [[AnnNsw.Beam]] fixed-hop search on
-  * layer 0 seeded by the descended beam. The driver holds only the
+  * down to layer 1, then the layer-0 beam walk ([[AnnNsw.walk]])
+  * seeded by everything the descent scored. The driver holds only the
   * O(beam) frontier; vectors are read ONLY for scored candidates.
   *
   * Registered rows-only (`sim_hnsw_topk`): the index depends on the
@@ -98,8 +101,8 @@ object AnnHnsw {
     * descend through, so its kNN graph seeds from [[TopRounds]]
     * INDEPENDENT deterministic bucketings (xxhash64(id, round) mod
     * ⌈m/cap⌉) — pairwise only within a bucket, so each round's volume
-    * is members × [[TopBucketCap]], never members² (the round-16
-    * verdict's global-pairwise defect). Different rounds mix
+    * is members × [[TopBucketCap]], never members² (global pairwise
+    * over the top membership is quadratic). Different rounds mix
     * different nodes, giving cross-bucket edges; per-node top-M over
     * the union keeps degrees bounded. When the membership fits one
     * bucket (every fixture) this is EXACTLY the old global pairwise. */
@@ -126,7 +129,7 @@ object AnnHnsw {
     * whose descent landed in the same region. No join's volume
     * exceeds members × M × probes: descent expands
     * members × beam × M per hop, the refine round
-    * members × ReverseCap² — the verdict's scale contract. */
+    * members × ReverseCap² — the build's scale contract. */
   def buildLayerByDescent(inserts: DataFrame, upperMembers: DataFrame,
       upperAdj: DataFrame): DataFrame =
     buildLayerByDescent(inserts, upperMembers, upperAdj, inserts)
@@ -195,87 +198,112 @@ object AnnHnsw {
     edges.select(col("id").as("src"), col("cand").as("dst"))
   }
 
-  /** Build-once hierarchical index: layered adjacency at
-    * `<dir>/layers` (layer, src, dst), global entry at `<dir>/entry`.
-    * `tag` disambiguates caches built from a FILTERED view of the same
-    * source (the incremental rung's base-corpus index) — an empty tag
-    * keeps the established full-corpus cache key. */
+  /** Build-once hierarchical index over the committed [[AnnIvf]] cell
+    * assignment of the same source: layered adjacency at
+    * `<dir>/layers` (layer, src, dst, dstvec), global entry at
+    * `<dir>/entry` and the per-cell NSW entries at `<dir>/entries`
+    * (each with its vector as `entryvec`). */
   def ensureIndex(spark: SparkSession, df: DataFrame, idCol: String,
-      vecCol: String, sourceDir: String, tag: String = ""): String =
-    FixtureCache.ensure(spark,
-      s"hnsw_graph_m${AnnNsw.M}_l${MaxLevel}_v6$tag",
+      vecCol: String, sourceDir: String): String = {
+    val ivfDir = AnnIvf.ensureIndex(spark, df, idCol, vecCol, sourceDir)
+    FixtureCache.ensure(spark, s"hnsw_graph_m${AnnNsw.M}_l${MaxLevel}_v7",
       sourceDir, Seq(s"$sourceDir.parquet")) { tmp =>
-      val model = AnnIvf.codebook(df, vecCol, AnnIvf.FitSampleFraction)
-      val assigned = model.transform(df.withColumn("fv",
-        org.apache.spark.ml.functions.array_to_vector(col(vecCol))))
-        .select(col(idCol), col(vecCol), col("cell"))
-        .withColumn("lvl", levelOf(col(idCol)))
-        .localCheckpoint(true)
-      // layer 0 is cell-bounded (the NSW kernel — never all-pairs on
-      // the full corpus). Upper layers must CROSS cell boundaries (a
-      // cell-bounded upper layer could never leave the entry's cell),
-      // but never via global pairwise (the round-16 verdict defect:
-      // layer-1 volume was n²/256): the TOP layer seeds from bounded
-      // bucketing rounds ([[buildTopLayer]] — members × cap per
-      // round), and every layer below it is built by the HNSW
-      // INSERT-BY-DESCENT recursion ([[buildLayerByDescent]]): its
-      // members route through a search on the layers above to find
-      // their M neighbors, volume ≤ members × M × probes.
-      def mem(l: Int): DataFrame = assigned.filter(col("lvl") >= l)
-        .select(col(idCol).as("__id"), col(vecCol).as("__vec"))
-      val l0 = AnnNsw.buildGraph(assigned, idCol, vecCol)._1
-        .withColumn("layer", lit(0))
-      var upperAdj = buildTopLayer(mem(MaxLevel)).localCheckpoint(true)
-      var layers = l0.unionByName(upperAdj.withColumn("layer",
-        lit(MaxLevel)))
-      for (l <- (MaxLevel - 1) to 1 by -1) {
-        upperAdj = buildLayerByDescent(mem(l), mem(l + 1), upperAdj)
-          .localCheckpoint(true)
-        layers = layers.unionByName(upperAdj.withColumn("layer", lit(l)))
-      }
-      writeLayers(layers,
-        assigned.select(col(idCol), col(vecCol)), s"$tmp/layers")
-      assigned.filter(col("lvl") >= MaxLevel)
-        .agg(min(col(idCol)).as("entry"))
-        .join(assigned.select(col(idCol).as("entry"),
-          col(vecCol).as("entryvec")), Seq("entry"))
-        .write.mode("overwrite").parquet(s"$tmp/entry")
+      val assigned = AnnIvf.readAssigned(spark, ivfDir, idCol, vecCol)
+      val vecs = vectors(assigned, idCol, vecCol)
+      commit(tmp, buildLayers(assigned, idCol, vecCol), topEntry(vecs),
+        AnnNsw.cellEntries(assigned, idCol), vecs)
     }
+  }
 
-  /** Commit the layered adjacency partitioned by (layer, src-bucket)
-    * (r18 verdict #2): a beam-search hop filters `layer = l AND src IN
-    * (beam)`, so `partitionBy(layer, bkt)` turns every hop into a
-    * read of ONE layer directory's beam buckets — directory pruning
-    * instead of a full index scan per hop. The unpartitioned form read
-    * the whole file hops × probes times; at a 100-TB index that is the
+  /** A corpus as the (__id, __vec) relation the build steps share. */
+  private def vectors(df: DataFrame, idCol: String, vecCol: String) =
+    df.select(col(idCol).as("__id"), col(vecCol).as("__vec"))
+
+  /** The global entry: min id of the top layer's membership. */
+  private def topEntry(vecs: DataFrame): DataFrame =
+    vecs.filter(levelOf(col("__id")) >= MaxLevel)
+      .agg(min(col("__id")).as("entry"))
+
+  /** The layered adjacency (src, dst, layer) over an IVF cell
+    * assignment (idCol, vecCol, cell). Layer 0 is cell-bounded (the
+    * NSW kernel — never all-pairs on the full corpus). Upper layers
+    * must CROSS cell boundaries (a cell-bounded upper layer could never
+    * leave the entry's cell), but never via global pairwise (layer-1
+    * volume would be n²/256): the TOP layer seeds from bounded
+    * bucketing rounds ([[buildTopLayer]] — members × cap per round),
+    * and every layer below it is built by the HNSW INSERT-BY-DESCENT
+    * recursion ([[buildLayerByDescent]]): its members route through a
+    * search on the layers above to find their M neighbors, volume ≤
+    * members × M × probes. Layer 0 stays lazy. */
+  private def buildLayers(assigned: DataFrame, idCol: String,
+      vecCol: String): DataFrame = {
+    val leveled = assigned.withColumn("lvl", levelOf(col(idCol)))
+      .localCheckpoint(true)
+    def mem(l: Int): DataFrame =
+      vectors(leveled.filter(col("lvl") >= l), idCol, vecCol)
+    val l0 = AnnNsw.buildGraph(leveled, idCol, vecCol)
+      .withColumn("layer", lit(0))
+    var upperAdj = buildTopLayer(mem(MaxLevel)).localCheckpoint(true)
+    var layers = l0.unionByName(upperAdj.withColumn("layer",
+      lit(MaxLevel)))
+    for (l <- (MaxLevel - 1) to 1 by -1) {
+      upperAdj = buildLayerByDescent(mem(l), mem(l + 1), upperAdj)
+        .localCheckpoint(true)
+      layers = layers.unionByName(upperAdj.withColumn("layer", lit(l)))
+    }
+    layers
+  }
+
+  /** Write one index into `dir`: layers (with dstvec), entry and
+    * entries (each with entryvec), vectors from `vecs` (__id, __vec). */
+  private def commit(dir: String, layers: DataFrame, entry: DataFrame,
+      entries: DataFrame, vecs: DataFrame): Unit = {
+    writeLayers(layers, vecs, s"$dir/layers")
+    withVec(entry, "entry", vecs, "entryvec")
+      .write.mode("overwrite").parquet(s"$dir/entry")
+    withVec(entries, "entry", vecs, "entryvec")
+      .write.mode("overwrite").parquet(s"$dir/entries")
+  }
+
+  /** `ids` with the vector of its `key` column attached as `vecName`;
+    * `vecs` (__id, __vec) is keyed by a UNIQUE id, so every row gets
+    * exactly one vector. */
+  private def withVec(ids: DataFrame, key: String, vecs: DataFrame,
+      vecName: String): DataFrame =
+    ids.join(vecs.select(col("__id").as(key), col("__vec").as(vecName)),
+      Seq(key))
+
+  /** Commit the layered adjacency partitioned by (layer, src-bucket):
+    * a beam-search hop filters `layer = l AND src IN (beam)`, so
+    * `partitionBy(layer, bkt)` turns every hop into a read of ONE
+    * layer directory's beam buckets — directory pruning instead of a
+    * full index scan per hop. The unpartitioned form read the whole
+    * file hops × probes times; at a 100-TB index that is the
     * difference between a point lookup and a table scan.
     *
-    * v6 layout (r19 verdict #2): each edge also carries its
-    * DESTINATION VECTOR (`vecs` = the corpus (id, vec) relation), so
-    * one pruned read serves a whole probe hop — expansion ids and the
-    * data to score them. M×dim floats per node of index weight, the
-    * locality trade every serving-path HNSW makes; the upper layers
-    * (1/16-decay membership) stay collectable for the driver-resident
-    * descent ([[searchTopK]]). */
+    * Each edge also carries its DESTINATION VECTOR (`vecs` = the
+    * corpus (__id, __vec) relation), so one pruned read serves a whole
+    * probe hop — expansion ids and the data to score them. M×dim
+    * floats per node of index weight, the locality trade every
+    * serving-path HNSW makes; the upper layers (1/16-decay membership)
+    * stay collectable for the driver-resident descent ([[searchTopK]]). */
   private def writeLayers(layers: DataFrame, vecs: DataFrame,
       path: String): Unit =
     // INVARIANT (consumed by searchTopKBatch's first(dstvec) dedup):
     // `vecs` is the corpus keyed by a UNIQUE id, so this inner join
     // assigns exactly ONE dstvec per dst in every committed layer —
     // keep that property under any future layout change.
-    layers
-      .join(vecs.select(col(vecs.columns.head).as("dst"),
-        col(vecs.columns(1)).as("dstvec")), Seq("dst"))
+    withVec(layers, "dst", vecs, "dstvec")
       .select(col("layer"), col("src"), col("dst"), col("dstvec"))
       .withColumn("bkt",
         pmod(col("src"), lit(AnnNsw.ProbeBuckets)).cast("int"))
       .write.mode("overwrite").partitionBy("layer", "bkt")
       .parquet(path)
 
-  /** INCREMENTAL index maintenance (round-17 verdict #8) — insert a
-    * batch into an existing layered index instead of rebuilding, the
-    * composition of K52's incremental-ingest discipline with the
-    * insert-by-descent machinery. Per layer, top-down:
+  /** INCREMENTAL index maintenance — insert a batch into an existing
+    * layered index instead of rebuilding, the composition of K52's
+    * incremental-ingest discipline with the insert-by-descent
+    * machinery. Per layer, top-down:
     *
     *  - '''top layer''': REBUILT over the combined membership with the
     *    same bounded bucketing as the full build — the top holds 1/256
@@ -297,15 +325,14 @@ object AnnHnsw {
     * batch reproduces the base index bit-for-bit (top rebuild is
     * deterministic over identical membership; every other layer
     * carries over). Recall floor vs full rebuild in
-    * `GroundTruthSpec`. Returns (layers, entry) frames shaped exactly
-    * like the committed index. */
+    * `GroundTruthSpec`. Returns the (src, dst, layer) adjacency and the
+    * global entry. */
   def insertBatch(spark: SparkSession, baseLayers: DataFrame,
       base: DataFrame, batch: DataFrame, idCol: String,
       vecCol: String): (DataFrame, DataFrame) = {
-    val newN = batch.select(col(idCol).as("__id"), col(vecCol).as("__vec"))
+    val newN = vectors(batch, idCol, vecCol).localCheckpoint(true)
+    val all = vectors(base, idCol, vecCol).unionByName(newN)
       .localCheckpoint(true)
-    val all = base.select(col(idCol).as("__id"), col(vecCol).as("__vec"))
-      .unionByName(newN).localCheckpoint(true)
     def memAll(l: Int) = all.filter(levelOf(col("__id")) >= l)
     def memNew(l: Int) = newN.filter(levelOf(col("__id")) >= l)
 
@@ -340,41 +367,40 @@ object AnnHnsw {
       layers = layers.unionByName(adjL.withColumn("layer", lit(l)))
       upperAdj = adjL
     }
-    (layers, memAll(MaxLevel).agg(min(col("__id")).as("entry")))
+    (layers, topEntry(all))
   }
 
   /** Build-once committed form of the incremental rung: the BASE index
-    * (corpus minus the batch) is built by the normal offline path,
-    * then [[insertBatch]] folds the batch in; the result commits under
-    * its own content-keyed cache with the same layers/entry layout, so
-    * every probe API works on it unchanged. */
+    * (corpus minus the batch) is built in-process from a codebook
+    * fitted on the base corpus only, then [[insertBatch]] folds the
+    * batch in; the result commits under its own content-keyed cache
+    * with the [[ensureIndex]] layout (entries = the min id per base
+    * codebook cell over base ∪ batch), so every probe API works on it
+    * unchanged. */
   def ensureInsertedIndex(spark: SparkSession, base: DataFrame,
       batch: DataFrame, idCol: String, vecCol: String,
       sourceDir: String): String =
-    FixtureCache.ensure(spark, s"hnsw_incr_m${AnnNsw.M}_l${MaxLevel}_v3",
+    FixtureCache.ensure(spark, s"hnsw_incr_m${AnnNsw.M}_l${MaxLevel}_v4",
       sourceDir, Seq(s"$sourceDir.parquet")) { tmp =>
-      val baseDir =
-        ensureIndex(spark, base, idCol, vecCol, sourceDir, tag = "_incrbase")
-      // drop the layout's bkt/dstvec columns — insertBatch works on
-      // the logical (layer, src, dst) relation
-      val (layers, entry) = insertBatch(spark,
-        spark.read.parquet(s"$baseDir/layers")
-          .select(col("layer"), col("src"), col("dst")),
-        base, batch, idCol, vecCol)
-      val vecs = base.select(col(idCol), col(vecCol))
+      val model = AnnIvf.codebook(base, vecCol, AnnIvf.FitSampleFraction)
+      // insertBatch reads each base layer twice (new-edge descent and
+      // kept edges), so the lazy layer 0 is materialized once here
+      val baseLayers = buildLayers(AnnIvf.assign(base, idCol, vecCol, model),
+        idCol, vecCol).localCheckpoint(true)
+      val (layers, entry) =
+        insertBatch(spark, baseLayers, base, batch, idCol, vecCol)
+      val all = base.select(col(idCol), col(vecCol))
         .unionByName(batch.select(col(idCol), col(vecCol)))
-      writeLayers(layers, vecs, s"$tmp/layers")
-      entry
-        .join(vecs.select(col(idCol).as("entry"),
-          col(vecCol).as("entryvec")), Seq("entry"))
-        .write.mode("overwrite").parquet(s"$tmp/entry")
+      commit(tmp, layers, entry, AnnNsw.cellEntries(
+        AnnIvf.assign(all, idCol, vecCol, model), idCol),
+        vectors(all, idCol, vecCol))
     }
 
   /** SET-ORIENTED multi-query hierarchical search — the BATCH-probe
-    * form of [[searchTopK]] (round-16 verdict: the driver-coordinated
-    * walk is a point-serving path, one Spark job per hop — correct
-    * for a single probe, wrong for a query SET). All queries descend
-    * the hierarchy TOGETHER: each hop is one frontier×adjacency join
+    * form of [[searchTopK]] (the driver-coordinated walk is a
+    * point-serving path, one Spark job per hop — correct for a single
+    * probe, wrong for a query SET). All queries descend the hierarchy
+    * TOGETHER: each hop is one frontier×adjacency join
     * + one bounded score join + one per-query window — job count is
     * O(hops), independent of the query count, and every join's volume
     * is ≤ queries × beam × M. Per query, the expansion/selection walk
@@ -397,8 +423,8 @@ object AnnHnsw {
     val q = queries.select(col("qid"), col("qvec"))
     // scoring reads the candidate vector from the EDGE ROW (the
     // committed layout carries dstvec on every edge precisely so a
-    // probe hop never has to go back to the corpus — the r19
-    // point-probe design): one join with the query side instead of a
+    // probe hop never has to go back to the corpus — the point-probe
+    // design): one join with the query side instead of a
     // second join against the full corpus per hop. Values are
     // bit-identical (dstvec is the corpus vector, joined in at
     // writeLayers); at scale this removes the per-hop corpus shuffle —
@@ -415,14 +441,13 @@ object AnnHnsw {
       pool.withColumn("rk", row_number().over(w))
         .filter(col("rk") <= width).drop("rk")
     }
-    // checkpoint cadence (r21 examined): the pool is referenced three
-    // times per hop (frontier reselection, the visited-set anti-join,
-    // the union), so it cannot stay lazy across the whole walk. A
-    // measured every-2nd-hop cadence cut the walk's job count 78 → 70
-    // but inflated the lazy 2-hop plans' task binaries to multi-MiB
-    // (DAGScheduler large-task-binary warnings) and amplified this
-    // sandbox's stall spikes on the batch rows — reverted to the
-    // checkpoint-every-hop posture.
+    // checkpoint cadence: the pool is referenced three times per hop
+    // (frontier reselection, the visited-set anti-join, the union), so
+    // it cannot stay lazy across the whole walk. A measured
+    // every-2nd-hop cadence cut the walk's job count 78 → 70 but
+    // inflated the lazy 2-hop plans' task binaries to multi-MiB
+    // (DAGScheduler large-task-binary warnings) and amplified stall
+    // spikes on a contended host — hence a checkpoint every hop.
     def hop(pool: DataFrame, frontier: DataFrame, layer: Int): DataFrame = {
       val adjL = layers.filter(col("layer") === layer)
         .select(col("src").as("cand"), col("dst"), col("dstvec"))
@@ -432,7 +457,7 @@ object AnnHnsw {
       // the row set is exactly the old (qid, cand) distinct with the
       // vector attached — and the group keys stay scalar, no array
       // hashing in the exchange.
-      // INVARIANT (r21 advice, stated at the consumer AND producer):
+      // INVARIANT (stated at the consumer AND producer):
       // writeLayers materializes dstvec by an inner join of the edge
       // list against the corpus on dst, so one dst ⇒ one dstvec in
       // every committed layer; any future layout change that can leave
@@ -467,25 +492,28 @@ object AnnHnsw {
       .orderBy(col("qid"), col("rk"))
   }
 
-  /** In-process cache of each committed index's DRIVER-RESIDENT upper
-    * structure (r19 verdict #2): the entry point (id + vector) and the
-    * layers ≥ 1 adjacency with destination vectors. The upper layers
-    * are small by construction — the 1/16-decay level rule puts ~1/16
-    * of the corpus at level ≥ 1 with M edges each — and a point probe
-    * walked them one Spark job per hop before; resident, the whole
-    * upper descent costs ZERO jobs and only layer-0 expansion stays
-    * distributed. FixtureCache dirs are content-keyed, so keying by
-    * path can never serve a stale index. */
-  private val upperCache =
-    new java.util.concurrent.ConcurrentHashMap[String,
-      (Long, Array[Float], Map[(Int, Long), Seq[Long]],
-        Map[Long, Array[Float]])]()
+  /** The DRIVER-RESIDENT part of a committed index: the global entry
+    * (id + vector), the layers ≥ 1 adjacency with destination vectors,
+    * and the per-cell NSW entries (id + vector). The upper layers are
+    * small by construction — the 1/16-decay level rule puts ~1/16 of
+    * the corpus at level ≥ 1 with M edges each — so the whole upper
+    * descent costs ZERO jobs and only layer-0 expansion stays
+    * distributed. */
+  private[ops] final case class Resident(entry: Long,
+      entryVec: Array[Float], upperAdj: Map[(Int, Long), Seq[Long]],
+      upperVecs: Map[Long, Array[Float]],
+      entries: Seq[(Long, Array[Float])])
 
-  private[ops] def cachedUpper(spark: SparkSession, indexDir: String)
-      : (Long, Array[Float], Map[(Int, Long), Seq[Long]],
-        Map[Long, Array[Float]]) =
-    upperCache.computeIfAbsent(indexDir, _ => {
-      val e = spark.read.parquet(s"$indexDir/entry").collect().head
+  /** Collected once per committed index: FixtureCache dirs are
+    * content-keyed, so keying by path can never serve a stale index. */
+  private val residentCache =
+    new java.util.concurrent.ConcurrentHashMap[String, Resident]()
+
+  private[ops] def resident(spark: SparkSession, indexDir: String): Resident =
+    residentCache.computeIfAbsent(indexDir, _ => {
+      def idVecs(dir: String) = spark.read.parquet(dir).collect()
+        .map(r => r.getLong(0) -> r.getSeq[Float](1).toArray).toSeq
+      val (entry, entryVec) = idVecs(s"$indexDir/entry").head
       val rows = spark.read.parquet(s"$indexDir/layers")
         .filter(col("layer") >= 1)
         .select(col("layer"), col("src"), col("dst"), col("dstvec"))
@@ -494,67 +522,36 @@ object AnnHnsw {
           r.getSeq[Float](3).toArray))
       val adj = rows.groupBy(r => (r._1, r._2))
         .map { case (k, es) => k -> es.map(_._3).toSeq }
-      val vecs = rows.map(r => r._3 -> r._4).toMap
-      (e.getLong(0), e.getSeq[Float](1).toArray, adj, vecs)
+      Resident(entry, entryVec, adj, rows.map(r => r._3 -> r._4).toMap,
+        idVecs(s"$indexDir/entries"))
     })
 
   /** Greedy hierarchical search: descend the upper layers with a
-    * narrow beam, then run the wide layer-0 beam. Returns top-k
-    * (idCol, score), 6-dp rounded, fully tie-broken.
+    * narrow beam, then run the layer-0 walk ([[AnnNsw.walk]]) from
+    * everything the descent scored. Returns top-k (idCol, score), 6-dp
+    * rounded, fully tie-broken.
     *
-    * Probe job count (r19 verdict #2, pinned in `AnnNswSpec`): the
-    * upper descent runs entirely on the driver-resident structure
-    * ([[cachedUpper]] — 0 jobs warm), each layer-0 hop is ONE pruned
-    * read of the beam's bucket directories (the rows carry dstvec, so
-    * scoring is the driver-side [[AnnLsh.cosineDriver]] mirror — no
-    * corpus-lookup job), and the returned frame's own collect is the
-    * only other job: a warm probe issues ≤ 1 + layer-0 hops jobs. */
+    * Probe job count (pinned in `AnnNswSpec`): the upper descent runs
+    * entirely on the driver-resident structure ([[resident]] — 0 jobs
+    * warm), each layer-0 hop is ONE pruned read of the beam's bucket
+    * directories, and the returned frame's own collect is the only
+    * other job: a warm probe issues ≤ 1 + layer-0 hops jobs. */
   def searchTopK(spark: SparkSession, indexDir: String, nodes: DataFrame,
       idCol: String, vecCol: String, qVec: Seq[Float], k: Int,
       excludeId: Option[Long] = None): DataFrame = {
-    val layers = AnnNsw.cachedRead(spark, s"$indexDir/layers")
-    val qLit = array(qVec.map(lit).toIndexedSeq: _*)
-    val scoreCol = AnnLsh.cosine(col(vecCol).cast("array<double>"),
-      qLit.cast("array<double>"))
     val qArr = qVec.toArray
-    val (entry, entryVec, upperAdj, upperVecs) = cachedUpper(spark, indexDir)
-
-    def top(scored: Map[Long, Double], width: Int): Seq[Long] =
-      scored.toSeq.sortBy { case (id, s) => (-s, id) }
-        .take(width).map(_._1)
-
-    var scored: Map[Long, Double] =
-      Map(entry -> AnnLsh.cosineDriver(entryVec, qArr))
-    var beam: Seq[Long] = top(scored, UpperBeam)
+    val r = resident(spark, indexDir)
+    var scored = Map(r.entry -> AnnLsh.cosineDriver(r.entryVec, qArr))
+    var beam = AnnNsw.top(scored, UpperBeam)
     for (l <- MaxLevel to 1 by -1; _ <- 1 to UpperHops) {
       // driver-resident upper hop: zero Spark jobs
-      val expand = beam.flatMap(src => upperAdj.getOrElse((l, src), Nil))
+      val expand = beam.flatMap(src => r.upperAdj.getOrElse((l, src), Nil))
         .distinct.filterNot(scored.contains)
       scored = scored ++ expand.map(id =>
-        id -> AnnLsh.cosineDriver(upperVecs(id), qArr))
-      beam = top(scored, UpperBeam)
+        id -> AnnLsh.cosineDriver(r.upperVecs(id), qArr))
+      beam = AnnNsw.top(scored, UpperBeam)
     }
-    beam = top(scored, AnnNsw.Beam)
-    for (_ <- 1 to AnnNsw.Hops) {
-      // ONE job per layer-0 hop: layer + bucket literals prune to one
-      // layer directory's beam buckets, and the returned dstvec rows
-      // score driver-side (see writeLayers)
-      val expand = layers.filter(col("layer") === 0
-          && col("bkt").isin(beam.map(AnnNsw.bucketOf).distinct: _*)
-          && col("src").isin(beam: _*))
-        .select(col("dst"), col("dstvec"))
-        .collect()
-        .map(r => r.getLong(0) -> r.getSeq[Float](1))
-        .toMap
-        .filterNot { case (id, _) => scored.contains(id) }
-      scored = scored ++ expand.map { case (id, v) =>
-        id -> AnnLsh.cosineDriver(v.toArray, qArr) }
-      beam = top(scored, AnnNsw.Beam)
-    }
-    val answer = excludeId.fold(beam)(q => beam.filterNot(_ == q))
-    nodes.filter(col(idCol).isin(answer: _*))
-      .select(col(idCol), round(scoreCol, 6).as("score"))
-      .orderBy(col("score").desc, col(idCol))
-      .limit(k)
+    AnnNsw.walk(spark, indexDir, nodes, idCol, vecCol, qVec, k,
+      excludeId, scored)
   }
 }

@@ -64,10 +64,9 @@ object AnnIvf {
     * path. */
   def ivfTopK(df: DataFrame, idCol: String, vecCol: String,
       queryId: Long, k: Int, model: KMeansModel): DataFrame = {
-    val assigned = model.transform(df.withColumn("fv", array_to_vector(col(vecCol))))
-    val qVec = df.filter(col(idCol) === queryId)
-      .select(col(vecCol)).head().getSeq[Float](0)
-    rerank(assigned.filter(col("cell").isin(probeCells(qVec, model): _*)),
+    val qVec = AnnLsh.queryVector(df, idCol, vecCol, queryId)
+    rerank(assign(df, idCol, vecCol, model)
+        .filter(col("cell").isin(probeCells(qVec, model): _*)),
       idCol, vecCol, qVec, k, excludeId = Some(queryId))
   }
 
@@ -90,8 +89,10 @@ object AnnIvf {
       .take(probes).map(_._1).toIndexedSeq
   }
 
-  /** Exact-cosine re-rank of an (already cell-pruned) candidate frame. */
-  private def rerank(candidates: DataFrame, idCol: String, vecCol: String,
+  /** Exact-cosine re-rank of a candidate frame — the answer frame of
+    * every cosine ANN probe: (idCol, score rounded to 6 dp), best
+    * first, fully tie-broken by id, top-k. */
+  private[ops] def rerank(candidates: DataFrame, idCol: String, vecCol: String,
       qVec: Seq[Float], k: Int, excludeId: Option[Long]): DataFrame = {
     val qLit = array(qVec.map(lit).toIndexedSeq: _*)
     excludeId.fold(candidates)(q => candidates.filter(col(idCol) =!= q))
@@ -109,9 +110,15 @@ object AnnIvf {
     * one write; after this no query ever re-assigns the corpus. */
   def buildIndex(df: DataFrame, idCol: String, vecCol: String,
       model: KMeansModel, path: String): Unit =
+    assign(df, idCol, vecCol, model)
+      .write.mode("overwrite").partitionBy("cell").parquet(path)
+
+  /** Each vector's cell under `model`: (idCol, vecCol, cell) — one
+    * narrow MLlib transform. */
+  def assign(df: DataFrame, idCol: String, vecCol: String,
+      model: KMeansModel): DataFrame =
     model.transform(df.withColumn("fv", array_to_vector(col(vecCol))))
       .select(col(idCol), col(vecCol), col("cell"))
-      .write.mode("overwrite").partitionBy("cell").parquet(path)
 
   /** Online probe against a materialized index: read ONLY the `Probes`
     * partition directories (`cell IN (...)` is a partition filter —
@@ -172,4 +179,12 @@ object AnnIvf {
 
   def codebookPath(cacheDir: String): String = s"$cacheDir/codebook"
   def assignedPath(cacheDir: String): String = s"$cacheDir/assigned"
+
+  /** The committed assignment table of [[ensureIndex]] as
+    * (idCol, vecCol, cell). Read back, `cell` is an inferred partition
+    * column placed last, so the columns are selected by name. */
+  def readAssigned(spark: SparkSession, cacheDir: String, idCol: String,
+      vecCol: String): DataFrame =
+    spark.read.parquet(assignedPath(cacheDir))
+      .select(col(idCol), col(vecCol), col("cell"))
 }

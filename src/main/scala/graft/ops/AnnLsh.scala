@@ -98,8 +98,8 @@ object AnnLsh {
   def cosine(a: Column, b: Column): Column = graft.functions.CosineSim(a, b)
 
   /** Driver-side BIT-EXACT mirror of [[graft.functions.CosineSim]] for
-    * the ANN probe paths (r19 verdict #2: a probe must not pay a Spark
-    * job just to score a handful of candidates): the same left-to-right
+    * the ANN probe paths (a probe must not pay a Spark job just to
+    * score a handful of candidates): the same left-to-right
     * dot/nx/ny accumulation over float→double-widened elements and the
     * same `dot / (sqrt(nx) * sqrt(ny))` final expression, so a score
     * computed here equals the codegen'd expression double-for-double —
@@ -115,6 +115,13 @@ object AnnLsh {
     }
     dot / (math.sqrt(nx) * math.sqrt(ny))
   }
+
+  /** The vector of row `id` — the single-row bounded lookup every
+    * point probe starts from (one small job; the query vector is then a
+    * driver-side parameter). */
+  def queryVector(df: DataFrame, idCol: String, vecCol: String,
+      id: Long): Seq[Float] =
+    df.filter(col(idCol) === id).select(col(vecCol)).head().getSeq[Float](0)
 
   /** The query vector's own LSH codes, computed driver-side: it is one
     * in-memory vector, so its 32 hyperplane dots are trivial — pushing
@@ -151,8 +158,7 @@ object AnnLsh {
     * (no second aggregation pass over the data). */
   def annTopK(df: DataFrame, idCol: String, vecCol: String,
       queryId: Long, k: Int): DataFrame = {
-    val qVec = df.filter(col(idCol) === queryId)
-      .select(col(vecCol)).head().getSeq[Float](0)
+    val qVec = queryVector(df, idCol, vecCol, queryId)
     val qBuckets = probeCodes(
       queryCodes(qVec, AnnTables, AnnBits), AnnBits, AnnProbeRadius)
     val bucketHit = qBuckets.map { case (t, c) =>
@@ -210,9 +216,9 @@ object AnnLsh {
     * by ids) — the threshold-free view of the same pipeline. Unlike
     * [[nearDupPairs]] this is non-vacuous on any corpus that produces
     * LSH collisions at all, which makes it the right registered probe
-    * on a fixture with no true near-duplicates (round-4 verdict: the
-    * 0.9-threshold variant returned 0 rows on 500 random vectors and
-    * proved nothing). */
+    * on a fixture with no true near-duplicates (the 0.9-threshold
+    * variant returned 0 rows on 500 random vectors and proved
+    * nothing). */
   def topNearDupPairs(df: DataFrame, idCol: String, vecCol: String,
       n: Int): DataFrame =
     verifiedPairs(df, idCol, vecCol)

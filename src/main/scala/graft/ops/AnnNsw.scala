@@ -6,43 +6,41 @@ import org.apache.spark.sql.functions._
 /** NSW-style graph-probe approximate nearest neighbors — the
   * navigable-small-world rung of the ANN family (public: Malkov &
   * Yashunin, "Efficient and robust approximate nearest neighbor search
-  * using Hierarchical Navigable Small World graphs", 2016; this is the
-  * single-layer NSW core with a fixed-hop beam search — the probe-order
-  * idea, without the hierarchy).
+  * using Hierarchical Navigable Small World graphs", 2016). In that
+  * design layer 0 of HNSW IS the NSW graph, so this module owns the
+  * layer-0 kernel and the layer-0 search, and serves NSW from the
+  * committed [[AnnHnsw]] index instead of a second copy of the graph.
   *
-  * Offline (build once per corpus, [[ensureGraph]] via the
-  * [[FixtureCache]] commit discipline):
+  * Offline ([[buildGraph]], called by [[AnnHnsw.ensureIndex]] over the
+  * committed [[AnnIvf]] cell assignment — no k-means fit of its own):
   *  - a proximity GRAPH: per node, its top-[[M]] neighbors by exact
-  *    cosine among the candidates sharing the node's IVF cell (the
-  *    [[AnnIvf]] codebook is the candidate generator — within-cell
-  *    pairwise is the standard kNN-graph seed, and the same skew story
-  *    as [[SemDedup]]: cell-bounded, never all-pairs);
-  *  - one ENTRY POINT per cell (min id) — the small-world shortcut
-  *    set that gives the search global reach without long edges.
+  *    cosine among the candidates sharing the node's IVF cell
+  *    (within-cell pairwise is the standard kNN-graph seed, and the
+  *    same skew story as [[SemDedup]]: cell-bounded, never all-pairs);
+  *  - one ENTRY POINT per cell (min id, [[cellEntries]]) — the
+  *    small-world shortcut set that gives the search global reach
+  *    without long edges. The HNSW index commits them as `entries`.
   *
-  * Online ([[searchTopK]]): greedy BEAM search — start from the entry
-  * points, expand each beam member's adjacency list, score the new
-  * candidates by exact cosine against the query, keep the best
-  * [[Beam]], repeat [[Hops]] times, answer with the top-k of the final
-  * beam. The traversal is inherently sequential (HNSW's too — this is
-  * a point-serving query, not a scan): the driver holds only the
-  * O(Beam) frontier ids and scores per hop, and each hop costs ONE
-  * Spark job (r19 verdict #2): the adjacency rows carry their
-  * destination VECTORS ([[ensureGraph]] denormalizes dstvec at build —
-  * M×dim floats per node, the locality trade every serving-path HNSW
-  * makes so a hop is one block fetch), so a hop's single pruned
-  * `IN`-list read returns both the frontier expansion and everything
-  * needed to score it; scoring runs driver-side as the bit-exact
-  * mirror of the codegen'd [[graft.functions.CosineSim]] loop
-  * ([[AnnLsh.cosineDriver]]). Entry points (with their vectors) are
-  * collected once per committed graph and cached in-process, so a
-  * warm probe issues exactly [[Hops]] jobs plus the final answer's
-  * own collect — never a job per scoring step.
+  * Online ([[walk]]): greedy BEAM search over layer 0 — expand each
+  * beam member's adjacency list, score the new candidates by exact
+  * cosine against the query, keep the best [[Beam]], repeat [[Hops]]
+  * times. NSW ([[searchTopK]]) starts the walk from the per-cell
+  * entries; HNSW starts it from its upper-layer descent. The traversal
+  * is inherently sequential (a point-serving query, not a scan): the
+  * driver holds only the O(Beam) frontier, and each hop costs ONE
+  * Spark job — the layer-0 rows carry their destination VECTORS, so a
+  * hop's single pruned `IN`-list read returns both the frontier
+  * expansion and everything needed to score it; scoring runs
+  * driver-side as the bit-exact mirror of the codegen'd
+  * [[graft.functions.CosineSim]] loop ([[AnnLsh.cosineDriver]]). The
+  * entries live in the index's driver-resident structure
+  * ([[AnnHnsw.resident]]), so a warm probe issues exactly [[Hops]]
+  * jobs plus the final answer's own collect.
   *
   * Registered rows-only (`sim_nsw_topk`): the graph depends on the
   * seeded k-means cells — not portable SQL. Mechanics (out-degree law,
-  * planted duplicate, determinism, beam⊆scored) pinned in `AnnNswSpec`;
-  * recall vs brute force pinned in `GroundTruthSpec`.
+  * planted duplicate, determinism, layer-0 sharing) pinned in
+  * `AnnNswSpec`; recall vs brute force pinned in `GroundTruthSpec`.
   */
 object AnnNsw {
   /** Neighbors kept per node (the NSW out-degree bound). */
@@ -53,10 +51,10 @@ object AnnNsw {
     * (a convergence loop is data-dependent and unpinnable). */
   val Hops = 3
 
-  /** Adjacency directory-bucket fan-out (r18 verdict #2): the
-    * persisted graph partitions by `bkt = src mod ProbeBuckets`, so a
-    * beam-search hop's `src IN (beam)` probe prunes to the beam's own
-    * bucket DIRECTORIES instead of scanning the whole adjacency file —
+  /** Adjacency directory-bucket fan-out: the persisted graph
+    * partitions by `bkt = src mod ProbeBuckets`, so a beam-search
+    * hop's `src IN (beam)` probe prunes to the beam's own bucket
+    * DIRECTORIES instead of scanning the whole adjacency file —
     * at a 100-TB index each hop reads ~beam/ProbeBuckets of the
     * layout, not all of it. Pure id arithmetic (no hash) so the probe
     * side can compute bucket literals driver-side. */
@@ -67,13 +65,13 @@ object AnnNsw {
   def bucketOf(id: Long): Int =
     (((id % ProbeBuckets) + ProbeBuckets) % ProbeBuckets).toInt
 
-  /** Per-cell sub-bucket cap for the layer-0 kNN seed (r20 verdict #1:
-    * the one proven 100-TB scale-killer). Within-cell pairwise over the
-    * FIXED [[AnnIvf.K]]-cell codebook is quadratic in cell population —
-    * Σ(n/K)²·K pairs, ~2.5e11 scored pairs (~7 TB shuffle) at sf100 —
-    * so each seed round now splits a cell's members into
-    * ⌈n_cell / Layer0BucketCap⌉ sub-buckets by a deterministic
-    * per-round hash and goes pairwise only within (cell, bucket):
+  /** Per-cell sub-bucket cap for the layer-0 kNN seed. Within-cell
+    * pairwise over the FIXED [[AnnIvf.K]]-cell codebook is quadratic
+    * in cell population — Σ(n/K)²·K pairs, ~2.5e11 scored pairs
+    * (~7 TB shuffle) at sf100 — so each seed round splits a cell's
+    * members into ⌈n_cell / Layer0BucketCap⌉ sub-buckets by a
+    * deterministic per-round hash and goes pairwise only within
+    * (cell, bucket):
     * round volume ≤ n · Layer0BucketCap, LINEAR in the corpus.
     * [[Layer0Rounds]] independent bucketings (different hash seed)
     * restore cross-bucket reach, the [[AnnHnsw.buildTopLayer]]
@@ -117,74 +115,25 @@ object AnnNsw {
     }.reduce(_ unionByName _).distinct()
   }
 
-  /** Build the proximity graph + entry points from an IVF cell
-    * assignment. Bounded sub-cell candidate rounds
-    * ([[candidateScores]] — n·cap·rounds volume, never within-cell
-    * quadratic), one per-node top-M window, one per-cell min — all
-    * partial-agg / windowed shapes, no all-pairs anywhere. */
+  /** The proximity graph (src, dst) over an IVF cell assignment:
+    * bounded sub-cell candidate rounds ([[candidateScores]] —
+    * n·cap·rounds volume, never within-cell quadratic), then one
+    * per-node top-M window — no all-pairs anywhere. */
   def buildGraph(assigned: DataFrame, idCol: String,
-      vecCol: String): (DataFrame, DataFrame) = {
-    val scored = candidateScores(assigned, idCol, vecCol)
+      vecCol: String): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("src"))
       .orderBy(col("score").desc, col("dst"))
-    val adjacency = scored
+    candidateScores(assigned, idCol, vecCol)
       .withColumn("rk", row_number().over(w))
       .filter(col("rk") <= M)
       .select(col("src"), col("dst"))
-    val entries = assigned.groupBy(col("cell"))
-      .agg(min(col(idCol)).as("entry"))
-      .select(col("entry"))
-    (adjacency, entries)
   }
 
-  /** Build-once graph bootstrap: IVF codebook (shared discipline with
-    * [[AnnIvf]]), cell assignment, adjacency + entries committed under
-    * one [[FixtureCache]] dir keyed by the corpus content. Returns the
-    * committed dir; adjacency at `<dir>/adjacency`, entries at
-    * `<dir>/entries`. */
-  def ensureGraph(spark: SparkSession, df: DataFrame, idCol: String,
-      vecCol: String, sourceDir: String): String =
-    FixtureCache.ensure(spark, s"nsw_graph_m${M}_v3", sourceDir,
-      Seq(s"$sourceDir.parquet")) { tmp =>
-      val model = AnnIvf.codebook(df, vecCol, AnnIvf.FitSampleFraction)
-      val assigned = model.transform(df.withColumn("fv",
-        org.apache.spark.ml.functions.array_to_vector(col(vecCol))))
-        .select(col(idCol), col(vecCol), col("cell"))
-      val (adjacency, entries) = buildGraph(assigned, idCol, vecCol)
-      // src-bucketed layout: each search hop prunes to the beam's own
-      // bucket directories (see [[ProbeBuckets]]). The v3 layout
-      // DENORMALIZES the destination vector onto each edge (M×dim
-      // floats per node) so one pruned read serves a whole hop —
-      // expansion ids AND the data to score them (r19 verdict #2).
-      adjacency
-        .join(assigned.select(col(idCol).as("dst"),
-          col(vecCol).as("dstvec")), Seq("dst"))
-        .select(col("src"), col("dst"), col("dstvec"))
-        .withColumn("bkt", pmod(col("src"), lit(ProbeBuckets)).cast("int"))
-        .write.mode("overwrite").partitionBy("bkt")
-        .parquet(s"$tmp/adjacency")
-      // entries carry their vectors too: probe start-up is one tiny
-      // cached read, never a corpus lookup
-      entries
-        .join(assigned.select(col(idCol).as("entry"),
-          col(vecCol).as("entryvec")), Seq("entry"))
-        .write.mode("overwrite").parquet(s"$tmp/entries")
-    }
-
-  /** In-process cache of each committed graph's entry points (id +
-    * vector): FixtureCache dirs are content-keyed, so keying by the
-    * directory path can never serve a stale graph. */
-  private val entriesCache =
-    new java.util.concurrent.ConcurrentHashMap[String,
-      Seq[(Long, Array[Float])]]()
-
-  private[ops] def cachedEntries(spark: SparkSession,
-      graphDir: String): Seq[(Long, Array[Float])] =
-    entriesCache.computeIfAbsent(graphDir, _ =>
-      spark.read.parquet(s"$graphDir/entries")
-        .collect().map(r =>
-          r.getLong(0) -> r.getSeq[Float](1).toArray).toSeq)
+  /** One entry point per IVF cell: its min id, as `entry`. */
+  def cellEntries(assigned: DataFrame, idCol: String): DataFrame =
+    assigned.groupBy(col("cell")).agg(min(col(idCol)).as("entry"))
+      .select(col("entry"))
 
   /** Per-(session, dir) handle cache for committed parquet reads on
     * the probe path: `spark.read.parquet` on a bucketed directory
@@ -199,7 +148,7 @@ object AnnNsw {
   private[ops] def cachedRead(spark: SparkSession, dir: String): DataFrame =
     // keyed by a per-session-instance UUID (weakly held) —
     // identityHashCode could collide between a dead and a live session
-    // and serve a DataFrame bound to a stopped session (r20 advice)
+    // and serve a DataFrame bound to a stopped session
     dfCache.computeIfAbsent(
       s"${sessionToken(spark)}|$dir",
       _ => spark.read.parquet(dir))
@@ -214,34 +163,30 @@ object AnnNsw {
     sessionTokens.computeIfAbsent(spark,
       _ => java.util.UUID.randomUUID().toString)
 
-  /** Greedy beam search over a committed graph. `nodes` is the corpus
-    * (idCol, vecCol) — touched only by the returned answer frame; the
-    * walk itself reads the dstvec-carrying adjacency (one pruned job
-    * per hop) and scores driver-side. Returns the top-k as
-    * (idCol, score) with the [[AnnIvf]] 6-dp rounding, fully
-    * tie-broken. */
-  def searchTopK(spark: SparkSession, graphDir: String, nodes: DataFrame,
-      idCol: String, vecCol: String, qVec: Seq[Float], k: Int,
-      excludeId: Option[Long] = None): DataFrame = {
-    val adjacency = cachedRead(spark, s"$graphDir/adjacency")
-    val qLit = array(qVec.map(lit).toIndexedSeq: _*)
-    val scoreCol = AnnLsh.cosine(col(vecCol).cast("array<double>"),
-      qLit.cast("array<double>"))
-    val qArr = qVec.toArray
+  /** The `width` best ids of a scored set, fully tie-broken by id. */
+  private[ops] def top(scored: Map[Long, Double], width: Int): Seq[Long] =
+    scored.toSeq.sortBy { case (id, s) => (-s, id) }.take(width).map(_._1)
 
-    var scored: Map[Long, Double] = cachedEntries(spark, graphDir)
-      .map { case (id, v) => id -> AnnLsh.cosineDriver(v, qArr) }.toMap
-    var beam: Seq[Long] = scored.toSeq
-      .sortBy { case (id, s) => (-s, id) }.take(Beam).map(_._1)
+  /** The layer-0 beam walk of a committed [[AnnHnsw]] index, from the
+    * already-scored start set `start` (NSW: the per-cell entries;
+    * HNSW: everything its upper descent scored). ONE job per hop: the
+    * layer + bucket literals prune the read to one layer directory's
+    * beam buckets before the row-level src filter, and the returned
+    * rows carry the destination vectors, so the expansion scores
+    * driver-side via the bit-exact CosineSim mirror. The final beam is
+    * re-ranked BY SPARK over `nodes` (idCol, vecCol) into the
+    * [[AnnIvf.rerank]] answer: (idCol, score), 6-dp, top-k. */
+  private[ops] def walk(spark: SparkSession, indexDir: String,
+      nodes: DataFrame, idCol: String, vecCol: String, qVec: Seq[Float],
+      k: Int, excludeId: Option[Long], start: Map[Long, Double]): DataFrame = {
+    val layers = cachedRead(spark, s"$indexDir/layers")
+    val qArr = qVec.toArray
+    var scored = start
+    var beam = top(scored, Beam)
     for (_ <- 1 to Hops) {
-      // ONE job per hop: bucket literals prune the directories read to
-      // the beam's buckets before the row-level src filter, and the
-      // returned rows carry the destination vectors, so the expansion
-      // scores driver-side via the bit-exact CosineSim mirror — no
-      // second corpus-lookup job (r19 verdict #2)
-      val bkts = beam.map(bucketOf).distinct
-      val expand = adjacency
-        .filter(col("bkt").isin(bkts: _*) && col("src").isin(beam: _*))
+      val expand = layers.filter(col("layer") === 0
+          && col("bkt").isin(beam.map(bucketOf).distinct: _*)
+          && col("src").isin(beam: _*))
         .select(col("dst"), col("dstvec"))
         .collect()
         .map(r => r.getLong(0) -> r.getSeq[Float](1))
@@ -249,15 +194,20 @@ object AnnNsw {
         .filterNot { case (id, _) => scored.contains(id) }
       scored = scored ++ expand.map { case (id, v) =>
         id -> AnnLsh.cosineDriver(v.toArray, qArr) }
-      beam = scored.toSeq.sortBy { case (id, s) => (-s, id) }
-        .take(Beam).map(_._1)
+      beam = top(scored, Beam)
     }
-    val answer = excludeId.fold(beam)(q => beam.filterNot(_ == q))
-    // the final answer is computed BY SPARK over the beam ids — the
-    // driver hands back only the id list it navigated to
-    nodes.filter(col(idCol).isin(answer: _*))
-      .select(col(idCol), round(scoreCol, 6).as("score"))
-      .orderBy(col("score").desc, col(idCol))
-      .limit(k)
+    AnnIvf.rerank(nodes.filter(col(idCol).isin(beam: _*)),
+      idCol, vecCol, qVec, k, excludeId)
+  }
+
+  /** NSW search: the layer-0 walk of the [[AnnHnsw]] index at
+    * `indexDir`, started from its per-cell `entries`. */
+  def searchTopK(spark: SparkSession, indexDir: String, nodes: DataFrame,
+      idCol: String, vecCol: String, qVec: Seq[Float], k: Int,
+      excludeId: Option[Long] = None): DataFrame = {
+    val qArr = qVec.toArray
+    val start = AnnHnsw.resident(spark, indexDir).entries
+      .map { case (id, v) => id -> AnnLsh.cosineDriver(v, qArr) }.toMap
+    walk(spark, indexDir, nodes, idCol, vecCol, qVec, k, excludeId, start)
   }
 }

@@ -28,7 +28,10 @@ import org.apache.spark.sql.SparkSession
   *    deleted — they can never be read again (the fixture content that
   *    produced them is gone), so a long-lived host holds at most one
   *    committed cache per live fixture, plus abandoned staging dirs
-  *    which are reaped once older than [[TmpReapMillis]].
+  *    which are reaped once older than [[TmpReapMillis]]. Reaping
+  *    never crosses families: a renamed or version-bumped family is a
+  *    new name, so the old family's dirs are never reaped and stay
+  *    under a long-lived cache root until removed by hand.
   *
   * The dirs live under `java.io.tmpdir` (node-local scratch — the same
   * lifetime class as shuffle spill; on a cluster each node rebuilds or

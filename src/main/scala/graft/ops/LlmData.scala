@@ -73,8 +73,7 @@ object LlmData {
       .withColumn("r_lex", row_number().over(
         Window.orderBy(col("ov").desc, col("doc_id"))))
     val emb = t(spark, sfDir, "embeddings")
-    val q: Seq[Float] = emb.filter(col("vec_id") === 0)
-      .select(col("embedding")).head().getSeq[Float](0)
+    val q = AnnLsh.queryVector(emb, "vec_id", "embedding", 0L)
     val qNorm2: Double = q
       .map(f => BigDecimal.decimal(f.toDouble)
         .setScale(9, BigDecimal.RoundingMode.HALF_UP))
@@ -105,8 +104,7 @@ object LlmData {
 
   def simTopk(spark: SparkSession, sfDir: String): DataFrame = {
     val emb = t(spark, sfDir, "embeddings")
-    val q: Seq[Float] = emb.filter(col("vec_id") === 0)
-      .select(col("embedding")).head().getSeq[Float](0)
+    val q = AnnLsh.queryVector(emb, "vec_id", "embedding", 0L)
     val qNorm2: Double = q
       .map(f => BigDecimal.decimal(f.toDouble)
         .setScale(9, BigDecimal.RoundingMode.HALF_UP))
@@ -1318,6 +1316,12 @@ object LlmData {
   def pairsFrom(spark: SparkSession, dir: String): DataFrame =
     spark.read.parquet(dir)
 
+  /** Single source of truth for the pair-cache name — downstream
+    * derived caches embed it so a version bump here re-keys them too
+    * (labels derived from v2 pairs must never be served from a v1
+    * label cache). */
+  private val PairsCacheName = "pairs_v1"
+
   /** Deterministic per-fixture cache dir for [[ensurePairs]] — keyed
     * by BOTH the fixture path and the documents parquet's content
     * identity (file names/sizes/mtimes via
@@ -1325,12 +1329,6 @@ object LlmData {
     * same path gets a fresh cache instead of stale pairs. The `v1`
     * component versions the pipeline: bump it when the pair semantics
     * change so a stale cache is never served. */
-  /** Single source of truth for the pair-cache name — downstream
-    * derived caches embed it so a version bump here re-keys them too
-    * (labels derived from v2 pairs must never be served from a v1
-    * label cache). */
-  private val PairsCacheName = "pairs_v1"
-
   def pairsCacheDir(spark: SparkSession, sfDir: String): String =
     FixtureCache.cacheDir(spark.sessionState.newHadoopConf(),
       PairsCacheName, sfDir, Seq(s"$sfDir/documents.parquet"))
@@ -1470,9 +1468,7 @@ object LlmData {
     val cacheDir = AnnIvf.ensureIndex(spark, df, "vec_id", "embedding",
       s"$sfDir/embeddings")
     val model = AnnIvf.loadCodebook(AnnIvf.codebookPath(cacheDir))
-    // single-row bounded lookup of the query vector (documented pattern)
-    val qVec = df.filter(col("vec_id") === 0L)
-      .select(col("embedding")).head().getSeq[Float](0)
+    val qVec = AnnLsh.queryVector(df, "vec_id", "embedding", 0L)
     AnnIvf.probeIndex(spark, AnnIvf.assignedPath(cacheDir),
       "vec_id", "embedding", qVec, 5, model, excludeId = Some(0L))
   }
@@ -1496,9 +1492,7 @@ object LlmData {
     val dir = AnnPq.ensureIndex(spark, df, "vec_id", "embedding",
       s"$sfDir/embeddings", dim)
     val books = AnnPq.loadCodebooks(spark, s"$dir/codebook")
-    // single-row bounded lookup of the query vector (documented pattern)
-    val qVec = df.filter(col("vec_id") === 0L)
-      .select(col("embedding")).head().getSeq[Float](0)
+    val qVec = AnnLsh.queryVector(df, "vec_id", "embedding", 0L)
     AnnPq.topKFromCodes(spark.read.parquet(s"$dir/codes"),
       "vec_id", qVec, books, 5, excludeId = Some(0L))
   }
@@ -1516,9 +1510,7 @@ object LlmData {
     val dim = df.select(size(col("embedding"))).head().getInt(0)
     val (lists, books, model) = AnnPq.ensureIvfPqIndex(
       spark, df, "vec_id", "embedding", s"$sfDir/embeddings", dim)
-    // single-row bounded lookup of the query vector (documented pattern)
-    val qVec = df.filter(col("vec_id") === 0L)
-      .select(col("embedding")).head().getSeq[Float](0)
+    val qVec = AnnLsh.queryVector(df, "vec_id", "embedding", 0L)
     AnnPq.ivfPqTopK(spark, lists, "vec_id", qVec, books, model, 5,
       excludeId = Some(0L))
   }
@@ -1541,8 +1533,7 @@ object LlmData {
     val df = t(spark, sfDir, "embeddings")
     val cacheDir = AnnIvf.ensureIndex(spark, df, "vec_id", "embedding",
       s"$sfDir/embeddings")
-    val assigned = spark.read.parquet(AnnIvf.assignedPath(cacheDir))
-      .select(col("vec_id"), col("embedding"), col("cell"))
+    val assigned = AnnIvf.readAssigned(spark, cacheDir, "vec_id", "embedding")
     embeddingContaminationScreen(
       assigned.filter(col("vec_id") % 97 === 0),
       assigned.filter(col("vec_id") % 97 =!= 0), tau = 0.9)
@@ -1622,9 +1613,10 @@ object LlmData {
   /** K67: NSW graph-probe approximate nearest neighbors of vec_id=0 —
     * the navigable-small-world rung completing the ANN family's index
     * taxonomy (LSH K13 / IVF K18 / PQ K54 / IVFPQ K57 / graph HERE):
-    * a build-once proximity graph (top-[[AnnNsw.M]] cosine neighbors
-    * per node among its IVF-cell mates) plus per-cell entry points,
-    * searched by fixed-hop greedy beam ([[AnnNsw.searchTopK]] — the
+    * the proximity graph (top-[[AnnNsw.M]] cosine neighbors per node
+    * among its IVF-cell mates) is layer 0 of the shared K79 index
+    * ([[AnnHnsw.ensureIndex]]), searched by fixed-hop greedy beam from
+    * the index's per-cell entry points ([[AnnNsw.searchTopK]] — the
     * driver navigates O(beam) ids; every data touch is a pushed-down
     * point-lookup scan, and corpus vectors are read only for scored
     * candidates). Registered rows-only (the graph depends on seeded
@@ -1632,11 +1624,9 @@ object LlmData {
     * `AnnNswSpec`, recall vs brute force in `GroundTruthSpec`. */
   def simNswTopk(spark: SparkSession, sfDir: String): DataFrame = {
     val df = t(spark, sfDir, "embeddings")
-    val dir = AnnNsw.ensureGraph(spark, df, "vec_id", "embedding",
+    val dir = AnnHnsw.ensureIndex(spark, df, "vec_id", "embedding",
       s"$sfDir/embeddings")
-    // single-row bounded lookup of the query vector (documented pattern)
-    val qVec = df.filter(col("vec_id") === 0L)
-      .select(col("embedding")).head().getSeq[Float](0)
+    val qVec = AnnLsh.queryVector(df, "vec_id", "embedding", 0L)
     AnnNsw.searchTopK(spark, dir, df, "vec_id", "embedding", qVec, 5,
       excludeId = Some(0L))
   }
@@ -1648,25 +1638,25 @@ object LlmData {
     * long-range moves, so the wide layer-0 beam starts near the
     * answer instead of at arbitrary entry points — the structural
     * reason HNSW beats flat NSW as the corpus grows. Build-once
-    * layered index ([[AnnHnsw.ensureIndex]]); search descends with a
-    * narrow beam then runs the K67 layer-0 beam ([[AnnHnsw
-    * .searchTopK]]). Registered rows-only (seeded k-means cells);
+    * layered index over the shared IVF cells ([[AnnHnsw.ensureIndex]]
+    * — the same index K67 walks at layer 0); search descends with a
+    * narrow beam then runs the K67 layer-0 beam walk
+    * ([[AnnHnsw.searchTopK]]). Registered rows-only (seeded k-means cells);
     * layer/descent/determinism laws in `AnnNswSpec`, recall vs brute
     * force in `GroundTruthSpec`. */
   def simHnswTopk(spark: SparkSession, sfDir: String): DataFrame = {
     val df = t(spark, sfDir, "embeddings")
     val dir = AnnHnsw.ensureIndex(spark, df, "vec_id", "embedding",
       s"$sfDir/embeddings")
-    val qVec = df.filter(col("vec_id") === 0L)
-      .select(col("embedding")).head().getSeq[Float](0)
+    val qVec = AnnLsh.queryVector(df, "vec_id", "embedding", 0L)
     AnnHnsw.searchTopK(spark, dir, df, "vec_id", "embedding", qVec, 5,
       excludeId = Some(0L))
   }
 
   /** K87: BATCH graph-probe ANN — the set-oriented form of K79's
-    * point search (round-16 verdict: the driver-coordinated beam walk
-    * is one Spark job per hop, a point-serving path; the batch form
-    * must move ALL queries through the hierarchy together). Every
+    * point search (the driver-coordinated beam walk is one Spark job
+    * per hop, a point-serving path; the batch form must move ALL
+    * queries through the hierarchy together). Every
     * 97th vector queries the shared HNSW index at once
     * ([[AnnHnsw.searchTopKBatch]]): per hop ONE frontier×adjacency
     * join + ONE bounded score join + ONE per-query window — job count
@@ -1684,7 +1674,7 @@ object LlmData {
     AnnHnsw.searchTopKBatch(spark, dir, queries, 5)
   }
 
-  /** K89: INCREMENTAL HNSW maintenance (round-17 verdict #8) — the
+  /** K89: INCREMENTAL HNSW maintenance — the
     * production ingest shape for a vector index: a 10% batch (the K52
     * `id % 10 == 0` split) is INSERTED into the committed base-corpus
     * index ([[AnnHnsw.insertBatch]] via

@@ -141,8 +141,7 @@ object Pinned {
     val src = s"$sfDir/embeddings"
     val (_, books, model) =
       AnnPq.ensureIvfPqIndex(spark, df, "vec_id", "embedding", src, dim)
-    val qVec = df.filter(col("vec_id") === 0L)
-      .select(col("embedding")).head().getSeq[Float](0)
+    val qVec = AnnLsh.queryVector(df, "vec_id", "embedding", 0L)
     val cells = AnnIvf.probeCells(qVec, model)
     val members = spark.read
       .parquet(AnnIvf.assignedPath(AnnIvf.indexCacheDir(spark, src)))

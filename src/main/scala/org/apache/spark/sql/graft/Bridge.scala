@@ -1,6 +1,7 @@
 package org.apache.spark.sql.graft
 
 import org.apache.spark.{QueryContext, SparkContext}
+import org.apache.spark.storage.RDDInfo
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic
 import org.apache.spark.sql.errors.QueryExecutionErrors
@@ -41,4 +42,8 @@ object Bridge {
   /** `SparkContext.getActive` (`private[spark]`): the running context,
     * if any. Never creates one. */
   def activeContext: Option[SparkContext] = SparkContext.getActive
+
+  /** The operator scope name of an RDD (`RDDOperationScope` is
+    * `private[spark]`), e.g. `WholeStageCodegen (2)` or `Exchange`. */
+  def rddScopeName(r: RDDInfo): Option[String] = r.scope.map(_.name)
 }

@@ -1,9 +1,10 @@
 package graft
 
-import graft.ops.AnnNsw
+import graft.ops.{AnnHnsw, AnnIvf, AnnNsw}
 import org.apache.spark.sql.functions._
 
-/** NSW graph-probe ANN: the proximity graph obeys its out-degree
+/** NSW graph-probe ANN: NSW is layer 0 of the HNSW index (built over
+  * the committed IVF cells), the proximity graph obeys its out-degree
   * bound, the beam search finds a planted duplicate, repeated searches
   * are deterministic, and the fixture query behaves. */
 class AnnNswSpec extends SparkTestBase {
@@ -28,9 +29,9 @@ class AnnNswSpec extends SparkTestBase {
       "never self-loops") {
     val vs = randomVecs(120, 11)
     val df = vecsDf(vs.zipWithIndex.map { case (v, i) => i.toLong -> v })
-    val dir = AnnNsw.ensureGraph(spark, df, "vec_id", "embedding",
+    val dir = AnnHnsw.ensureIndex(spark, df, "vec_id", "embedding",
       tmpSource(df))
-    val adj = spark.read.parquet(s"$dir/adjacency")
+    val adj = spark.read.parquet(s"$dir/layers").filter(col("layer") === 0)
     assert(adj.filter(col("src") === col("dst")).isEmpty)
     val maxDeg = adj.groupBy(col("src")).count()
       .agg(max(col("count"))).head().getLong(0)
@@ -42,13 +43,38 @@ class AnnNswSpec extends SparkTestBase {
     assert(entries.forall(e => e >= 0 && e < 120))
   }
 
+  test("NSW is layer 0 of the HNSW index: the committed layer 0 equals " +
+      "the NSW graph over the committed IVF cells, entries are the min " +
+      "id per cell, and the IVF index is built by the HNSW build alone") {
+    val vs = randomVecs(300, 13)
+    val df = vecsDf(vs.zipWithIndex.map { case (v, i) => i.toLong -> v })
+    val src = tmpSource(df)
+    val ivfDir = AnnIvf.indexCacheDir(spark, src)
+    assert(!new java.io.File(ivfDir).exists())
+    val dir = AnnHnsw.ensureIndex(spark, df, "vec_id", "embedding", src)
+    assert(new java.io.File(ivfDir).isDirectory,
+      "the HNSW build must commit (and read) the shared IVF index")
+    def pairs(d: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
+      d.select(col("src"), col("dst")).collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSet
+    val assigned = AnnIvf.readAssigned(spark, ivfDir, "vec_id", "embedding")
+    val nsw = AnnNsw.buildGraph(assigned, "vec_id", "embedding")
+    val layer0 = spark.read.parquet(s"$dir/layers").filter(col("layer") === 0)
+    assert(pairs(layer0) == pairs(nsw) && pairs(nsw).nonEmpty)
+    val minPerCell = assigned.groupBy(col("cell"))
+      .agg(min(col("vec_id"))).collect().map(_.getLong(1)).toSet
+    val entries = spark.read.parquet(s"$dir/entries")
+      .collect().map(_.getLong(0)).toSet
+    assert(entries == minPerCell)
+  }
+
   test("a planted scaled copy of the query is hit #1 with cosine 1") {
     val q = randomVecs(1, 21).head
     val copy = q.map(_ * 1.0005f)
     val noise = randomVecs(100, 22)
     val df = vecsDf(Seq(0L -> q, 1L -> copy) ++
       noise.zipWithIndex.map { case (v, i) => (10L + i) -> v })
-    val dir = AnnNsw.ensureGraph(spark, df, "vec_id", "embedding",
+    val dir = AnnHnsw.ensureIndex(spark, df, "vec_id", "embedding",
       tmpSource(df))
     val top = AnnNsw.searchTopK(spark, dir, df, "vec_id", "embedding",
       q, 5, excludeId = Some(0L)).collect()
@@ -63,7 +89,7 @@ class AnnNswSpec extends SparkTestBase {
       "row-identical (deterministic beam)") {
     val vs = randomVecs(150, 31)
     val df = vecsDf(vs.zipWithIndex.map { case (v, i) => i.toLong -> v })
-    val dir = AnnNsw.ensureGraph(spark, df, "vec_id", "embedding",
+    val dir = AnnHnsw.ensureIndex(spark, df, "vec_id", "embedding",
       tmpSource(df))
     val q = vs.head
     val a = AnnNsw.searchTopK(spark, dir, df, "vec_id", "embedding",
@@ -84,7 +110,6 @@ class AnnNswSpec extends SparkTestBase {
   }
   test("HNSW: every layer-l edge joins two level>=l members; degrees " +
       "bounded; the entry is the top layer's min id (K79)") {
-    import graft.ops.AnnHnsw
     val vs = randomVecs(600, 31)
     val df = vecsDf(vs.zipWithIndex.map { case (v, i) => i.toLong -> v })
     val dir = AnnHnsw.ensureIndex(spark, df, "vec_id", "embedding",
@@ -108,7 +133,6 @@ class AnnNswSpec extends SparkTestBase {
 
   test("HNSW batch probe: batch(q) is row-identical to the sequential " +
       "driver walk for every query (K87)") {
-    import graft.ops.{AnnHnsw, AnnNsw}
     val vs = randomVecs(400, 53)
     val pairs = vs.zipWithIndex.map { case (v, i) => i.toLong -> v }
     val df = vecsDf(pairs)
@@ -142,7 +166,6 @@ class AnnNswSpec extends SparkTestBase {
   test("HNSW incremental insert: empty batch reproduces the base index " +
       "bit-for-bit; inserts are deterministic, bounded, and every new " +
       "node is wired in (K89)") {
-    import graft.ops.{AnnHnsw, AnnNsw}
     val vs = randomVecs(600, 71)
     val pairs = vs.zipWithIndex.map { case (v, i) => i.toLong -> v }
     val df = vecsDf(pairs)
@@ -203,24 +226,22 @@ class AnnNswSpec extends SparkTestBase {
 
   test("probe job bound: warm NSW/HNSW point probes issue <= 1 + " +
       "layer-0 hops Spark jobs (r19 verdict #2)") {
-    import graft.ops.{AnnHnsw, AnnNsw}
-    // the r19 defect: searchTopK launched one filter+collect job per
-    // beam hop per structure touched (~15 jobs per HNSW probe). The
-    // bound now: upper descent driver-resident (0 jobs warm), one
-    // pruned dstvec-carrying read per layer-0 hop, plus the returned
-    // frame's own collect.
+    // searchTopK once launched one filter+collect job per beam hop per
+    // structure touched (~15 jobs per HNSW probe). The bound now: upper
+    // descent driver-resident (0 jobs warm), one pruned
+    // dstvec-carrying read per layer-0 hop, plus the returned frame's
+    // own collect. NSW walks layer 0 of the same index.
     val vs = randomVecs(500, 97)
     val pairs = vs.zipWithIndex.map { case (v, i) => i.toLong -> v }
     val df = vecsDf(pairs)
     val src = tmpSource(df)
-    val dirN = AnnNsw.ensureGraph(spark, df, "vec_id", "embedding", src)
-    val dirH = AnnHnsw.ensureIndex(spark, df, "vec_id", "embedding", src)
+    val dir = AnnHnsw.ensureIndex(spark, df, "vec_id", "embedding", src)
     val q = vs(1)
-    def probeN(): Unit = { AnnNsw.searchTopK(spark, dirN, df, "vec_id",
+    def probeN(): Unit = { AnnNsw.searchTopK(spark, dir, df, "vec_id",
       "embedding", q, 5).collect(); () }
-    def probeH(): Unit = { AnnHnsw.searchTopK(spark, dirH, df, "vec_id",
+    def probeH(): Unit = { AnnHnsw.searchTopK(spark, dir, df, "vec_id",
       "embedding", q, 5).collect(); () }
-    probeN(); probeH() // warm: entry/upper structures go resident
+    probeN(); probeH() // warm: the index's resident structure loads
     def jobsOf(tag: String)(body: => Unit): Int = {
       spark.sparkContext.setJobGroup(tag, tag)
       try body finally spark.sparkContext.clearJobGroup()
@@ -246,7 +267,6 @@ class AnnNswSpec extends SparkTestBase {
 
   test("HNSW: a planted scaled copy of the query is hit #1 and the " +
       "search is deterministic (K79)") {
-    import graft.ops.AnnHnsw
     val q = randomVecs(1, 41).head
     val copy = q.map(_ * 1.0005f)
     val noise = randomVecs(300, 42)
@@ -285,7 +305,7 @@ class AnnNswSpec extends SparkTestBase {
       s"seed volume $cnt reached the quadratic within-cell bound — " +
         "the sub-cell bucketing is not splitting")
     // the graph built over the bounded seed still obeys its laws
-    val (adj, _) = graft.ops.AnnNsw.buildGraph(mega, "vec_id", "embedding")
+    val adj = graft.ops.AnnNsw.buildGraph(mega, "vec_id", "embedding")
     val maxDeg = adj.groupBy(col("src")).count()
       .agg(max(col("count"))).head().getLong(0)
     assert(maxDeg <= AnnNsw.M)

@@ -243,7 +243,7 @@ class GroundTruthSpec extends SparkTestBase {
     val dir = java.nio.file.Files
       .createTempDirectory("graft_nsw_gt_").toString
     planted.write.mode("overwrite").parquet(s"$dir/corpus.parquet")
-    val graph = graft.ops.AnnNsw.ensureGraph(spark, planted,
+    val graph = graft.ops.AnnHnsw.ensureIndex(spark, planted,
       "vec_id", "embedding", s"$dir/corpus")
     val top = graft.ops.AnnNsw.searchTopK(spark, graph, planted,
       "vec_id", "embedding", q, 5, excludeId = Some(0L)).collect()
