@@ -36,7 +36,9 @@ import scala.util.Try
   *    any query whose reps spread more than 2x), then the per-query map
   *    ordered by median ascending (failed queries, -1, first; the
   *    slowest last), then the headline scalars, so a head-truncated
-  *    capture keeps the total and the slow families.
+  *    capture keeps the total and the slow families. Last comes
+  *    `cold_sec`, each query's discarded first rep (in fork mode, each
+  *    child's `warmup_sec`): the cold time a fresh cache root pays.
   *  - The compact line (<200 chars) is printed LAST, after
   *    `spark.stop()`, so nothing Spark logs on shutdown can follow it.
   *    `contention_ratio` is wall clock over what a quiet host spends
@@ -49,7 +51,7 @@ object Bench {
 
   /** One query's outcome: median and min seconds when every rep passed,
     * the warm-up seconds, and the raw rep times. */
-  private case class Result(name: String, sec: Option[Double],
+  private[graft] case class Result(name: String, sec: Option[Double],
     min: Option[Double], warmSec: Double, reps: Seq[Double])
 
   private def median(xs: Seq[Double]): Double = {
@@ -169,11 +171,9 @@ object Bench {
       fork = false)(spark.stop())
   }
 
-  /** Write both artifact lines to the mirror file (the only loss-proof
-    * channel: stdout tail capture truncates the big line), print the big
-    * line, run `beforeCompact`, then print the compact line. */
-  private def emit(sfDir: String, rs: Seq[Result], reps: Int,
-      wallSec: Double, fork: Boolean)(beforeCompact: => Unit): Unit = {
+  /** The two artifact lines: (big, compact). */
+  private[graft] def artifactLines(sfDir: String, rs: Seq[Result], reps: Int,
+      wallSec: Double, fork: Boolean): (String, String) = {
     // Locale.ROOT: a comma-decimal default locale would print 1,357
     def fixed(fmt: String, x: Double) =
       new java.math.BigDecimal(fmt.formatLocal(java.util.Locale.ROOT, x))
@@ -192,7 +192,8 @@ object Bench {
         .sortBy(_._2): _*),
       "failed" -> rs.filter(_.sec.isEmpty).map(_.name),
       "value" -> total, "value_min" -> totalMin, "reps" -> reps,
-      "wall_sec" -> wallSec)
+      "wall_sec" -> wallSec,
+      "cold_sec" -> ListMap(rs.map(r => r.name -> fixed("%.3f", r.warmSec)): _*))
     val compact = Seq("metric" -> "total_compact", "unit" -> "sec") ++
       forkKey ++ Seq("value" -> total, "value_min" -> totalMin,
       "n_queries" -> rs.size, "n_failed" -> (rs.size - ok.size),
@@ -203,7 +204,15 @@ object Bench {
         if (total > 0) wallSec / (total * reps + warmupSec) else -1.0)) ++
       Seq("wall_sec" -> wallSec)
     def line(kv: Seq[(String, Any)]) = Harness.json.writeValueAsString(ListMap(kv: _*))
-    val (bigLine, compactLine) = (line(big), line(compact))
+    (line(big), line(compact))
+  }
+
+  /** Write both artifact lines to the mirror file (the only loss-proof
+    * channel: stdout tail capture truncates the big line), print the big
+    * line, run `beforeCompact`, then print the compact line. */
+  private def emit(sfDir: String, rs: Seq[Result], reps: Int,
+      wallSec: Double, fork: Boolean)(beforeCompact: => Unit): Unit = {
+    val (bigLine, compactLine) = artifactLines(sfDir, rs, reps, wallSec, fork)
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_LOCAL.json")
     try java.nio.file.Files.writeString(java.nio.file.Paths.get(outPath),
       s"$bigLine\n$compactLine\n")

@@ -1795,21 +1795,9 @@ object LlmData {
     * argmax is a single `max_by` partial-agg pass over (n_chars,
     * -doc_id) — no window, no per-cluster task. Oracle: the identical
     * recursive-CTE closure with a row_number() pick. */
-  def dedupKeepBest(spark: SparkSession, sfDir: String): DataFrame =
-    keepBestFromClusters(spark, sfDir,
-      ensureComponents(spark, sfDir)
-        .select(col("id").as("doc_id"), col("lbl").as("cluster_id")))
-
-  /** [[dedupKeepBest]] over an arbitrary pair relation. */
-  def dedupKeepBestFromPairs(spark: SparkSession, sfDir: String,
-      pairs: DataFrame): DataFrame =
-    keepBestFromClusters(spark, sfDir,
-      Components.connected(
-          pairs.select(col("doc_a"), col("doc_b")), "doc_a", "doc_b")
-        .select(col("id").as("doc_id"), col("lbl").as("cluster_id")))
-
-  private def keepBestFromClusters(spark: SparkSession, sfDir: String,
-      clusters: DataFrame): DataFrame = {
+  def dedupKeepBest(spark: SparkSession, sfDir: String): DataFrame = {
+    val clusters = ensureComponents(spark, sfDir)
+      .select(col("id").as("doc_id"), col("lbl").as("cluster_id"))
     val docs = t(spark, sfDir, "documents").select(col("doc_id"), col("n_chars"))
     docs.join(clusters, Seq("doc_id"))
       .groupBy(col("cluster_id"))
@@ -1944,18 +1932,10 @@ object LlmData {
     * clustered docs), so the left join broadcasts at scale; the final
     * aggregate is a single partial-agg pass. Oracle: the identical
     * composition over the recursive-CTE closure in DuckDB. */
-  def dedupEndToEnd(spark: SparkSession, sfDir: String): DataFrame =
-    endToEndFromClusters(spark, sfDir, dedupClusters(spark, sfDir))
-
-  /** [[dedupEndToEnd]] over an arbitrary pair relation. */
-  def dedupEndToEndFromPairs(spark: SparkSession, sfDir: String,
-      pairs: DataFrame): DataFrame =
-    endToEndFromClusters(spark, sfDir, dedupClustersFromPairs(pairs))
-
-  private def endToEndFromClusters(spark: SparkSession, sfDir: String,
-      clusters: DataFrame): DataFrame = {
+  def dedupEndToEnd(spark: SparkSession, sfDir: String): DataFrame = {
     val docs = t(spark, sfDir, "documents").select(col("doc_id"), col("n_chars"))
-    val keepFlags = clusters.select(col("doc_id"), col("is_canonical"))
+    val keepFlags = dedupClusters(spark, sfDir)
+      .select(col("doc_id"), col("is_canonical"))
     docs.join(keepFlags, Seq("doc_id"), "left")
       .withColumn("keep", coalesce(col("is_canonical"), lit(true)))
       .agg(

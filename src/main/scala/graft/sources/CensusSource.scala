@@ -4,9 +4,9 @@ import java.util.{Map => JMap}
 
 import scala.jdk.CollectionConverters._
 
-import com.fasterxml.jackson.core.{JsonFactory, JsonToken}
-import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.core.{JsonFactory, JsonParser, JsonToken}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.{NamedReference, NullOrdering, SortDirection, SortOrder, Transform}
 import org.apache.spark.sql.connector.expressions.aggregate.{Aggregation, CountStar}
@@ -41,14 +41,17 @@ import org.apache.spark.unsafe.types.UTF8String
   *    loop, SURVEY §4.1).
   *
   * The bytes behind a scan arrive through the [[CensusFetcher]]
-  * transport seam (option `fetcherClass`), fetched once per scan in each
-  * JVM and shared by the scan's partitions ([[ScanFetches]]) — the one
-  * target returns every chunk's rows. Schema inference reads only the
-  * header row of its own fetch ([[FetchPolicy.fetchHeader]]). The
-  * default reads a local JSON array-of-arrays fixture (option `path`) in
-  * the reference's wire format; a deployment plugs its HTTP client into
-  * the same seam and the planning, pushdown, partitioning, and
-  * retry/throttle contract is identical (a file target must be
+  * transport seam (option `fetcherClass`), and one streaming decoder
+  * ([[CensusSource.decode]]) turns them into `UTF8String` cells — the
+  * form a row hands Spark, so no cell is ever converted again. Schema
+  * inference decodes only the header row of its own fetch. Each scan
+  * fetches and decodes the target once per JVM, and its statistics, its
+  * planning and every partition read share that decoded response
+  * ([[ScanFetches]]) — the one target returns every chunk's rows. The
+  * default fetcher reads a local JSON array-of-arrays fixture (option
+  * `path`) in the reference's wire format; a deployment plugs its HTTP
+  * client into the same seam and the planning, pushdown, partitioning,
+  * and retry/throttle contract is identical (a file target must be
   * executor-visible, like the sink roots).
   *
   * Reference schema semantics carried over:
@@ -91,42 +94,43 @@ case class FetchPolicy(maxAttempts: Int, baseWaitMs: Long,
     maxChunksPerTrigger: Int = 0) {
   def fetcher: CensusFetcher = CensusFetcher.forName(fetcherClass)
 
-  /** One policy-governed fetch+parse of a target: throttle, then retry
-    * the (fetch → parse) unit with capped exponential backoff — each
-    * attempt re-opens the transport, exactly the reference's per-GET
-    * tenacity loop. `throttle = false` is the driver-side metadata path
-    * (partition planning; schema inference too, through [[fetchHeader]]):
-    * the R15 throttle paces DATA fetches against the upstream API, and
-    * sleeping during planning just stalls the driver (a
-    * reference-style throttleMs=10000 would sleep the driver before any
-    * task ran). Retry still applies. */
-  def fetchArrays(target: String, throttle: Boolean): Vector[Vector[String]] = {
+  /** The one policy-governed read of a target: throttle, then retry the
+    * (fetch → [[CensusSource.decode]]) unit with capped exponential
+    * backoff — each attempt re-opens the transport, exactly the
+    * reference's per-GET tenacity loop. `headerOnly` is schema
+    * inference's read: it decodes row 0 and closes the stream.
+    * `throttle = false` is the driver-side metadata path (schema
+    * inference, partition planning, statistics): the R15 throttle paces
+    * DATA fetches against the upstream API, and sleeping during planning
+    * just stalls the driver (a reference-style throttleMs=10000 would
+    * sleep the driver before any task ran). Retry still applies. A body
+    * without a header row fails as such and is not retried. */
+  def fetch(target: String, throttle: Boolean,
+      headerOnly: Boolean = false): CensusResponse = {
     if (throttle && throttleMs > 0) Thread.sleep(throttleMs)
     val f = fetcher
     Retry.withBackoff(maxAttempts, baseWaitMs, maxWaitMs)(
-      CensusSource.readArrays(f.fetch(target)))
+      CensusSource.decode(f.fetch(target), headerOnly))
+      .getOrElse(throw new IllegalArgumentException(
+        s"census source $target has no header row"))
   }
 
-  /** Row 0 of `target` — the column names — for schema inference: one
-    * unthrottled driver-side fetch under the same retry policy as
-    * [[fetchArrays]], read only up to the end of the header row, then
-    * closed ([[CensusSource.readHeader]]). `None` when the body has no
-    * header row; that is not retried. */
-  def fetchHeader(target: String): Option[Vector[String]] = {
-    val f = fetcher
-    Retry.withBackoff(maxAttempts, baseWaitMs, maxWaitMs)(
-      CensusSource.readHeader(f.fetch(target)))
-  }
-
-  /** The parsed response of `target` for the scan minted `token`: the
-    * first read of the pair in this JVM fetches and parses it under
-    * [[fetchArrays]] (throttle and retry apply to that real fetch), and
-    * every other read of the same scan waits for that parse and shares
-    * it. See [[ScanFetches]]. */
+  /** The decoded response of `target` for the scan minted `token`: the
+    * first read of the pair in this JVM fetches and decodes it under
+    * [[fetch]] (throttle and retry apply to that real fetch), and every
+    * other read of the same scan waits for that decode and shares it.
+    * See [[ScanFetches]]. */
   def fetchShared(token: String, target: String,
-      throttle: Boolean): Vector[Vector[String]] =
-    ScanFetches(token, target)(fetchArrays(target, throttle))
+      throttle: Boolean): CensusResponse =
+    ScanFetches(token, target)(fetch(target, throttle))
 }
+
+/** A decoded census response: row 0's column names and the data rows,
+  * each cell a `UTF8String` (`null` for a JSON null). A row keeps its
+  * own length, so a row shorter than the header has no cells past its
+  * end (they read NULL). */
+final class CensusResponse(val header: Vector[String],
+    val rows: Array[Array[UTF8String]])
 
 /** One fetch per scan per JVM. A scan's driver reads (header, row count)
   * and its partition reads — the chunk partitions, the catch-all and a
@@ -142,7 +146,7 @@ private[sources] object ScanFetches {
   private val MaxEntries = 16
 
   private final class Slot {
-    var parsed: java.lang.ref.SoftReference[Vector[Vector[String]]] = _
+    var decoded: java.lang.ref.SoftReference[CensusResponse] = _
   }
 
   private val slots =
@@ -153,15 +157,15 @@ private[sources] object ScanFetches {
     }
 
   def apply(token: String, target: String)(
-      fetch: => Vector[Vector[String]]): Vector[Vector[String]] = {
+      fetch: => CensusResponse): CensusResponse = {
     val slot = slots.synchronized(
       slots.computeIfAbsent((token, target), _ => new Slot))
     // the slot lock makes a concurrent read of the same scan wait for
-    // the first one's parse instead of fetching again
+    // the first one's decode instead of fetching again
     slot.synchronized {
-      Option(slot.parsed).flatMap(r => Option(r.get())).getOrElse {
+      Option(slot.decoded).flatMap(r => Option(r.get())).getOrElse {
         val all = fetch
-        slot.parsed = new java.lang.ref.SoftReference(all)
+        slot.decoded = new java.lang.ref.SoftReference(all)
         all
       }
     }
@@ -194,51 +198,73 @@ object CensusSource {
   /** The reference's 3-state chunking (`chunk_list(states, 3)`). */
   def stateChunks: Seq[Seq[String]] = stateFips.grouped(3).toSeq
 
-  private[sources] def readArrays(in: java.io.InputStream): Vector[Vector[String]] = {
-    val root = try new ObjectMapper().readTree(in) finally in.close()
-    root.elements().asScala.map { row =>
-      row.elements().asScala
-        .map(c => if (c.isNull) null else c.asText()).toVector
-    }.toVector
-  }
+  /** Spark's string order with NULL first: `UTF8String`'s binary
+    * compare, the order Spark's own sorts and its TakeOrdered merge use. */
+  private[sources] val cellOrder: Ordering[UTF8String] = (a, b) =>
+    if (a == null || b == null) (a != null).compare(b != null)
+    else a.binaryCompare(b)
 
   private val jsonFactory = new JsonFactory()
 
-  /** Row 0 of a response read with a streaming parser that stops at the
-    * end of the header row, so the rest of the body is never read or
-    * parsed. Cells read as [[readArrays]] reads them. `None` when the
-    * body is not an array whose first element is an array. */
-  private[sources] def readHeader(in: java.io.InputStream): Option[Vector[String]] =
+  /** The census body decoder: one streaming pass over the JSON
+    * array-of-arrays, each cell decoded straight to a `UTF8String`.
+    * `headerOnly` stops after row 0, so the rest of the body is never
+    * read or parsed. The stream is always closed. `None` when the body
+    * is not an array whose first element is an array (no header row); a
+    * body that ends inside the array raises (Jackson's
+    * `JsonEOFException`), so a truncated response fails its fetch. */
+  private[sources] def decode(in: java.io.InputStream,
+      headerOnly: Boolean): Option[CensusResponse] =
     try {
       val p = jsonFactory.createParser(in)
       try {
         if (p.nextToken() != JsonToken.START_ARRAY ||
             p.nextToken() != JsonToken.START_ARRAY) None
         else {
-          val header = Vector.newBuilder[String]
-          var t = p.nextToken()
-          while (t != JsonToken.END_ARRAY) {
-            // a body that ends inside the header raises here (JsonEOFException)
-            header += (t match {
-              case JsonToken.VALUE_NULL => null
-              case JsonToken.START_ARRAY | JsonToken.START_OBJECT =>
-                p.skipChildren(); "" // a container's asText()
-              case _ => p.getValueAsString
-            })
-            t = p.nextToken()
+          val header = readRow(p, JsonToken.START_ARRAY)
+            .map(c => if (c == null) null else c.toString).toVector
+          val rows = Array.newBuilder[Array[UTF8String]]
+          if (!headerOnly) {
+            var t = p.nextToken()
+            while (t != JsonToken.END_ARRAY) {
+              rows += readRow(p, t)
+              t = p.nextToken()
+            }
           }
-          Some(header.result())
+          Some(new CensusResponse(header, rows.result()))
         }
       } finally p.close()
     } finally in.close()
 
-  private def noHeaderRow(target: String) =
-    new IllegalArgumentException(s"census source $target has no header row")
+  /** The row that starts at token `start`: an array's cells, or an
+    * object's values; any other element is a row with no cells. */
+  private def readRow(p: JsonParser, start: JsonToken): Array[UTF8String] =
+    if (!start.isStructStart) Array.empty
+    else {
+      val cells = Array.newBuilder[UTF8String]
+      var t = p.nextToken()
+      while (!t.isStructEnd) {
+        if (t != JsonToken.FIELD_NAME) cells += cell(p, t)
+        t = p.nextToken()
+      }
+      cells.result()
+    }
 
-  /** Row 0 of a parsed response: the column names. */
-  private[sources] def headerRow(all: Vector[Vector[String]],
-      target: String): Vector[String] =
-    all.headOption.getOrElse(throw noHeaderRow(target))
+  /** One cell, read as a Jackson tree node's `asText` reads it: a
+    * string's text, JSON null as `null`, a number in its node's
+    * canonical form (`1e3` reads `1000.0`), `true`/`false`, and a nested
+    * array or object as the empty string. */
+  private def cell(p: JsonParser, t: JsonToken): UTF8String = t match {
+    case JsonToken.VALUE_NULL => null
+    case JsonToken.START_ARRAY | JsonToken.START_OBJECT =>
+      p.skipChildren()
+      UTF8String.EMPTY_UTF8
+    case JsonToken.VALUE_NUMBER_INT =>
+      UTF8String.fromString(p.getNumberValue.toString)
+    case JsonToken.VALUE_NUMBER_FLOAT =>
+      UTF8String.fromString(java.lang.Double.toString(p.getDoubleValue))
+    case _ => UTF8String.fromString(p.getText) // a string, true or false
+  }
 
   /** Expected-first, extras-appended, first-occurrence-deduped column
     * order (R5/R6/R18). */
@@ -251,8 +277,8 @@ object CensusSource {
       throw new IllegalArgumentException("census source requires a 'path' option"))
     val expect = Option(options.get("expect")).toSeq
       .flatMap(_.split(",").map(_.trim).filter(_.nonEmpty))
-    val header = FetchPolicy.fromProperties(options).fetchHeader(path)
-      .getOrElse(throw noHeaderRow(path))
+    val header = FetchPolicy.fromProperties(options)
+      .fetch(path, throttle = false, headerOnly = true).header
     StructType(columnOrder(expect, header)
       .map(StructField(_, StringType, nullable = true)))
   }
@@ -383,6 +409,10 @@ case class CensusStatePartition(state: String) extends InputPartition
       Array[Any](UTF8String.fromString(state)))
 }
 
+/** The batch scan. Every read it makes — statistics and planning on the
+  * driver, each partition read on an executor — goes through one shared
+  * fetch of the target ([[FetchPolicy.fetchShared]] under the scan's
+  * `token`), so the scan fetches and decodes its source once per JVM. */
 class CensusScan(required: StructType, pushed: Array[Filter], path: String,
     policy: FetchPolicy = FetchPolicy.Default,
     pushedLimit: Option[Int] = None,
@@ -390,32 +420,27 @@ class CensusScan(required: StructType, pushed: Array[Filter], path: String,
     extends Scan with Batch with SupportsRuntimeV2Filtering
     with SupportsReportStatistics with SupportsReportPartitioning {
 
+  /** Names this scan's one shared fetch ([[ScanFetches]]): every read of
+    * the scan goes through it, and no other scan does. */
+  protected val token: String = java.util.UUID.randomUUID().toString
+
+  /** The scan's shared response, read on the driver: unthrottled, like
+    * every metadata read (see [[FetchPolicy.fetch]]). */
+  private def driverResponse: CensusResponse =
+    policy.fetchShared(token, path, throttle = false)
+
   /** Reported statistics (`SupportsReportStatistics`) — without them a
     * DSv2 relation costs `defaultSizeInBytes` (effectively infinite)
     * and the planner will NEVER broadcast it: every join against the
     * census table would shuffle both sides, however small the census
-    * side actually is. Row count comes from the same driver-side
-    * fetch the header already paid (the fixture is one JSON document;
-    * a real deployment answers this from a row-count/metadata
-    * endpoint), scaled by the pushed geo predicate's state fraction;
-    * bytes = rows × the read schema's string widths. Pinned in
-    * `CensusSourceSpec`: an unhinted census⋈fact join broadcasts the
-    * census side. */
-  private lazy val fileRowCount: Long =
-    math.max(0L, driverResponse.length - 1L)
-
-  /** Names this scan's one shared fetch ([[ScanFetches]]): every read of
-    * the scan — driver planning and statistics, each partition read —
-    * goes through it, and no other scan does. */
-  protected val token: String = java.util.UUID.randomUUID().toString
-
-  /** The scan's shared response, read on the driver: unthrottled, like
-    * every metadata read (see [[FetchPolicy.fetchArrays]]). */
-  private def driverResponse: Vector[Vector[String]] =
-    policy.fetchShared(token, path, throttle = false)
-
+    * side actually is. Row count comes from the scan's shared decoded
+    * response (a real deployment answers this from a
+    * row-count/metadata endpoint), scaled by the pushed geo predicate's
+    * state fraction; bytes = rows × the read schema's string widths.
+    * Pinned in `CensusSourceSpec`: an unhinted census⋈fact join
+    * broadcasts the census side. */
   override def estimateStatistics(): Statistics = new Statistics {
-    private val total: Long = fileRowCount
+    private val total: Long = driverResponse.rows.length
     private val frac: Double = effectiveStates match {
       case Some(w) => math.min(1.0,
         w.size.toDouble / math.max(1, CensusSource.stateFips.size))
@@ -487,36 +512,21 @@ class CensusScan(required: StructType, pushed: Array[Filter], path: String,
   override def toBatch: Batch = this
 
   /** The file header, from the scan's shared fetch. */
-  private lazy val fileHeader: Vector[String] =
-    CensusSource.headerRow(driverResponse, path)
+  private lazy val fileHeader: Vector[String] = driverResponse.header
 
-  /** Partition pruning: a chunk whose states are all excluded by the
-    * pushed predicate is never planned — the reference simply does not
-    * issue that GET. A fixture without a `state` column (the
-    * single-call ZCTA shape, `test_final_zcta.py:193`) is one
-    * unchunked partition.
-    *
-    * Rows whose state is NULL or outside the 51-FIPS domain (e.g. '72'
-    * Puerto Rico) belong to no chunk; a CATCH-ALL partition serves them
-    * so an unfiltered scan returns every file row (round-5 advice:
-    * dropping them was silent data loss) and an explicit predicate on
-    * an out-of-domain state is servable. It is planned only when it can
-    * match: on unfiltered scans, and when a pushed predicate names an
-    * out-of-domain state. */
-  /** KEYED planning decision (round-17 verdict #9): when Spark's v2
-    * bucketing is on, the scan carries a STATIC in-domain geo
-    * predicate (so no catch-all partition is needed — the catch-all
-    * holds many distinct out-of-domain states and cannot honestly
-    * report one partition key), and `state` survives the projection,
-    * partitions are planned ONE PER STATE, each reporting its state as
-    * the partition key ([[CensusStatePartition]]) — Spark then treats
-    * the scan as key-grouped on `state`, and a state-clustered
-    * operator downstream (the A26 DECLINED aggregate path, state-keyed
-    * joins) runs directly on the scan output with NO post-scan
-    * exchange. Based on the STATIC pushdown only: runtime narrowing
-    * arrives after the partitioning has been reported, and changing
-    * the planned partition set under a reported key grouping is the
-    * one DSv2 inconsistency Spark cannot repair. For a real HTTP
+  /** KEYED planning: when Spark's v2 bucketing is on, the scan carries a
+    * STATIC in-domain geo predicate (so no catch-all partition is
+    * needed — the catch-all holds many distinct out-of-domain states and
+    * cannot honestly report one partition key), and `state` survives
+    * the projection, partitions are planned ONE PER STATE, each
+    * reporting its state as the partition key ([[CensusStatePartition]])
+    * — Spark then treats the scan as key-grouped on `state`, and a
+    * state-clustered operator downstream (the A26 DECLINED aggregate
+    * path, state-keyed joins) runs directly on the scan output with NO
+    * post-scan exchange. Based on the STATIC pushdown only: runtime
+    * narrowing arrives after the partitioning has been reported, and
+    * changing the planned partition set under a reported key grouping
+    * is the one DSv2 inconsistency Spark cannot repair. For a real HTTP
     * deployment per-state partitions mean per-state GETs (3× the
     * reference's 3-state chunk count) — the conf gate is that trade's
     * dial. */
@@ -546,6 +556,19 @@ class CensusScan(required: StructType, pushed: Array[Filter], path: String,
           .UnknownPartitioning(planInputPartitions().length)
     }
 
+  /** Partition pruning: a chunk whose states are all excluded by the
+    * pushed predicate is never planned — the reference simply does not
+    * issue that GET. A fixture without a `state` column (the
+    * single-call ZCTA shape, `test_final_zcta.py:193`) is one
+    * unchunked partition.
+    *
+    * Rows whose state is NULL or outside the 51-FIPS domain (e.g. '72'
+    * Puerto Rico) belong to no chunk; a CATCH-ALL partition serves them
+    * so an unfiltered scan returns every file row (dropping them would
+    * silently lose data) and an explicit predicate on an out-of-domain
+    * state is servable. It is planned only when it can match: on
+    * unfiltered scans, and when a pushed predicate names an
+    * out-of-domain state. */
   override def planInputPartitions(): Array[InputPartition] =
     if (keyedStates.isDefined)
       keyedStates.get.map(CensusStatePartition(_): InputPartition).toArray
@@ -671,56 +694,39 @@ class CensusAggScan(pushed: Array[Filter], path: String,
         nullable = false)
     }
 
+  /** The row path's reader factory over `state`, folded to counts. */
   override def createReaderFactory(): PartitionReaderFactory =
-    new CensusAggReaderFactory(path, token, effectiveStates, stateNotNull,
-      policy, nAggs)
+    new CensusAggReaderFactory(super.createReaderFactory(), nAggs)
 
   override def description(): String =
     s"CensusScan path=$path, PushedFilters: ${pushed.mkString("[", ", ", "]")}, " +
       s"PushedAggregation: [COUNT(*) GROUP BY state x$nAggs]"
 }
 
-class CensusAggReaderFactory(path: String, token: String,
-    wantedStates: Option[Set[String]], stateNotNull: Boolean,
-    policy: FetchPolicy, nAggs: Int) extends PartitionReaderFactory {
+/** Wraps the row path's reader for each partition ([[CensusReaderFactory]]
+  * over `state` alone) in the count fold, so the aggregate path can
+  * never disagree with the row path about which rows exist. */
+class CensusAggReaderFactory(rows: PartitionReaderFactory, nAggs: Int)
+    extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    partition match {
-      case p: CensusStatePartition =>
-        new CensusAggPartitionReader(path, token, Set(p.state), catchAll = false,
-          wantedStates, stateNotNull, policy, nAggs)
-      case p: CensusPartition =>
-        new CensusAggPartitionReader(path, token, p.states.toSet, p.catchAll,
-          wantedStates, stateNotNull, policy, nAggs)
-    }
+    new CensusAggPartitionReader(rows.createReader(partition), nAggs)
 }
 
-/** Folds one partition's (already filter-pushed) rows to final
-  * (state, count…) rows — delegating row selection to
-  * [[CensusPartitionReader]] so the aggregate path can never disagree
-  * with the row path about which rows exist. Group order is sorted by
-  * state (NULL group first) for a deterministic partition output. */
-class CensusAggPartitionReader(path: String, token: String, chunkStates: Set[String],
-    catchAll: Boolean, wantedStates: Option[Set[String]],
-    stateNotNull: Boolean, policy: FetchPolicy, nAggs: Int)
+/** Folds one partition's (already filter-pushed) `state` rows to final
+  * (state, count…) rows, keyed on the `UTF8String` state cell itself.
+  * Groups come out in state order (NULL group first) for a
+  * deterministic partition output. */
+class CensusAggPartitionReader(inner: PartitionReader[InternalRow], nAggs: Int)
     extends PartitionReader[InternalRow] {
 
   private val rows: Iterator[InternalRow] = {
-    val inner = new CensusPartitionReader(path, token, Seq("state"), chunkStates,
-      catchAll, wantedStates, stateNotNull, policy)
-    val counts = scala.collection.mutable.Map.empty[String, Long]
-    while (inner.next()) {
+    val counts = scala.collection.mutable.HashMap.empty[UTF8String, Long]
+    try while (inner.next()) {
       val s = inner.get().getUTF8String(0)
-      val key = if (s == null) null else s.toString
-      counts(key) = counts.getOrElse(key, 0L) + 1L
-    }
-    inner.close()
-    counts.toSeq
-      .sortBy(kv => (kv._1 != null, Option(kv._1).getOrElse(""))).iterator.map {
-      case (st, n) =>
-        InternalRow.fromSeq(
-          (if (st == null) null else UTF8String.fromString(st)) +:
-            Seq.fill(nAggs)(n: Any))
-    }
+      counts(s) = counts.getOrElse(s, 0L) + 1L
+    } finally inner.close()
+    counts.toSeq.sortBy(_._1)(CensusSource.cellOrder).iterator
+      .map { case (st, n) => InternalRow.fromSeq(st +: Seq.fill(nAggs)(n: Any)) }
   }
 
   private var current: InternalRow = _
@@ -752,14 +758,16 @@ class CensusReaderFactory(path: String, token: String, requiredCols: Seq[String]
 /** Reads the source's data rows for one state chunk (or the catch-all
   * remainder), applying the pushed geo predicate, NULL-filling
   * expected-but-absent columns (R5) and projecting to the pruned
-  * schema. The rows come from the scan's shared response
+  * schema. The rows are the scan's shared decoded response
   * ([[FetchPolicy.fetchShared]] under the scan's `token`): the first
   * read of the scan in this JVM fetches through the policy's
   * [[CensusFetcher]] seam under the R14/R15 envelope — throttle before
-  * the fetch, retry the fetch+parse with capped exponential backoff —
-  * and the scan's other reads share that parse. A production deployment
-  * plugs an HTTP GET into the same seam, same policy, same partition
-  * contract. */
+  * the fetch, retry the fetch+decode with capped exponential backoff —
+  * and the scan's other reads share that decode. The state predicate
+  * is matched against the `UTF8String` state cells, and a kept row's
+  * cells go into the output row as they are: the reader converts
+  * nothing. A production deployment plugs an HTTP GET into the same
+  * seam, same policy, same partition contract. */
 class CensusPartitionReader(path: String, token: String, requiredCols: Seq[String],
     chunkStates: Set[String], catchAll: Boolean,
     wantedStates: Option[Set[String]],
@@ -769,49 +777,53 @@ class CensusPartitionReader(path: String, token: String, requiredCols: Seq[Strin
     extends PartitionReader[InternalRow] {
 
   private val rows: Iterator[InternalRow] = {
-    val all = policy.fetchShared(token, path, throttle = true)
-    val fileHeader = CensusSource.headerRow(all, path)
-    val colIdx = fileHeader.zipWithIndex.toMap // first occurrence wins (R18)
-    val stateIdx = colIdx.get("state")
-    val reqIdx: Seq[Option[Int]] = requiredCols.map(colIdx.get)
-    val domain = CensusSource.stateFips.toSet
+    val response = policy.fetchShared(token, path, throttle = true)
+    val colIdx = response.header.zipWithIndex.toMap
+    // a cell past the end of a short row, or of an absent column (-1), is NULL
+    def at(r: Array[UTF8String], i: Int): UTF8String =
+      if (i >= 0 && i < r.length) r(i) else null
+    def utf8(states: Set[String]) = states.map(UTF8String.fromString)
+    val stateIdx = colIdx.getOrElse("state", -1)
+    val reqIdx = requiredCols.map(colIdx.getOrElse(_, -1)).toArray
+    val domain = utf8(CensusSource.stateFips.toSet)
+    val chunk = utf8(chunkStates)
+    val wanted = wantedStates.map(utf8)
+    val keep: Array[UTF8String] => Boolean =
+      if (stateIdx < 0) {
+        // no geo column: state is NULL-filled, so any pushed state
+        // predicate (equality/IN/IsNotNull) matches nothing
+        val all = wanted.isEmpty && !stateNotNull
+        _ => all
+      } else { r =>
+        val s = at(r, stateIdx)
+        if (catchAll) {
+          // the remainder: NULL states (unless IsNotNull was pushed) and
+          // out-of-domain states the chunks never cover
+          if (s == null) !stateNotNull && wanted.isEmpty
+          else !domain.contains(s) && wanted.forall(_.contains(s))
+        } else
+          s != null && (chunk.isEmpty || chunk.contains(s)) &&
+            wanted.forall(_.contains(s))
+      }
     /** The pushed per-partition row bound: local sort+take for TopN
       * (ascending, nulls first — the only accepted shape), plain take
       * for LIMIT, identity otherwise. Runs on the FILTERED raw rows,
       * before projection, so sort columns need not survive pruning.
       *
-      * The local sort MUST agree with the global TakeOrdered merge
-      * Spark runs on top, or a partition discards rows the merge can
-      * never recover: Spark orders strings by UTF8String binary
-      * comparison (unsigned UTF-8 bytes = code-point order), while
-      * Java's `Ordering.String` compares UTF-16 code units — the two
-      * DISAGREE on supplementary-plane characters (surrogates sort
-      * below U+E000..U+FFFF in UTF-16, above them by code point). So
-      * the local comparator is unsigned UTF-8 bytes. And if any
-      * requested sort column is absent from the raw header, the bound
-      * is DECLINED (unbounded emit — the NULL-fill projection happens
-      * after this, so a local sort over a column the file lacks would
-      * keep the wrong top-N); correctness then comes from Spark's own
-      * TakeOrdered, the pushdown was only ever an optimization. */
-    val bound: Iterator[Vector[String]] => Iterator[Vector[String]] =
+      * The local sort is [[CensusSource.cellOrder]], the order of the
+      * global TakeOrdered merge Spark runs on top, so a partition never
+      * discards a row the merge would keep. If any requested sort column
+      * is absent from the raw header, the bound is DECLINED (unbounded
+      * emit — the NULL-fill projection happens after this, so a local
+      * sort over a column the file lacks would keep the wrong top-N);
+      * correctness then comes from Spark's own TakeOrdered, the pushdown
+      * was only ever an optimization. */
+    val bound: Iterator[Array[UTF8String]] => Iterator[Array[UTF8String]] =
       pushedTopN match {
         case Some((cols, n)) if cols.forall(colIdx.contains) =>
           val idxs = cols.map(colIdx)
-          val utf8Binary: Ordering[String] = (a: String, b: String) => {
-            val x = a.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-            val y = b.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-            val m = math.min(x.length, y.length)
-            var i = 0
-            var c = 0
-            while (c == 0 && i < m) {
-              c = (x(i) & 0xff) - (y(i) & 0xff)
-              i += 1
-            }
-            if (c != 0) c else x.length - y.length
-          }
-          it => it.toVector.sortBy[Iterable[Option[String]]](r => idxs.map(
-            i => Option(if (i < r.length) r(i) else null)))(
-            Ordering.Iterable(Ordering.Option(utf8Binary)))
+          it => it.toVector.sortBy(r => idxs.map(at(r, _)))(
+            Ordering.Implicits.seqOrdering(CensusSource.cellOrder))
             .take(n).iterator
         case Some(_) => identity // sort column absent from the header
         case None => pushedLimit match {
@@ -819,31 +831,8 @@ class CensusPartitionReader(path: String, token: String, requiredCols: Seq[Strin
           case None => identity
         }
       }
-    bound(all.iterator.drop(1)
-      .filter { r =>
-        stateIdx match {
-          // no geo column: state is NULL-filled, so any pushed state
-          // predicate (equality/IN/IsNotNull) matches nothing
-          case None => wantedStates.isEmpty && !stateNotNull
-          case Some(i) =>
-            val s = r(i)
-            if (catchAll) {
-              // the remainder: NULL states (unless IsNotNull was
-              // pushed) and out-of-domain states the chunks never cover
-              if (s == null) !stateNotNull && wantedStates.isEmpty
-              else !domain.contains(s) && wantedStates.forall(_.contains(s))
-            } else
-              s != null &&
-                (chunkStates.isEmpty || chunkStates.contains(s)) &&
-                wantedStates.forall(_.contains(s))
-        }
-      })
-      .map { r =>
-        InternalRow.fromSeq(reqIdx.map {
-          case Some(i) if i < r.length && r(i) != null => UTF8String.fromString(r(i))
-          case _ => null // expected-but-absent column: NULL fill (R5)
-        })
-      }
+    bound(response.rows.iterator.filter(keep))
+      .map(r => new GenericInternalRow(reqIdx.map(i => at(r, i): Any)))
   }
 
   private var current: InternalRow = _

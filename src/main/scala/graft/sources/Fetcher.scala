@@ -2,7 +2,7 @@ package graft.sources
 
 import java.io.InputStream
 
-/** The transport seam of the census source (round-5 verdict task 4).
+/** The transport seam of the census source.
   *
   * The reference's chunk fetch is an HTTP GET
   * (`/root/reference/Test_census_tract.py:143-176`); the offline
@@ -13,13 +13,14 @@ import java.io.InputStream
   * exceptions here and are retried under the R14/R15 policy without the
   * reader knowing the transport.
   *
-  * Schema inference fetches a target once and reads only its header
-  * row before closing the stream ([[FetchPolicy.fetchHeader]]). Each
-  * scan then fetches it whole once in each JVM that reads the scan: the
-  * scan's first read (driver planning, or an executor's first
-  * partition) fetches and parses, and the scan's other reads in that JVM
-  * share the parse ([[ScanFetches]]). A fetcher must therefore tolerate
-  * a stream closed before its end.
+  * Every fetch goes through [[FetchPolicy.fetch]], whose one streaming
+  * decoder ([[CensusSource.decode]]) reads the body. Schema inference
+  * fetches a target once and decodes only its header row before closing
+  * the stream. Each scan then fetches it whole once in each JVM that
+  * reads the scan: the scan's first read (driver planning, or an
+  * executor's first partition) fetches and decodes, and the scan's other
+  * reads in that JVM share the decoded response ([[ScanFetches]]). A
+  * fetcher must therefore tolerate a stream closed before its end.
   *
   * Selected per scan via the `fetcherClass` option (a class name with a
   * no-arg constructor, instantiated wherever a real fetch runs — the

@@ -20,7 +20,7 @@ class AnnNswSpec extends SparkTestBase {
   }
 
   private def tmpSource(df: org.apache.spark.sql.DataFrame): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_nsw_").toString
+    val dir = SparkTestBase.tempDir("graft_nsw_")
     df.write.mode("overwrite").parquet(s"$dir/corpus.parquet")
     s"$dir/corpus"
   }

@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins [[Bench.parseChildArtifact]] — the fork-mode child-artifact
@@ -83,5 +85,19 @@ class BenchForkSpec extends AnyFunSuite {
     val (sec, secMin, _) = Bench.parseChildArtifact("value", line, exit = 0)
     assert(sec === Some(2.5))
     assert(secMin === Some(2.5))
+  }
+
+  test("cold_sec trails the big line, one first-rep time per query; " +
+      "a child artifact carrying it parses as before") {
+    val q1 = Bench.Result("q1", Some(2.5), Some(2.1), 7.5, Nil)
+    val q2 = Bench.Result("q2", None, None, 0.25, Nil)
+    val (big, _) = Bench.artifactLines("x", Seq(q1, q2), 3, 9.9, fork = false)
+    val node = Harness.json.readTree(big)
+    assert(node.fieldNames().asScala.toSeq.last == "cold_sec")
+    assert(node.get("cold_sec").get("q1").asDouble == 7.5)
+    assert(node.get("cold_sec").get("q2").asDouble == 0.25)
+    val (child, childCompact) = Bench.artifactLines("x", Seq(q1), 3, 9.9, fork = false)
+    assert(Bench.parseChildArtifact("q1", s"$child\n$childCompact\n", exit = 0) ===
+      ((Some(2.5), Some(2.1), 7.5)))
   }
 }

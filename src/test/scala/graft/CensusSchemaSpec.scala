@@ -7,7 +7,7 @@ import scala.jdk.CollectionConverters._
 import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import graft.sources.{CensusFetcher, CensusFixture, CensusSource}
+import graft.sources.{CensusFetcher, CensusFixture, CensusSource, FetchPolicy}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Test transport: counts the bytes the reader pulls through the seam
@@ -50,11 +50,12 @@ object FailOnceFetcher {
   val attempts = new AtomicInteger(0)
 }
 
-/** Census schema inference reads only the header row of one fetch
-  * ([[graft.sources.FetchPolicy.fetchHeader]]): the schema it infers is
-  * the one the whole-response parse gave, it reads a few KB of a large
-  * response, bodies without a header row still fail, and the retry
-  * policy still applies. No session needed. */
+/** The census decoder ([[graft.sources.FetchPolicy.fetch]]): its cells
+  * are the ones a whole-response tree parse gives, schema inference
+  * reads only the header row of one fetch and infers the schema that
+  * parse gave, it reads a few KB of a large response, bodies without a
+  * header row still fail, and the retry policy still applies. No
+  * session needed. */
 class CensusSchemaSpec extends AnyFunSuite {
 
   private val mapper = new ObjectMapper()
@@ -112,6 +113,33 @@ class CensusSchemaSpec extends AnyFunSuite {
     }
     assert(schemaOf(extras, "expect" -> "NAME,MISSING_VAR,state").fieldNames.toSeq ==
       Seq("NAME", "MISSING_VAR", "state", "EXTRA_COL"))
+  }
+
+  /** Every row of a body as a tree parse reads it: each element's
+    * `asText`, a JSON null as `null`. */
+  private def treeRows(path: String): Seq[Seq[String]] =
+    mapper.readTree(new java.io.File(path)).elements().asScala.map(
+      _.elements().asScala.map(c => if (c.isNull) null else c.asText()).toSeq).toSeq
+
+  private def decodedRows(path: String): Seq[Seq[String]] = {
+    val r = FetchPolicy.Default.fetch(path, throttle = false)
+    r.header +: r.rows.toSeq.map(_.toSeq.map(c => if (c == null) null else c.toString))
+  }
+
+  test("the decoder's cells equal a tree parse's, cell for cell") {
+    val clef = "\uD834\uDD1E" // U+1D11E, outside the BMP
+    val edge = writeBody(Seq(
+      """["NAME", "state", "n", "x"]""",
+      """["null", null, 12, true]""",
+      """["escaped \"q\" \\ \t \u00e9", "06", -1.5e3, false]""",
+      s"""["$clef \u00fcber", "72", {"k": [1, 2]}, [3, [4, {}]]]""",
+      """["", "36", 12345678901234567890, 0.1]""",
+      """["exp", "01", 1E-7, -0]""",
+      """["short"]""", "[]", """{"a": "obj", "b": null}""", "7",
+      """["big", "02", 9223372036854775807, 1.0]""").mkString("[", ",\n", "]"))
+    for (p <- Seq(CensusFixture.path, edge))
+      assert(decodedRows(p) == treeRows(p), p)
+    assert(decodedRows(edge)(3).head == s"$clef \u00fcber")
   }
 
   test("inference of a 600 KB response reads well under 64 KB, once, and closes it") {

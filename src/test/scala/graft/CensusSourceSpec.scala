@@ -321,13 +321,86 @@ class CensusSourceSpec extends SparkTestBase {
       intercept[RuntimeException](policy.fetchShared(token, CensusFixture.path, throttle = false))
     val first = policy.fetchShared(token, CensusFixture.path, throttle = false)
     assert(FlakyFetcher.attempts.get() == 3, "each failed read must fetch again")
-    assert(first.length == 1 + 2 * CensusSource.stateFips.size)
+    assert(first.header == CensusFixture.Expect)
+    assert(first.rows.length == 2 * CensusSource.stateFips.size)
     assert(policy.fetchShared(token, CensusFixture.path, throttle = false) eq first)
     assert(FlakyFetcher.attempts.get() == 3, "a kept parse is shared without a fetch")
     // another scan's token never sees it
     policy.fetchShared(java.util.UUID.randomUUID().toString, CensusFixture.path,
       throttle = false)
     assert(FlakyFetcher.attempts.get() == 4)
+  }
+
+  test("degenerate response: a header-only body scans 0 rows; planning " +
+      "and statistics do not throw") {
+    val path = writeFixture(Seq(Seq("NAME", "state", "tract")))
+    val df = read(expect = Seq("NAME", "state"), path = path)
+    assert(df.columns.toSeq == Seq("NAME", "state", "tract"))
+    assert(scanOf(df).inputRDD.getNumPartitions == CensusSource.stateChunks.size + 1)
+    assert(df.queryExecution.optimizedPlan.stats.rowCount.exists(_ >= 0))
+    assert(df.collect().isEmpty)
+    assert(df.filter(col("state") === "06").count() == 0)
+    assert(df.groupBy("state").count().collect().isEmpty)
+  }
+
+  test("degenerate response: cells past the end of a short data row read NULL") {
+    val path = writeFixture(Seq(
+      Seq("NAME", "state", "tract"),
+      Seq("Tract A", "06", "000100"),
+      Seq("Tract B", "36"),
+      Seq("Tract C")))
+    val byName = read(expect = Seq("NAME", "state", "tract"), path = path)
+      .collect().map(r => r.getString(0) -> r).toMap
+    assert(byName.keySet == Set("Tract A", "Tract B", "Tract C"))
+    assert(byName("Tract A").getString(2) == "000100")
+    assert(byName("Tract B").getString(1) == "36" && byName("Tract B").isNullAt(2))
+    assert(byName("Tract C").isNullAt(1) && byName("Tract C").isNullAt(2))
+  }
+
+  test("degenerate response: a JSON-null state is served by the catch-all only") {
+    val path = writeFixture(Seq(
+      Seq("NAME", "state"),
+      Seq("Tract A", "06"),
+      Seq("No Geo", null)))
+    val catchAll = CensusSource.stateChunks.size // the last partition
+    val served = read(expect = Seq("NAME", "state"), path = path)
+      .select(col("NAME"), spark_partition_id().as("pid")).collect()
+      .map(r => r.getString(0) -> r.getInt(1)).toSeq
+    assert(served.count(_._1 == "No Geo") == 1, served)
+    assert(served.toMap.apply("No Geo") == catchAll)
+    assert(served.toMap.apply("Tract A") != catchAll)
+  }
+
+  test("degenerate response: a body truncated mid-data-row fails after " +
+      "maxAttempts fetches and is never memoized") {
+    import graft.sources.FetchPolicy
+    val path = java.nio.file.Files.createTempFile("census_src_spec_", ".json")
+    java.nio.file.Files.writeString(path,
+      """[["NAME","state"],["Tract A","06"],["Tract B","3""")
+    path.toFile.deleteOnExit()
+    CountingFetcher.attempts.set(0)
+    val df = spark.read.format("graft.sources.CensusSource")
+      .option("path", path.toString)
+      .option("fetcherClass", classOf[CountingFetcher].getName)
+      .option("maxAttempts", "3")
+      .option("retryBaseWaitMs", "1")
+      .load()
+    assert(df.columns.toSeq == Seq("NAME", "state"), "the header is whole")
+    assert(CountingFetcher.attempts.get() == 1)
+    intercept[Exception](df.collect())
+    assert(CountingFetcher.attempts.get() == 1 + 3,
+      s"the scan must fail after exactly 3 fetches, saw ${CountingFetcher.attempts.get() - 1}")
+    val policy = FetchPolicy.Default.copy(maxAttempts = 3, baseWaitMs = 1,
+      fetcherClass = classOf[CountingFetcher].getName)
+    val token = java.util.UUID.randomUUID().toString
+    CountingFetcher.attempts.set(0)
+    for (i <- 1 to 2) {
+      val e = intercept[RuntimeException](
+        policy.fetchShared(token, path.toString, throttle = false))
+      assert(e.getMessage == "census fetch failed after 3 attempts")
+      assert(e.getCause.isInstanceOf[com.fasterxml.jackson.core.JsonProcessingException])
+      assert(CountingFetcher.attempts.get() == 3 * i, "a failed decode is never kept")
+    }
   }
 
   test("CensusUrl builds the reference's exact request URLs (R1)") {

@@ -240,8 +240,7 @@ class GroundTruthSpec extends SparkTestBase {
         .select(lit(999999L).as("vec_id"),
           transform(col("embedding"),
             x => (x * lit(1.0005f)).cast("float")).as("embedding")))
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_nsw_gt_").toString
+    val dir = SparkTestBase.tempDir("graft_nsw_gt_")
     planted.write.mode("overwrite").parquet(s"$dir/corpus.parquet")
     val graph = graft.ops.AnnHnsw.ensureIndex(spark, planted,
       "vec_id", "embedding", s"$dir/corpus")

@@ -2,12 +2,12 @@ package graft
 
 import graft.ops.LlmData
 
-/** Shared pair-set materialization (round-8 verdict task 3): the
-  * production dedup chain computes the K6 pair relation once, persists
-  * it, and serves every composition from the store. Each `*FromPairs`
-  * variant must be row-identical to its self-contained registered
-  * query, and the amortized chain must not silently diverge from the
-  * per-query plans the oracle checks. */
+/** Shared pair-set materialization: the production dedup chain
+  * computes the K6 pair relation once, persists it, and serves every
+  * composition from the store. Each `*FromPairs` variant must be
+  * row-identical to its self-contained registered query, and the
+  * amortized chain must not silently diverge from the per-query plans
+  * the oracle checks. */
 class MaterializedPairsSpec extends SparkTestBase {
 
   private lazy val pairsDir = {
@@ -32,22 +32,10 @@ class MaterializedPairsSpec extends SparkTestBase {
     assert(shared == rows(SparkEntry.queries("dedup_clusters")(spark, sfDir)))
   }
 
-  test("dedup_keep_best from the store equals the self-contained query") {
-    val shared = rows(LlmData.dedupKeepBestFromPairs(spark, sfDir,
-      LlmData.pairsFrom(spark, pairsDir)))
-    assert(shared == rows(SparkEntry.queries("dedup_keep_best")(spark, sfDir)))
-  }
-
   test("dedup_source_overlap from the store equals the self-contained query") {
     val shared = rows(LlmData.dedupSourceOverlapFromPairs(spark, sfDir,
       LlmData.pairsFrom(spark, pairsDir)))
     assert(shared == rows(SparkEntry.queries("dedup_source_overlap")(spark, sfDir)))
-  }
-
-  test("dedup_end_to_end from the store equals the self-contained query") {
-    val shared = rows(LlmData.dedupEndToEndFromPairs(spark, sfDir,
-      LlmData.pairsFrom(spark, pairsDir)))
-    assert(shared == rows(SparkEntry.queries("dedup_end_to_end")(spark, sfDir)))
   }
 
   test("dedup_containment serves the cache row-identically to the inline relation") {
@@ -112,21 +100,17 @@ class MaterializedPairsSpec extends SparkTestBase {
     }
     val (_, selfContained) = time {
       SparkEntry.queries("dedup_clusters")(spark, sfDir).count()
-      SparkEntry.queries("dedup_keep_best")(spark, sfDir).count()
-      SparkEntry.queries("dedup_end_to_end")(spark, sfDir).count()
       SparkEntry.queries("dedup_source_overlap")(spark, sfDir).count()
     }
     val (_, shared) = time {
       val p = LlmData.pairsFrom(spark, pairsDir)
       LlmData.dedupClustersFromPairs(p).count()
-      LlmData.dedupKeepBestFromPairs(spark, sfDir, p).count()
-      LlmData.dedupEndToEndFromPairs(spark, sfDir, p).count()
       LlmData.dedupSourceOverlapFromPairs(spark, sfDir, p).count()
     }
     // no assertion on wall clock (fixture-scale noise) — recorded for
     // the bench notes; the structural claim is covered by the equality
     // tests above
-    info(f"self-contained 4-query chain: $selfContained%.2f s; " +
+    info(f"self-contained 2-query chain: $selfContained%.2f s; " +
       f"shared-pairs chain: $shared%.2f s")
   }
 }

@@ -10,7 +10,7 @@ import graft.sources.SnapshotStore
 class SnapshotStoreSpec extends SparkTestBase {
 
   private def freshRoot(): String =
-    java.nio.file.Files.createTempDirectory("graft_snap_").toString + "/t"
+    SparkTestBase.tempDir("graft_snap_") + "/t"
 
   test("overwrite/append/overwrite: every version reads back exactly") {
     import spark.implicits._
@@ -393,8 +393,7 @@ class SnapshotStoreSpec extends SparkTestBase {
   test("A33: clone moves no data (one manifest write), diverges freely, " +
       "and inherits the documented source-vacuum hazard") {
     import spark.implicits._
-    val srcBase = java.nio.file.Files
-      .createTempDirectory("graft_snap_clone_").toString
+    val srcBase = SparkTestBase.tempDir("graft_snap_clone_")
     val src = s"$srcBase/src"
     val dst = s"$srcBase/dst"
     SnapshotStore.commitOverwrite(spark, src,
@@ -499,7 +498,7 @@ class SnapshotStoreSpec extends SparkTestBase {
   }
   test("clustered rewrite preserves content and tightens pruning (A39)") {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("snap_zc_").toString
+    val root = SparkTestBase.tempDir("snap_zc_")
     // two appends, each spanning the WHOLE key range: every band read
     // must open both dirs before the rewrite
     val a = (1L to 400L by 2).map(k => (k, s"r$k")).toDF("k", "p")
@@ -532,7 +531,7 @@ class SnapshotStoreSpec extends SparkTestBase {
   test("two-key clustered rewrite prunes on EITHER recorded column " +
       "(A44 multi-column zone maps)") {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("snap_mz_").toString
+    val root = SparkTestBase.tempDir("snap_mz_")
     // k and w are independent, so a Morton interleave spreads both:
     // a narrow band on either column must skip some rewritten dirs
     val rows = (1L to 1024L).map(k => (k, (k * 2654435761L) % 1024L, s"r$k"))
@@ -569,7 +568,7 @@ class SnapshotStoreSpec extends SparkTestBase {
 
   test("checked append commits clean batches and rejects atomically (A40)") {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("snap_ck_").toString
+    val root = SparkTestBase.tempDir("snap_ck_")
     val checks = Seq(
       "positive" -> (col("x") > 0L),
       "named" -> col("nm").isNotNull)
@@ -594,7 +593,7 @@ class SnapshotStoreSpec extends SparkTestBase {
   test("vacuum after a clustered rewrite keeps the live nested dirs " +
       "(A39 x vacuum regression)") {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("snap_zv_").toString
+    val root = SparkTestBase.tempDir("snap_zv_")
     SnapshotStore.commitOverwrite(spark, root,
       (1L to 100L).map(k => (k, s"r$k")).toDF("k", "p"), Some("k"))
     SnapshotStore.commitAppend(spark, root,
@@ -713,8 +712,7 @@ class SnapshotStoreSpec extends SparkTestBase {
 
   test("A45: restore re-commits the target snapshot; history stays readable") {
     import spark.implicits._
-    val root = java.nio.file.Files
-      .createTempDirectory("snapshot_restore_spec_").toString
+    val root = SparkTestBase.tempDir("snapshot_restore_spec_")
     val base = (1 to 40).map(i => (i.toLong, s"r$i")).toDF("k", "p")
     SnapshotStore.commitOverwrite(spark, root, base.filter(col("k") <= 10))
     SnapshotStore.commitAppend(spark, root,
@@ -737,8 +735,7 @@ class SnapshotStoreSpec extends SparkTestBase {
 
   test("A47: history reports each version's manifest composition from metadata alone") {
     import spark.implicits._
-    val root = java.nio.file.Files
-      .createTempDirectory("snapshot_history_spec_").toString
+    val root = SparkTestBase.tempDir("snapshot_history_spec_")
     val df = (1L to 60L).map(i => (i, s"r$i")).toDF("k", "p")
     SnapshotStore.commitOverwrite(spark, root, df.filter(col("k") <= 20))
     SnapshotStore.commitAppend(spark, root,
@@ -760,8 +757,7 @@ class SnapshotStoreSpec extends SparkTestBase {
 
   test("A46: per-segment pruning survives a stats-spec change; stat-less dirs always open") {
     import spark.implicits._
-    val root = java.nio.file.Files
-      .createTempDirectory("snapshot_evolution_spec_").toString
+    val root = SparkTestBase.tempDir("snapshot_evolution_spec_")
     val df = (0L until 300L).map(i => (i, i % 50, s"r$i"))
       .toDF("k", "g", "p")
     // era 1: two k-range segments, stats on the ORIGINAL key

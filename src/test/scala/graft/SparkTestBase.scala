@@ -30,15 +30,22 @@ trait SparkTestBase extends AnyFunSuite {
 
 object SparkTestBase {
   /** One warehouse dir per JVM, deleted on exit. */
-  lazy val warehouseDir: String = {
-    val p = java.nio.file.Files.createTempDirectory("graft_warehouse_test_")
-    sys.addShutdownHook {
-      def del(f: java.io.File): Unit = {
-        Option(f.listFiles).foreach(_.foreach(del))
-        f.delete(): Unit
-      }
-      del(p.toFile)
+  lazy val warehouseDir: String = tempDir("graft_warehouse_test_")
+
+  private val tempDirs = new java.util.concurrent.ConcurrentLinkedQueue[java.io.File]
+
+  sys.addShutdownHook {
+    def del(f: java.io.File): Unit = {
+      Option(f.listFiles).foreach(_.foreach(del))
+      f.delete(): Unit
     }
+    tempDirs.forEach(del)
+  }
+
+  /** A fresh temp dir, deleted with its contents when the test JVM exits. */
+  def tempDir(prefix: String): String = {
+    val p = java.nio.file.Files.createTempDirectory(prefix).toFile
+    tempDirs.add(p)
     p.toString
   }
 }

@@ -23,7 +23,7 @@ class StreamingSpec extends SparkTestBase {
   private def ts(s: String): Timestamp = Timestamp.valueOf(s)
 
   private def tmpCheckpoint(): String =
-    java.nio.file.Files.createTempDirectory("graft_ckpt_").toString
+    SparkTestBase.tempDir("graft_ckpt_")
 
   private def withQuery[A](q: StreamingQuery)(body: => A): A =
     try body finally q.stop()
@@ -103,7 +103,7 @@ class StreamingSpec extends SparkTestBase {
 
   test("J26: AvailableNow backfill terminates, bounds input, resumes the delta") {
     import spark.implicits._
-    val src = java.nio.file.Files.createTempDirectory("graft_bf_src_").toString
+    val src = SparkTestBase.tempDir("graft_bf_src_")
     val ckpt = tmpCheckpoint()
     def drop(rows: (Long, Long, String)*): Unit =
       rows.toDF("event_id", "user_id", "event_type")
@@ -128,7 +128,7 @@ class StreamingSpec extends SparkTestBase {
 
   test("J28: maxFilesPerTrigger paces the backfill into per-file batches") {
     import spark.implicits._
-    val src = java.nio.file.Files.createTempDirectory("graft_bf2_src_").toString
+    val src = SparkTestBase.tempDir("graft_bf2_src_")
     def drop(rows: (Long, Long, String)*): Unit =
       rows.toDF("event_id", "user_id", "event_type")
         .coalesce(1).write.mode("append").parquet(src)
@@ -492,7 +492,7 @@ class StreamingSpec extends SparkTestBase {
     // keep full micro precision (r8 advice #1: a ms-truncated getTime
     // quantized gap_us and re-ordered same-ms events)
     val ckpt = tmpCheckpoint()
-    val out = java.nio.file.Files.createTempDirectory("graft_j11r_").toString + "/sink"
+    val out = SparkTestBase.tempDir("graft_j11r_") + "/sink"
     val in = MemoryStream[Ev]
     val writer: (org.apache.spark.sql.DataFrame, Long) => Unit =
       StreamingOps.idempotentBatchAppend(out)
@@ -538,7 +538,7 @@ class StreamingSpec extends SparkTestBase {
   test("J12: streaming CDC upsert merges change batches into the state table") {
     import spark.implicits._
     implicit val sq = spark.sqlContext
-    val state = java.nio.file.Files.createTempDirectory("graft_cdc_").toString + "/state"
+    val state = SparkTestBase.tempDir("graft_cdc_") + "/state"
     val in = MemoryStream[(Long, String, Long)] // (id, value, change_seq)
     val writer: (org.apache.spark.sql.DataFrame, Long) => Unit =
       StreamingOps.cdcUpsertBatch(state, Seq("id"), "seq")
@@ -570,8 +570,7 @@ class StreamingSpec extends SparkTestBase {
     import spark.implicits._
     implicit val sq = spark.sqlContext
     import graft.sources.SnapshotStore
-    val root = java.nio.file.Files.createTempDirectory("graft_cdcsnap_")
-      .toString + "/t"
+    val root = SparkTestBase.tempDir("graft_cdcsnap_") + "/t"
     val in = MemoryStream[(Long, String, Long)] // (id, value, change_seq)
     val writer: (org.apache.spark.sql.DataFrame, Long) => Unit =
       StreamingOps.cdcSnapshotBatch(root, Seq("id"), "seq")
@@ -606,8 +605,7 @@ class StreamingSpec extends SparkTestBase {
     import spark.implicits._
     implicit val sq = spark.sqlContext
     import graft.sources.SnapshotStore
-    val root = java.nio.file.Files.createTempDirectory("graft_cdcmor_")
-      .toString + "/t"
+    val root = SparkTestBase.tempDir("graft_cdcmor_") + "/t"
     val in = MemoryStream[(Long, String, Long)] // (id, value, change_seq)
     val writer: (org.apache.spark.sql.DataFrame, Long) => Unit =
       StreamingOps.cdcSnapshotMorBatch(root, "id", "seq")
@@ -652,7 +650,7 @@ class StreamingSpec extends SparkTestBase {
   test("J12: a crash between the swap renames is recovered on replay (state survives)") {
     import spark.implicits._
     import org.apache.hadoop.fs.Path
-    val state = java.nio.file.Files.createTempDirectory("graft_cdc_").toString + "/state"
+    val state = SparkTestBase.tempDir("graft_cdc_") + "/state"
     val writer: (org.apache.spark.sql.DataFrame, Long) => Unit =
       StreamingOps.cdcUpsertBatch(state, Seq("id"), "seq")
     writer(Seq((1L, "a", 1L)).toDF("id", "v", "seq"), 0L)
@@ -675,7 +673,7 @@ class StreamingSpec extends SparkTestBase {
   test("J12: foreign dirs sharing the __old_ prefix are ignored, not parsed") {
     import spark.implicits._
     import org.apache.hadoop.fs.Path
-    val state = java.nio.file.Files.createTempDirectory("graft_cdc_").toString + "/state"
+    val state = SparkTestBase.tempDir("graft_cdc_") + "/state"
     val fs = new Path(state)
       .getFileSystem(spark.sessionState.newHadoopConf())
     // a non-numeric dir matching the prefix (e.g. an operator's manual
@@ -695,7 +693,7 @@ class StreamingSpec extends SparkTestBase {
   test("J9: foreachBatch idempotent sink survives batch re-delivery (exactly-once)") {
     import spark.implicits._
     implicit val sq = spark.sqlContext
-    val out = java.nio.file.Files.createTempDirectory("graft_j9_").toString + "/sink"
+    val out = SparkTestBase.tempDir("graft_j9_") + "/sink"
     val in = MemoryStream[Ev]
     val writer: (org.apache.spark.sql.DataFrame, Long) => Unit =
       StreamingOps.idempotentBatchAppend(out)
@@ -734,7 +732,7 @@ class StreamingSpec extends SparkTestBase {
     // recover from the WAL, and any re-delivered batch overwrites its
     // own partition instead of appending a second copy.
     val ckpt = tmpCheckpoint()
-    val out = java.nio.file.Files.createTempDirectory("graft_rr_").toString + "/sink"
+    val out = SparkTestBase.tempDir("graft_rr_") + "/sink"
     val in = MemoryStream[Ev]
     val writer: (org.apache.spark.sql.DataFrame, Long) => Unit =
       StreamingOps.idempotentBatchAppend(out)
@@ -770,8 +768,8 @@ class StreamingSpec extends SparkTestBase {
   test("parquet file source → watermarked agg → parquet file sink equals batch") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    val srcDir = java.nio.file.Files.createTempDirectory("graft_fsrc_").toString
-    val sinkDir = java.nio.file.Files.createTempDirectory("graft_fsink_").toString
+    val srcDir = SparkTestBase.tempDir("graft_fsrc_")
+    val sinkDir = SparkTestBase.tempDir("graft_fsink_")
     // 120 events spanning 3 hours, written as parquet micro-timestamps
     val evs = (0 until 120).map(i =>
       Ev(i.toLong, new Timestamp(ts("2024-01-01 10:00:00").getTime + i * 90000L),
@@ -816,8 +814,8 @@ class StreamingSpec extends SparkTestBase {
     // never the text), and land in an idempotent per-batch sink. The
     // streamed survivors must equal the batch dedup_exact semantics
     // over the same corpus.
-    val srcDir = java.nio.file.Files.createTempDirectory("graft_csrc_").toString
-    val sinkDir = java.nio.file.Files.createTempDirectory("graft_csink_").toString + "/sink"
+    val srcDir = SparkTestBase.tempDir("graft_csrc_")
+    val sinkDir = SparkTestBase.tempDir("graft_csink_") + "/sink"
     val batch1 = Seq(
       (0L, "alpha beta gamma delta epsilon"),
       (1L, "alpha beta gamma delta epsilon"), // exact dup of 0
